@@ -193,6 +193,71 @@ def test_bucketed_window_has_no_exchange(spark, transcripts_df):
         spark.sql("DROP TABLE IF EXISTS bk_transcripts")
 
 
+def _children(node):
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _bucketed_scan_paths(node, path=()):
+    """Node-class paths from `node` down to each bucketed file scan."""
+    path = (*path, node)
+    if node.getClass().getSimpleName() == "FileSourceScanExec":
+        return [path] if node.bucketedScan() else []
+    return [p for c in _children(node) for p in _bucketed_scan_paths(c, path)]
+
+
+def _walk(node):
+    yield node
+    for c in _children(node):
+        yield from _walk(c)
+
+
+def test_full_validation_bucketed_window_has_no_exchange_or_sort(
+    spark, transcripts_df
+):
+    """On a table bucketed by conv_id and sorted by (conv_id, turn_idx,
+    ts, role), the flagship's conv_id window must read the bucketed scan
+    directly: no Exchange and no Sort between them. Losing either costs a
+    full-table shuffle or sort at scale."""
+    from typical_spark.pipeline import full_validation
+    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.transcripts import generate_conversations_pdf
+
+    try:
+        # one writer task per bucket -> one file per bucket, so the scan
+        # can report the declared sort order
+        write_bucketed(
+            transcripts_df.repartition(8, "conv_id"), "bk_flagship", ["conv_id"],
+            n_buckets=8, sort_cols=["conv_id", "turn_idx", "ts", "role"],
+        )
+        t = read_bucketed(spark, "bk_flagship")
+        conv = spark.createDataFrame(
+            generate_conversations_pdf(transcripts_df.toPandas())[["conv_id"]]
+        )
+        plan = compile_table_spec(transcript_spec())
+        out = full_validation(plan, t, conv)
+        root = out._jdf.queryExecution().executedPlan()
+        if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            root = root.executedPlan()
+        windows = [
+            n for n in _walk(root)
+            if n.getClass().getSimpleName() == "WindowExec"
+            and n.partitionSpec().size() == 1
+            and n.partitionSpec().apply(0).toString().split("#")[0] == "conv_id"
+        ]
+        assert windows, "no Window partitioned by conv_id in the plan"
+        for w in windows:
+            paths = _bucketed_scan_paths(w)
+            assert paths, "conv_id window does not read the bucketed scan"
+            for p in paths:
+                names = [n.getClass().getSimpleName() for n in p]
+                assert "ShuffleExchangeExec" not in names, names
+                assert "SortExec" not in names, names
+        out.count()  # executes
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bk_flagship")
+
+
 def test_parsed_url_computed_once_per_row(spark):
     """attach_parsed_url's Generate barrier must keep the URL parse at
     ONE evaluation per row: reading N components from an inline
