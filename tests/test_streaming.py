@@ -568,3 +568,44 @@ def test_drift_monitor_compact_state(spark, tmp_path):
               spark.read.parquet(str(twin / "verdicts")).collect()}
     assert v_main[2]["drifted"] == v_twin[2]["drifted"] is True
     assert abs(v_main[2]["ks_stat"] - v_twin[2]["ks_stat"]) < 0.02
+
+
+def test_compact_state_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):
+    """A crash after the old state moved aside but before the new state
+    moved in leaves only the aside copy. The next call restores it and
+    compacts it, and no aside copy is left over."""
+    import os
+
+    from typical_spark.streaming import drift_monitor
+    from typical_spark.streaming.drift_monitor import compact_state
+
+    state = str(tmp_path / "state")
+    rows = [
+        (b, "a", 3.0, [float(b), b + 1.0, b + 2.0], [1.0, 1.0, 1.0])
+        for b in range(3)
+    ]
+    spark.createDataFrame(rows, drift_monitor._STATE_SCHEMA).coalesce(1) \
+        .write.parquet(state)
+    before = sorted(map(str, spark.read.parquet(state).collect()))
+
+    rename = os.rename
+
+    def crash_before_move_in(src, dst):
+        if src.endswith(".compact_tmp"):
+            raise OSError("injected crash between the two renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(drift_monitor.os, "rename", crash_before_move_in)
+    with pytest.raises(OSError, match="injected crash"):
+        compact_state(spark, state, keep_last=1)
+    monkeypatch.undo()
+    assert not os.path.exists(state)
+    assert os.path.isdir(state + ".compact_old")
+
+    # the next call recovers the whole old state, then compacts it
+    assert compact_state(spark, state, keep_last=1) == 2
+    got = {r["batch_id"]: r for r in spark.read.parquet(state).collect()}
+    assert set(got) == {-1, 2} and got[-1]["n"] == 6.0
+    assert str(got[2]) == before[2]
+    assert not os.path.exists(state + ".compact_old")
+    assert not os.path.exists(state + ".compact_tmp")

@@ -16,16 +16,85 @@ inside each partition (Arrow batches, with carry between batches), and
 the O(#partitions) boundary pairs are checked in one tiny follow-up.
 Same violations, no task ever holds more than a partition's worth of one
 group (pytest asserts exact equality with the window variant).
+
+Each check is defined once per engine: `ordering_checks` builds the
+Catalyst entries (the window operator and the fused `full_validation`
+pass), and `ordering_pair_violations` is the pandas kernel (the
+skew-safe twin and the stateful streaming operator).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from typical_spark.plans.validation import violation_struct
+
+
+def ordering_checks(
+    order_col: str,
+    ts_col: str | None,
+    prev_order: str,
+    prev_ts: str | None,
+    contiguous: bool = True,
+    ts_monotonic: bool = True,
+) -> list[Column]:
+    """The turn-ordering checks as fused-array entries: one
+    `when(cond, violation_struct(...))` per check, comparing each row with
+    the previous row of its group (`prev_order` / `prev_ts`, lagged
+    columns that are NULL on a group's first row).
+
+      order_duplicate  — same order value as the previous row
+      order_gap        — order jumps by > 1 (when `contiguous`)
+      ts_out_of_order  — timestamp decreased while order increased
+                         (when `ts_col` and `ts_monotonic`)
+
+    A NULL order value or timestamp fails every predicate it enters, but
+    its row is still the next row's previous row. The window must order
+    each group by (order, ts) ascending with NULLs first; further
+    tie-break keys (the fused pass adds `role`) do not change the output,
+    because rows tied on (order, ts) lag to the same values in whatever
+    order they come. The extra key only lets the sort match a bucketed
+    table's declared sort order, so the Sort disappears from the plan.
+    """
+    o, po = F.col(order_col), F.col(prev_order)
+    d = o - po
+    checks = [
+        F.when(
+            po.isNotNull() & (d == 0),
+            violation_struct(
+                order_col, "order_duplicate", o.cast("string"),
+                F.concat(F.lit("!= prev "), po),
+            ),
+        )
+    ]
+    if contiguous:
+        checks.append(
+            F.when(
+                po.isNotNull() & (d > 1),
+                violation_struct(
+                    order_col, "order_gap", o.cast("string"),
+                    F.concat(F.lit("prev + 1 = "), po + 1),
+                ),
+            )
+        )
+    if ts_col and ts_monotonic:
+        t, pt = F.col(ts_col), F.col(prev_ts)
+        checks.append(
+            F.when(
+                pt.isNotNull() & t.isNotNull() & (t < pt) & (d > 0),
+                violation_struct(
+                    order_col, "ts_out_of_order", t.cast("string"),
+                    F.concat(F.lit(">= prev ts "), pt.cast("string")),
+                ),
+            )
+        )
+    return checks
 
 
 def ordering_violations(
@@ -36,81 +105,36 @@ def ordering_violations(
     require_contiguous: bool = True,
     require_ts_monotonic: bool = True,
 ) -> DataFrame:
-    """Violations of per-group turn ordering.
+    """Violations of per-group turn ordering (see `ordering_checks`).
 
-    Emits one row per offending row with check_id in:
-      order_duplicate  — same order value as previous row (row_number tie)
-      order_gap        — order jumps by > 1 (contiguity break)
-      order_regression — order value decreased
-      ts_out_of_order  — timestamp decreased while order increased
     Output: group_cols…, order value, check_id, observed, expected.
     """
     # ts breaks order_col ties (asc = nulls first, matching the
-    # stateful operator's python sort): without it, duplicate order
-    # values with UNEQUAL timestamps gave the next row a
-    # nondeterministic "previous", so ts_out_of_order output could
-    # change run to run
+    # stateful operator's sort): without it, duplicate order values
+    # with UNEQUAL timestamps gave the next row a nondeterministic
+    # "previous", so ts_out_of_order output could change run to run
     order_keys = [F.col(order_col).asc()] + (
         [F.col(ts_col).asc()] if ts_col else []
     )
     w = Window.partitionBy(*group_cols).orderBy(*order_keys)
-    prev_o = F.lag(order_col).over(w)
     lagged = df.select(
         *group_cols,
         F.col(order_col),
-        prev_o.alias("_prev_o"),
+        F.lag(order_col).over(w).alias("_prev_o"),
         *( [F.col(ts_col), F.lag(ts_col).over(w).alias("_prev_ts")]
            if ts_col else [] ),
     )
-    checks = []
-    d = F.col(order_col) - F.col("_prev_o")
-    checks.append(
-        F.when(
-            F.col("_prev_o").isNotNull() & (d == 0),
-            F.struct(
-                F.lit("order_duplicate").alias("check_id"),
-                F.col(order_col).cast("string").alias("observed"),
-                F.concat(F.lit("!= prev "), F.col("_prev_o")).alias("expected"),
-            ),
-        )
-    )
-    if require_contiguous:
-        checks.append(
-            F.when(
-                F.col("_prev_o").isNotNull() & (d > 1),
-                F.struct(
-                    F.lit("order_gap").alias("check_id"),
-                    F.col(order_col).cast("string").alias("observed"),
-                    F.concat(F.lit("prev + 1 = "), F.col("_prev_o") + 1).alias(
-                        "expected"
-                    ),
-                ),
-            )
-        )
-    if ts_col and require_ts_monotonic:
-        checks.append(
-            F.when(
-                F.col("_prev_ts").isNotNull()
-                & F.col(ts_col).isNotNull()
-                & (F.col(ts_col) < F.col("_prev_ts"))
-                & (d > 0),
-                F.struct(
-                    F.lit("ts_out_of_order").alias("check_id"),
-                    F.col(ts_col).cast("string").alias("observed"),
-                    F.concat(F.lit(">= prev ts "), F.col("_prev_ts").cast("string")).alias(
-                        "expected"
-                    ),
-                ),
-            )
-        )
-    arr = F.array_compact(F.array(*checks))
+    arr = F.array_compact(F.array(*ordering_checks(
+        order_col, ts_col, "_prev_o", "_prev_ts",
+        require_contiguous, require_ts_monotonic,
+    )))
     # no size() pre-filter: explode drops empty arrays itself, and a
     # filter would be pushed below the projection, evaluating the check
     # array twice per row
     return (
         lagged.withColumn("_v", arr)
         .select(*group_cols, F.col(order_col), F.explode("_v").alias("v"))
-        .select(*group_cols, F.col(order_col), "v.*")
+        .select(*group_cols, F.col(order_col), "v.check_id", "v.observed", "v.expected")
     )
 
 
@@ -125,13 +149,61 @@ def _fmt_ts(t) -> str:
     return s
 
 
+def ordering_pair_violations(
+    cur: pd.DataFrame,
+    prev: pd.DataFrame,
+    group_cols: Sequence[str],
+    order_col: str,
+    ts_col: str | None = None,
+) -> pd.DataFrame:
+    """The pandas kernel of the turn-ordering checks: row i of `cur`
+    against row i of `prev`, its previous row in (group, order, ts) order
+    (both frames share one index). A pair from different groups, or with
+    a NULL order value on either side, is not checked; otherwise the
+    predicates and the observed/expected text are exactly
+    `ordering_checks`'s. Integral columns must arrive as nullable
+    integers, not float64, so values format as '3', not '3.0'.
+
+    Returns the violating rows of `cur`, one per failed check, with
+    check_id, observed and expected appended."""
+    same = pd.Series(True, index=cur.index)
+    for g in group_cols:
+        same &= (cur[g] == prev[g]) | (cur[g].isna() & prev[g].isna())
+    po, co = prev[order_col], cur[order_col]
+    valid = same & po.notna() & co.notna()
+    d = co - po
+    checks = [
+        ("order_duplicate", d == 0,
+         lambda m: co[m].astype(str),
+         lambda m: "!= prev " + po[m].astype(str)),
+        ("order_gap", d > 1,
+         lambda m: co[m].astype(str),
+         lambda m: "prev + 1 = " + (po[m] + 1).astype(str)),
+    ]
+    if ts_col:
+        pt, ct = prev[ts_col], cur[ts_col]
+        checks.append(
+            ("ts_out_of_order", pt.notna() & ct.notna() & (ct < pt) & (d > 0),
+             lambda m: ct[m].map(_fmt_ts),
+             lambda m: ">= prev ts " + pt[m].map(_fmt_ts)))
+    # per-row Python runs only over the (sparse) violations, formatting
+    chunks = [cur.iloc[:0].assign(check_id=None, observed=None, expected=None)]
+    for check_id, cond, observed, expected in checks:
+        mask = np.asarray(pd.Series(valid & cond).fillna(False), bool)
+        if mask.any():
+            chunks.append(cur[mask].assign(
+                check_id=check_id,
+                observed=np.asarray(observed(mask), object),
+                expected=np.asarray(expected(mask), object),
+            ))
+    return pd.concat(chunks, ignore_index=True)
+
+
 def ordering_violations_skew_safe(
     df: DataFrame,
     group_cols: Sequence[str],
     order_col: str,
     ts_col: str | None = None,
-    require_contiguous: bool = True,
-    require_ts_monotonic: bool = True,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Hot-group-proof twin of ordering_violations: identical violation
@@ -141,10 +213,12 @@ def ordering_violations_skew_safe(
     (carrying the last row across batch boundaries), and the
     O(#partitions) pairs that straddle partition boundaries are checked
     in a bounded driver-side follow-up (2 summary rows per partition).
-    Ties in order_col make the 'previous row' of the NEXT element
-    ambiguous in BOTH variants (window sort is equally tie-unstable), so
-    exact-equality guarantees hold for tie-free order values; the
-    duplicate/gap/regression classes are tie-order-independent."""
+    Both use `ordering_pair_violations`. Partitions are sorted by
+    (group, order) only, so when a repeated order value carries different
+    timestamps the next row's 'previous row', and with it
+    ts_out_of_order, may differ from the window variant's; output is
+    identical when repeated order values are exact copies, and the
+    duplicate/gap classes never depend on tie order."""
     from pyspark import TaskContext
 
     gc = list(group_cols)
@@ -161,33 +235,12 @@ def ordering_violations_skew_safe(
         + ["kind string", "pid int",
            "check_id string", "observed string", "expected string"]
     )
-
-    def check_pair(prev: dict, cur: dict) -> list[tuple[str, str, str]]:
-        if any(prev[g] != cur[g] for g in gc):
-            return []
-        po, co = prev[order_col], cur[order_col]
-        if po is None or co is None:
-            return []
-        out = []
-        d = co - po
-        if d == 0:
-            out.append(("order_duplicate", str(co), f"!= prev {po}"))
-        if require_contiguous and d > 1:
-            out.append(("order_gap", str(co), f"prev + 1 = {po + 1}"))
-        if ts_col and require_ts_monotonic:
-            pt, ct = prev[ts_col], cur[ts_col]
-            if pt is not None and ct is not None and ct < pt and d > 0:
-                out.append(
-                    ("ts_out_of_order", _fmt_ts(ct), f">= prev ts {_fmt_ts(pt)}")
-                )
-        return out
-
-    def _clean(rec: dict) -> dict:
-        return {k: (None if pd.isna(v) else v) for k, v in rec.items()}
+    out_cols = [*cols, "kind", "pid", "check_id", "observed", "expected"]
 
     # Arrow->pandas converts an integral column to float64 whenever the
-    # batch contains a NULL, which would format violations as '3.0' and
-    # break byte-parity with the window variant; restore nullable ints.
+    # batch contains a NULL (and shift() widens native int64 the same
+    # way), which would format violations as '3.0' and break byte-parity
+    # with the window variant; use nullable ints throughout.
     # (Caveat: integral values beyond 2^53 in a null-containing batch
     # have already lost precision in that float hop.)
     int_cols = [
@@ -195,85 +248,33 @@ def ordering_violations_skew_safe(
         if f.dataType.simpleString() in ("tinyint", "smallint", "int", "bigint")
     ]
 
-    out_cols = [*cols, "kind", "pid", "check_id", "observed", "expected"]
+    def nullable_ints(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.astype({c: "Int64" for c in int_cols})
 
     def part(it):
-        # Vectorized adjacent-pair checks: each batch is compared against
-        # its shift(1) (the previous batch's last row is prepended so the
-        # batch-boundary pair is covered); per-row Python runs only over
-        # the (sparse) violation subset when formatting messages.
-        import numpy as np
-
+        # each batch is compared against its shift(1), with the previous
+        # batch's last row prepended so the batch-boundary pair is covered
         pid = TaskContext.get().partitionId()
         carry = None  # one-row DataFrame: last row of the previous batch
         first = None
         for pdf in it:
-            for c in int_cols:
-                if pdf[c].dtype.kind == "f":
-                    pdf[c] = pdf[c].astype("Int64")
             if len(pdf) == 0:
                 continue
+            pdf = nullable_ints(pdf)
             if first is None:
-                first = _clean(pdf.iloc[0].to_dict())
+                first = pdf.iloc[[0]]
             work = pdf if carry is None else pd.concat(
                 [carry, pdf], ignore_index=True
             )
-            prev = work.shift(1)
-            # shift() widens native int64 to float64 (NaN in row 0); restore
-            # nullable ints so str formatting stays '3', not '3.0'
-            for c in int_cols:
-                if prev[c].dtype.kind == "f":
-                    prev[c] = prev[c].astype("Int64")
-            same = pd.Series(True, index=work.index)
-            for g in gc:
-                same &= (work[g] == prev[g]) | (
-                    work[g].isna() & prev[g].isna()
-                )
-            po, co = prev[order_col], work[order_col]
-            valid = same & po.notna() & co.notna()
-            d = co - po
-
-            chunks = []
-
-            def emit(cond, cid, obs_fn, exp_fn):
-                mask = np.asarray(
-                    pd.Series(valid & cond).fillna(False), bool
-                )
-                if not mask.any():
-                    return
-                sub = work.loc[mask, cols].copy()
-                sub["kind"] = "v"
-                sub["pid"] = pid
-                sub["check_id"] = cid
-                sub["observed"] = np.asarray(obs_fn(mask), object)
-                sub["expected"] = np.asarray(exp_fn(mask), object)
-                chunks.append(sub)
-
-            emit(d == 0, "order_duplicate",
-                 lambda m: co[m].astype(str),
-                 lambda m: "!= prev " + po[m].astype(str))
-            if require_contiguous:
-                emit(d > 1, "order_gap",
-                     lambda m: co[m].astype(str),
-                     lambda m: "prev + 1 = " + (po[m] + 1).astype(str))
-            if ts_col and require_ts_monotonic:
-                pt, ct = prev[ts_col], work[ts_col]
-                emit(pt.notna() & ct.notna() & (ct < pt) & (d > 0),
-                     "ts_out_of_order",
-                     lambda m: ct[m].map(_fmt_ts),
-                     lambda m: ">= prev ts " + pt[m].map(_fmt_ts))
-            if chunks:
-                yield pd.concat(chunks, ignore_index=True)[out_cols]
+            v = ordering_pair_violations(work, work.shift(1), gc, order_col, ts_col)
+            if len(v):
+                yield v.assign(kind="v", pid=pid)[out_cols]
             carry = work.iloc[[-1]]
-        rows = []
-        last = _clean(carry.iloc[0].to_dict()) if carry is not None else None
-        for kind, rec in (("first", first), ("last", last)):
-            if rec is not None:
-                rows.append({
-                    **{c: rec[c] for c in cols}, "kind": kind, "pid": pid,
-                    "check_id": None, "observed": None, "expected": None,
-                })
-        yield pd.DataFrame(rows, columns=out_cols)
+        if first is not None:
+            yield pd.concat([first, carry], ignore_index=True).assign(
+                kind=["first", "last"], pid=pid,
+                check_id=None, observed=None, expected=None,
+            )[out_cols]
 
     # localCheckpoint (eager), NOT persist(): the two downstream reads
     # share the materialized blocks, and the ContextCleaner reclaims them
@@ -281,33 +282,19 @@ def ordering_violations_skew_safe(
     # would pin executor storage forever with no handle for the caller
     # to unpersist.
     res = rp.mapInPandas(part, out_schema).localCheckpoint()
-    inner = res.where(F.col("kind") == "v")
+    final = [*gc, order_col, "check_id", "observed", "expected"]
+    inner = res.where(F.col("kind") == "v").select(*final)
 
     # boundary pairs: last(p) x first(next non-empty p) — bounded by the
     # partition count, never by data volume
-    bounds = sorted(
-        (r.asDict() for r in res.where(F.col("kind") != "v").collect()),
-        key=lambda r: (r["pid"], 0 if r["kind"] == "first" else 1),
+    bounds = nullable_ints(
+        res.where(F.col("kind") != "v").select(*cols, "kind", "pid").toPandas()
+    ).sort_values(["pid", "kind"], ignore_index=True)
+    firsts = bounds[bounds["kind"] == "first"].iloc[1:].reset_index(drop=True)
+    lasts = bounds[bounds["kind"] == "last"].iloc[:-1].reset_index(drop=True)
+    edges = ordering_pair_violations(firsts, lasts, gc, order_col, ts_col)
+    edge_schema = ", ".join(
+        [f"`{c}` {types[c]}" for c in (*gc, order_col)]
+        + ["check_id string", "observed string", "expected string"]
     )
-    edge_rows = []
-    prev_last = None
-    for r in bounds:
-        if r["kind"] == "first":
-            if prev_last is not None:
-                for cid, obs, exp in check_pair(prev_last, r):
-                    edge_rows.append({
-                        **{c: r[c] for c in cols}, "kind": "v",
-                        "pid": int(r["pid"]), "check_id": cid,
-                        "observed": obs, "expected": exp,
-                    })
-        else:
-            prev_last = r
-    edges = spark.createDataFrame(
-        [tuple(e[c] for c in [*cols, "kind", "pid", "check_id", "observed", "expected"])
-         for e in edge_rows],
-        out_schema,
-    )
-    out = inner.unionByName(edges)
-    return out.select(
-        *gc, F.col(order_col), "check_id", "observed", "expected"
-    )
+    return inner.unionByName(spark.createDataFrame(edges[final], edge_schema))

@@ -1,18 +1,20 @@
 """End-to-end validation pipeline: every check class, one violations table.
 
-This is the production shape of the engine: row-level checks (fused
-projection), uniqueness, per-conversation ordering, and referential
-integrity all emit into ONE violations stream with a common schema
+`full_validation` is the production shape of the engine. Row-level
+checks, uniqueness (keep-first duplicate rank), per-conversation ordering
+and referential integrity all emit into ONE violations stream with a
+common schema
 
     (conv_id, turn_idx, column, check_id, observed, expected)
 
-so a run is a small, fixed number of Spark jobs regardless of how many
-checks are configured — crucial at scale, where each extra action is an
-extra full scan. The row-level pass is scan-local; uniqueness shuffles
-only the narrow key columns (groupBy prefilter with map-side combine,
-then windows over just the duplicate candidates); ordering shuffles the
-conv-keyed columns once for its window; referential is a broadcast
-anti-join (zero shuffle of the fact table).
+from ONE scan of the narrow columns they need (conv_id, turn_idx, ts,
+role) plus the scan-local row-check array. The conversations table is
+broadcast-joined before any shuffle. Rows with a conv_id get both of
+their windows from one sort by (conv_id, turn_idx, ts, role), so on a
+table bucketed by conv_id and sorted that way they need no Exchange and
+no Sort. NULL-conv rows take no ordering or referential check and rank
+their duplicates on their own. `validation_summary` counts the stream by
+check in one action.
 """
 
 from __future__ import annotations
@@ -20,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import ValidationPlan
+from typical_spark.operators.ordering import ordering_checks
+from typical_spark.plans.validation import ValidationPlan, violation_struct
 
 VIOLATION_SCHEMA_COLS = ("conv_id", "turn_idx", "column", "check_id", "observed", "expected")
 
@@ -31,16 +34,7 @@ def full_validation(
     conversations: DataFrame | None = None,
     salt_buckets: int = 1,
 ) -> DataFrame:
-    """All violation classes as one DataFrame (see module docstring).
-
-    FUSED plan (optimization guide §2.4 "remove shuffles outright"): the
-    previous shape ran four independent subplans — row checks (1 scan),
-    duplicate_rows (scan + groupBy-prefilter shuffle of every key + join
-    + candidate window), ordering_violations (scan + conv-window shuffle)
-    and a broadcast anti-join (1 scan) — ~4 scans of the table and 2 full
-    key shuffles. All four checks are decided by the same narrow columns
-    (conv_id, turn_idx, ts, role) plus the scan-local row-check array, so
-    one scan and ONE exchange suffice:
+    """All violation classes as one DataFrame (see module docstring):
 
       scan -> fused row-check array (text etc. never leaves the scan)
            -> broadcast-join the conversations dim (scan-local, pre-shuffle)
@@ -54,13 +48,13 @@ def full_validation(
            -> union, concat arrays, one explode.
 
     Splitting on nullability also means NULL-conv rows cannot pin one
-    task (they shuffle by the dup key). Duplicate ranks are the plain keep-first
-    row_number over (ts, role) — pytest-pinned equal to the salted
-    duplicate_rows output on the transcript family. `salt_buckets` is
-    kept for API stability; the fused pass's only window partition key is
-    conv_id — the same skew boundary ordering_violations always had — and
-    a genuinely pathological key group can still use
-    duplicate_rows(salt_buckets=N) standalone.
+    task (they shuffle by the dup key). Duplicate ranks are the plain
+    keep-first row_number over (ts, role); pytest pins the output equal
+    to plan.violations, duplicate_rows, ordering_violations and
+    referential_violations combined. `salt_buckets` is accepted and
+    ignored: the only window partition key is conv_id, the same skew
+    boundary ordering_violations has, and a pathological duplicate-key
+    group can still use duplicate_rows(salt_buckets=N) standalone.
     """
     key = list(plan.spec.key_columns)
     kc, oc = key[0], key[-1]
@@ -83,17 +77,11 @@ def full_validation(
     # order (turn_idx, ts, role): the required sort (conv_id, turn_idx,
     # ts, role) is then EXACTLY the bucketed table's declared SORTED BY,
     # so on a bucketed scan EnsureRequirements elides the Exchange AND
-    # the 16M-row Sort outright (the earlier single-branch shape used a
-    # synthetic NULL-spread key `_ns` as a second partition column,
-    # which kept the exchange elidable but broke the sort-prefix match —
-    # the Sort over the full table survived for no work the nulls
-    # actually needed). NULL-conv rows need no ordering/referential
+    # the full-table Sort (a second partition key would break that
+    # sort-prefix match). NULL-conv rows need no ordering/referential
     # checks; their keep-first dup rank partitions by the dup key
-    # (turn_idx) — same groups the (_ns = turn_idx) spread produced —
-    # and they sort/shuffle only their own (typically tiny, and on the
-    # bucketed layout row-group-prunable) row set. Plain un-bucketed
-    # inputs shuffle the same total bytes as before (two exchanges over
-    # disjoint row sets) plus one extra narrow scan.
+    # (turn_idx), and they sort/shuffle only their own (typically tiny,
+    # and on the bucketed layout row-group-prunable) row set.
     conv_rows = src.where(F.col(kc).isNotNull())
     null_rows = src.where(F.col(kc).isNull())
 
@@ -121,68 +109,25 @@ def full_validation(
     ).select("*", F.row_number().over(w_dup_null).alias("_dr"))
     ann = ann_a.unionByName(ann_b)
 
-    conv_nn = F.col(kc).isNotNull()
-    d = F.col(oc) - F.col("_po")
-
-    def _v(check_id: str, observed, expected, column: str):
-        return F.struct(
-            F.lit(column).alias("column"),
-            F.lit(check_id).alias("check_id"),
-            observed.alias("observed"),
-            expected.alias("expected"),
-        )
-
     extras = [
         F.when(
             F.col("_dr") > 1,
-            _v(
-                "unique_key",
-                F.col("_dr").cast("string"),
+            violation_struct(
+                oc, "unique_key", F.col("_dr").cast("string"),
                 F.lit(f"unique {tuple(key)}"),
-                key[-1],
             ),
         ),
-        F.when(
-            conv_nn & F.col("_po").isNotNull() & (d == 0),
-            _v(
-                "order_duplicate",
-                F.col(oc).cast("string"),
-                F.concat(F.lit("!= prev "), F.col("_po")),
-                oc,
-            ),
-        ),
-        F.when(
-            conv_nn & F.col("_po").isNotNull() & (d > 1),
-            _v(
-                "order_gap",
-                F.col(oc).cast("string"),
-                F.concat(F.lit("prev + 1 = "), F.col("_po") + 1),
-                oc,
-            ),
-        ),
-        F.when(
-            conv_nn
-            & F.col("_pts").isNotNull()
-            & F.col("ts").isNotNull()
-            & (F.col("ts") < F.col("_pts"))
-            & (d > 0),
-            _v(
-                "ts_out_of_order",
-                F.col("ts").cast("string"),
-                F.concat(F.lit(">= prev ts "), F.col("_pts").cast("string")),
-                oc,
-            ),
-        ),
+        # the NULL-conv branch has NULL _po/_pts, so no ordering check
+        # fires there without a conv_id guard
+        *ordering_checks(oc, "ts", "_po", "_pts"),
     ]
     if has_ref:
         extras.append(
             F.when(
-                conv_nn & F.col("_dim").isNull(),
-                _v(
-                    "referential",
-                    F.col(kc).cast("string"),
+                F.col(kc).isNotNull() & F.col("_dim").isNull(),
+                violation_struct(
+                    kc, "referential", F.col(kc).cast("string"),
                     F.lit(f"{kc} exists in conversations"),
-                    kc,
                 ),
             )
         )
@@ -200,7 +145,8 @@ def validation_summary(
     conversations: DataFrame | None = None,
     salt_buckets: int = 1,
 ) -> dict:
-    """One-action summary: violation counts per check class."""
-    vio = full_validation(plan, transcripts, conversations, salt_buckets)
+    """One-action summary: violation counts per check class.
+    `salt_buckets` is accepted and ignored, as in full_validation."""
+    vio = full_validation(plan, transcripts, conversations)
     rows = vio.groupBy("check_id").agg(F.count(F.lit(1)).alias("n")).collect()
     return {r["check_id"]: r["n"] for r in rows}

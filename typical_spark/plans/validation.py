@@ -32,6 +32,18 @@ from typical_spark.specs import TableSpec
 VIOLATION_COLUMNS = ("column", "check_id", "observed", "expected", "message")
 
 
+def violation_struct(
+    column: str, check_id: str, observed: Column, expected: Column
+) -> Column:
+    """One violation entry: the struct every fused check array holds."""
+    return F.struct(
+        F.lit(column).alias("column"),
+        F.lit(check_id).alias("check_id"),
+        observed.alias("observed"),
+        expected.alias("expected"),
+    )
+
+
 @dataclass(frozen=True)
 class ValidationPlan:
     spec: TableSpec
@@ -71,15 +83,13 @@ class ValidationPlan:
     # ---- the fused violation pass ------------------------------------
 
     def _violation_array(self) -> Column:
-        entries = []
-        for c in self.checks:
-            payload = F.struct(
-                F.lit(c.column).alias("column"),
-                F.lit(c.check_id).alias("check_id"),
-                c.observed.alias("observed"),
-                F.lit(c.expected).alias("expected"),
+        entries = [
+            F.when(
+                c.violation_cond,
+                violation_struct(c.column, c.check_id, c.observed, F.lit(c.expected)),
             )
-            entries.append(F.when(c.violation_cond, payload))
+            for c in self.checks
+        ]
         return F.array_compact(F.array(*entries))
 
     def annotate(self, df: DataFrame, col: str = "_violations") -> DataFrame:

@@ -34,6 +34,7 @@ stream values never leave the executors.
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -98,6 +99,7 @@ def drift_stream_monitor(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
             return
+        _recover_state(state_dir)
         spark = batch_df.sparkSession
         sk = partition_digests(batch_df, value_col, group_col, compression)
         sk = sk.select(F.lit(int(batch_id)).alias("batch_id"), "*")
@@ -139,6 +141,23 @@ def drift_stream_monitor(
     return streaming_verdicts(stream, handle, checkpoint_dir, trigger_seconds)
 
 
+def _aside(state_dir: str) -> str:
+    return state_dir.rstrip("/") + ".compact_old"
+
+
+def _recover_state(state_dir: str) -> None:
+    """Finish a `compact_state` swap that a crash cut short: an aside
+    copy with no state_dir is the whole old state, so it moves back; an
+    aside copy next to state_dir is stale."""
+    aside = _aside(state_dir)
+    if not os.path.isdir(aside):
+        return
+    if os.path.isdir(state_dir):
+        shutil.rmtree(aside)
+    else:
+        os.rename(aside, state_dir)
+
+
 def compact_state(
     spark,
     state_dir: str,
@@ -158,8 +177,7 @@ def compact_state(
     Returns the number of rows in the compacted state table. Driver
     work is bounded: the state is O(batches x |groups|) sketch rows.
     """
-    import pandas as pd
-
+    _recover_state(state_dir)
     rows = spark.read.parquet(state_dir).collect()
     if not rows:
         return 0
@@ -169,11 +187,11 @@ def compact_state(
     for r in rows:
         if r["batch_id"] < cutoff:
             old.setdefault(r["group_id"], []).append(r)
+    digests = {gid: _digest_of(rs, compression) for gid, rs in old.items()}
     merged = [
-        (-1, gid, float(sum(r["n"] for r in rs)),
-         _digest_of(rs, compression).means.tolist(),
-         _digest_of(rs, compression).weights.tolist())
-        for gid, rs in sorted(old.items())
+        (-1, gid, float(sum(r["n"] for r in old[gid])),
+         digests[gid].means.tolist(), digests[gid].weights.tolist())
+        for gid in sorted(old)
     ]
     kept = [
         (r["batch_id"], r["group_id"], r["n"], r["means"], r["weights"])
@@ -186,12 +204,13 @@ def compact_state(
         ),
         _STATE_SCHEMA,
     )
-    # same atomic rewrite-swap discipline as the local merge_keyed
-    # stand-in: write aside, then swap
+    # write the new state beside the old, rename the old aside, rename
+    # the new in, then drop the aside copy: a crash at any point leaves
+    # either state_dir or its aside copy whole (see _recover_state)
     tmp = state_dir.rstrip("/") + ".compact_tmp"
     out.coalesce(1).write.mode("overwrite").parquet(tmp)
-    import shutil
-
-    shutil.rmtree(state_dir)
-    shutil.move(tmp, state_dir)
+    aside = _aside(state_dir)
+    os.rename(state_dir, aside)
+    os.rename(tmp, state_dir)
+    shutil.rmtree(aside)
     return len(merged) + len(kept)

@@ -6,9 +6,12 @@ arrival order. A conversation's turns BUFFER in state until its session
 closes (event-time timeout: no new turns before the watermark passes its
 last activity + session_gap); at close the buffered turns are sorted in
 data order ((turn_idx, ts) — the batch operator's sort) and checked in
-one pass. This is the session-window pattern: incremental checking
-against a running max cannot work here because the anomalous timestamps
-being *detected* would themselves reorder incremental finalization.
+one pass by `operators.ordering.ordering_pair_violations`, the pandas
+kernel the skew-safe batch twin also runs, so the check rules and their
+violation text are defined once. This is the session-window pattern:
+incremental checking against a running max cannot work here because the
+anomalous timestamps being *detected* would themselves reorder
+incremental finalization.
 
 Timestamps cross the Arrow boundary as EPOCH MICROSECONDS computed
 JVM-side (`unix_micros`), never as naive pandas timestamps: a naive
@@ -16,8 +19,9 @@ timestamp is session-local wall time, but pandas interprets naive as
 UTC, so `.timestamp()` would disagree with `getCurrentWatermarkMs()` by
 the session-timezone offset — sessions would flush early (split
 conversations, missed transition violations) or hold state for hours.
-Micros also survive the double-array state exactly (< 2^53), so the
-violation text reconstructs byte-identical to the batch operator's.
+Micros also survive the double-array state exactly (< 2^53); at flush
+they become `datetime64[us]`, so the violation text is byte-identical to
+the batch operator's.
 
 NULL handling mirrors the batch operator's SQL semantics exactly
 (verified by the shuffled-arrival parity test, which includes NULL-ts
@@ -41,7 +45,6 @@ Arrow-batched grouped kernel; no per-row Python outside it.
 
 from __future__ import annotations
 
-import datetime as dt
 from collections.abc import Iterable
 
 import pandas as pd
@@ -50,7 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from typical_spark.operators.ordering import _fmt_ts
+from typical_spark.operators.ordering import ordering_pair_violations
 
 OUT_SCHEMA = (
     "conv_id string, turn_idx int, check_id string, observed string, "
@@ -66,52 +69,22 @@ STATE_SCHEMA = "pend_turn array<int>, pend_ts array<long>, last_seen long"
 
 SESSION_GAP_S = 1.0  # flush when watermark passes last activity + gap
 
-_EPOCH = dt.datetime(1970, 1, 1)
+OUT_COLUMNS = ["conv_id", "turn_idx", "check_id", "observed", "expected"]
 
 
-def _us_str(us: int) -> str:
-    """Epoch-microseconds -> Spark timestamp-cast string (UTC session)."""
-    return _fmt_ts(_EPOCH + dt.timedelta(microseconds=us))
-
-
-def _check_conversation(conv_id, turns):
-    """Batch-identical transition checks over the full, data-ordered
-    conversation (mirrors operators/ordering.py semantics, including
-    the violation observed/expected text byte-for-byte)."""
-    rows = []
-    lo = -(1 << 62)
-    ordered = sorted(
-        turns,
-        key=lambda p: (
-            p[0] if p[0] is not None else lo,   # nulls first, like Spark
-            p[1] if p[1] is not None else lo,
-        ),
-    )
-    prev_seen = False
-    prev_turn, prev_ts = None, None
-    for turn_idx, ts_us in ordered:
-        # SQL null semantics: a NULL delta fails every check predicate,
-        # but the row still becomes the next row's "previous" (exactly
-        # what the window variant's lag() sees)
-        if prev_seen and turn_idx is not None and prev_turn is not None:
-            d = turn_idx - prev_turn
-            if d == 0:
-                rows.append((conv_id, turn_idx, "order_duplicate",
-                             str(turn_idx), f"!= prev {prev_turn}"))
-            elif d > 1:
-                rows.append((conv_id, turn_idx, "order_gap",
-                             str(turn_idx), f"prev + 1 = {prev_turn + 1}"))
-            if (
-                ts_us is not None and prev_ts is not None
-                and d > 0 and ts_us < prev_ts
-            ):
-                rows.append((
-                    conv_id, turn_idx, "ts_out_of_order",
-                    _us_str(ts_us), f">= prev ts {_us_str(prev_ts)}",
-                ))
-        prev_seen = True
-        prev_turn, prev_ts = turn_idx, ts_us
-    return rows
+def _flush(conv_id, pending) -> pd.DataFrame:
+    """A closed session's violations: its buffered (turn_idx, ts_us)
+    turns, sorted in data order with NULLs first, through the batch
+    operators' pandas kernel."""
+    buf = pd.DataFrame({
+        "conv_id": conv_id,
+        "turn_idx": pd.array([p[0] for p in pending], dtype="Int64"),
+        "ts": pd.array([p[1] for p in pending], dtype="Int64"),
+    }).sort_values(["turn_idx", "ts"], na_position="first", ignore_index=True)
+    buf["ts"] = buf["ts"].astype("datetime64[us]")
+    return ordering_pair_violations(
+        buf, buf.shift(1), [], "turn_idx", "ts"
+    )[OUT_COLUMNS]
 
 
 def _check_group(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
@@ -124,12 +97,9 @@ def _check_group(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
 
     if state.hasTimedOut:
         state.remove()
-        rows = _check_conversation(conv_id, pending)
-        if rows:
-            yield pd.DataFrame(
-                rows,
-                columns=["conv_id", "turn_idx", "check_id", "observed", "expected"],
-            )
+        rows = _flush(conv_id, pending)
+        if len(rows):
+            yield rows
         return
 
     for pdf in pdfs:
