@@ -2,13 +2,14 @@
 produces exactly the same violations as an uninterrupted run
 (SURVEY.md §5 engine test plan: "kill-and-resume from manifest")."""
 
+import os
 import shutil
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from typical_spark import compile_table_spec
+from typical_spark import checkpoint, compile_table_spec
 from typical_spark.checkpoint import CheckpointedRun
 from typical_spark.specs import transcript_spec
 
@@ -47,6 +48,83 @@ def test_kill_and_resume_produces_identical_output(spark, bucketed_df):
         assert all(r["n_rows"] > 0 and r["wall_s"] >= 0 for r in m)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _rows(df):
+    return sorted(df.collect(), key=lambda r: tuple(str(v) for v in r))
+
+
+def test_crash_between_write_and_manifest_commit(spark, bucketed_df, monkeypatch, tmp_path):
+    """The commit window: a unit's violations are written, then the
+    manifest rename fails. No row for that unit (and no temporary file)
+    may be visible, a resumed run re-processes exactly that unit, and the
+    output equals an uninterrupted run's."""
+    plan = compile_table_spec(transcript_spec())
+    buckets = sorted(r[0] for r in bucketed_df.select("bucket").distinct().collect())
+    last = buckets[-1]
+    ref = CheckpointedRun(spark, plan, str(tmp_path / "ref"), run_id="ref")
+    ref.run(bucketed_df)
+
+    out = str(tmp_path / "crash")
+    run = CheckpointedRun(spark, plan, out, run_id="r")
+    real_replace, commits = os.replace, []
+
+    def crash_on_last_commit(src, dst):
+        commits.append(dst)
+        if len(commits) == len(buckets):
+            raise OSError("injected crash before the manifest rename")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint.os, "replace", crash_on_last_commit)
+        with pytest.raises(OSError, match="injected crash"):
+            run.run(bucketed_df)
+    assert os.path.exists(os.path.join(out, "violations", f"bucket={last}", "_SUCCESS"))
+    assert run.completed_buckets() == set(buckets[:-1])
+    assert run.manifest().where(F.col("bucket") == last).count() == 0
+    assert not [f for f in os.listdir(run.manifest_path) if f.endswith(".tmp")]
+
+    summary = CheckpointedRun(spark, plan, out, run_id="r").run(bucketed_df)
+    assert summary["buckets_processed"] == 1
+    assert sorted(r["bucket"] for r in run.manifest().collect()) == buckets
+    assert _rows(run.violations()) == _rows(ref.violations())
+
+
+MANIFEST_DDL = (
+    "run_id string, bucket int, status string, n_rows long, "
+    "n_violations long, wall_s double, finished_at double, "
+    "fingerprint long, mode string"
+)
+
+
+def test_manifest_format_and_fingerprints(spark, bucketed_df, tmp_path):
+    """The manifest keeps the schema Spark used to write, reads back when
+    Spark-written (older) and driver-written files share a directory,
+    and records the same fingerprint `bucket_fingerprints` computes and
+    the same counts a separate count() gives."""
+    plan = compile_table_spec(transcript_spec())
+    out = str(tmp_path / "ckpt")
+    # an older manifest file, committed by a Spark job
+    spark.createDataFrame(
+        [("old", 99, "done", 5, 1, 0.1, 1.0, 123, "validated")], MANIFEST_DDL
+    ).coalesce(1).write.parquet(os.path.join(out, "manifest"))
+    run = CheckpointedRun(spark, plan, out, run_id="new")
+    run.run(bucketed_df)
+
+    m = run.manifest()
+    assert m.schema == spark.createDataFrame([], MANIFEST_DDL).schema
+    assert CheckpointedRun(spark, plan, out, run_id="old").completed_buckets() == {99}
+    assert run.latest_fingerprints()[99] == (123, 5, 1)
+    assert m.where(F.col("run_id") == "old").count() == 1
+
+    rows = m.where(F.col("run_id") == "new").collect()
+    fps = run.bucket_fingerprints(bucketed_df)
+    assert run.completed_buckets() == set(fps)
+    assert {r["bucket"]: r["fingerprint"] for r in rows} == fps
+    for r in rows:
+        part = bucketed_df.where(F.col("bucket") == r["bucket"])
+        assert r["n_rows"] == part.count()
+        assert r["n_violations"] == plan.violations(part, with_message=False).count()
 
 
 def test_rerun_is_noop(spark, bucketed_df):

@@ -6,10 +6,22 @@ table's partition bucket (the conv-hash `bucket` column the transcript
 table is written with — an Iceberg `bucket(conv_id)` transform on a real
 deployment). The driver walks buckets in deterministic order, runs the
 fused validation pass on each (Catalyst prunes the scan to that bucket's
-files — check .explain() for PartitionFilters), appends the bucket's
-violations to the sink, then appends one lineage row to the manifest:
+files — check .explain() for PartitionFilters), writes the bucket's
+violations to the sink, then commits one lineage row to the manifest:
 
-    (run_id, bucket, status, n_rows, n_violations, wall_s, finished_at)
+    (run_id, bucket, status, n_rows, n_violations, wall_s, finished_at,
+     fingerprint, mode)
+
+The violations write is a bucket's only Spark action; `Observation`s on
+it give the row count, content fingerprint and violation count. The
+manifest row is a driver-written Arrow file committed by rename: pyarrow
+writes `.part-<uuid>.parquet.tmp`, then `os.replace` names it
+`part-<uuid>.parquet`. Spark and pyarrow skip names starting with `.` or
+`_`, so a crash leaves no half-written row visible, and Spark-written
+files from older manifests read back beside the new ones. The manifest
+is also read with pyarrow on the driver, so no Spark job touches it.
+Like StageCheckpoint's marker this assumes a POSIX path with atomic
+rename; on Iceberg the equivalent commit is one `append`.
 
 Resume = read the manifest, subtract completed buckets, process the rest.
 A bucket is only ever marked complete AFTER its violations are durably
@@ -26,17 +38,28 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from typical_spark.plans.validation import ValidationPlan
 
-MANIFEST_SCHEMA = (
-    "run_id string, bucket int, status string, n_rows long, "
-    "n_violations long, wall_s double, finished_at double, "
-    "fingerprint long, mode string"
-)
+# field for field the schema Spark wrote the manifest with
+MANIFEST_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("bucket", pa.int32()), ("status", pa.string()),
+    ("n_rows", pa.int64()), ("n_violations", pa.int64()),
+    ("wall_s", pa.float64()), ("finished_at", pa.float64()),
+    ("fingerprint", pa.int64()), ("mode", pa.string()),
+])
+
+
+def row_hash(columns: list[str]) -> Column:
+    """Per-row content hash over every column, folded into 31 bits so a
+    bucket's sum stays exact (no long overflow) up to 2^32 rows."""
+    return F.pmod(F.xxhash64(*[F.col(c) for c in columns]), F.lit(1 << 31))
 
 
 class CheckpointedRun:
@@ -58,150 +81,126 @@ class CheckpointedRun:
 
     # -- manifest ------------------------------------------------------
 
-    def completed_buckets(self) -> set[int]:
+    def _done_rows(self) -> list[dict]:
+        """Every committed status='done' manifest row, read on the driver."""
         if not os.path.exists(self.manifest_path):
-            return set()
-        m = self.spark.read.parquet(self.manifest_path)
-        rows = (
-            m.where((F.col("run_id") == self.run_id) & (F.col("status") == "done"))
-            .select("bucket").distinct().collect()
-        )
-        return {r["bucket"] for r in rows}
+            return []
+        rows = pq.read_table(self.manifest_path, schema=MANIFEST_SCHEMA).to_pylist()
+        return [r for r in rows if r["status"] == "done"]
 
-    def _append_manifest(
-        self,
-        bucket: int,
-        n_rows: int,
-        n_vio: int,
-        wall: float,
-        fingerprint: int | None = None,
-        mode: str = "validated",
-    ):
-        row = [(self.run_id, bucket, "done", n_rows, n_vio, wall,
-                time.time(), fingerprint, mode)]
-        self.spark.createDataFrame(row, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.manifest_path)
+    def completed_buckets(self) -> set[int]:
+        return {r["bucket"] for r in self._done_rows() if r["run_id"] == self.run_id}
+
+    def _append_manifest(self, rows: list[tuple]) -> None:
+        """Commit (bucket, n_rows, n_violations, wall_s, fingerprint,
+        mode) rows as ONE parquet file: written under a hidden name, then
+        renamed into place. A failed commit leaves no file behind."""
+        now = time.time()
+        table = pa.Table.from_pylist([
+            dict(run_id=self.run_id, bucket=b, status="done", n_rows=n,
+                 n_violations=nv, wall_s=wall, finished_at=now,
+                 fingerprint=fp, mode=mode)
+            for b, n, nv, wall, fp, mode in rows
+        ], schema=MANIFEST_SCHEMA)
+        os.makedirs(self.manifest_path, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.parquet"
+        tmp = os.path.join(self.manifest_path, f".{name}.tmp")
+        try:
+            pq.write_table(table, tmp)
+            os.replace(tmp, os.path.join(self.manifest_path, name))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     # -- incremental re-validation --------------------------------------
 
     def bucket_fingerprints(self, df: DataFrame) -> dict[int, int]:
-        """Order-independent content fingerprint per bucket: sum of a
-        per-row xxhash64 over every column, folded into 31 bits per row
-        so the per-bucket sum stays exact (no long overflow) up to 2^32
-        rows per bucket — ONE map-side-combined pass over the table,
-        the cost of a count. Any row change/insert/delete moves the sum
-        (duplicate rows each contribute — XOR would let pairs cancel)."""
-        h = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(1 << 31))
-        rows = df.groupBy(self.bucket_col).agg(F.sum(h).alias("fp")).collect()
+        """Order-independent content fingerprint per bucket: the sum of
+        `row_hash` over the bucket's rows — ONE map-side-combined pass
+        over the table, the cost of a count. Any row change/insert/delete
+        moves the sum (duplicate rows each contribute — XOR would let
+        pairs cancel)."""
+        fp = F.sum(row_hash(df.columns)).alias("fp")
+        rows = df.groupBy(self.bucket_col).agg(fp).collect()
         return {r[self.bucket_col]: r["fp"] for r in rows}
 
-    def latest_fingerprints(self) -> dict[int, int]:
-        """Last recorded fingerprint per bucket across ALL runs (the
-        previous validation states to diff against)."""
-        if not os.path.exists(self.manifest_path):
-            return {}
-        m = self.spark.read.parquet(self.manifest_path)
-        rows = (
-            m.where(F.col("status") == "done")
-            .groupBy("bucket")
-            .agg(F.max_by("fingerprint", "finished_at").alias("fp"),
-                 F.max_by("n_rows", "finished_at").alias("n_rows"),
-                 F.max_by("n_violations", "finished_at").alias("n_vio"))
-            .collect()
-        )
-        self._latest_meta = {r["bucket"]: (r["n_rows"], r["n_vio"]) for r in rows}
-        return {r["bucket"]: r["fp"] for r in rows}
+    def latest_fingerprints(self) -> dict[int, tuple]:
+        """{bucket: (fingerprint, n_rows, n_violations)} from the last
+        committed row per bucket (max finished_at) across ALL runs — the
+        previous validation states to diff against."""
+        latest = {}
+        for r in sorted(self._done_rows(), key=lambda r: r["finished_at"]):
+            latest[r["bucket"]] = (r["fingerprint"], r["n_rows"], r["n_violations"])
+        return latest
 
     def run_incremental(self, df: DataFrame) -> dict:
         """Nightly-rerun mode: re-validate ONLY buckets whose content
         fingerprint changed since the last recorded validation (new
         buckets count as changed; a bucket whose previous manifest row
         predates fingerprints, i.e. fingerprint NULL, also counts as
-        changed). Unchanged buckets carry their previous metrics
-        forward as a mode='carried' manifest row and keep their
-        already-written violations partition — so an append-mostly
-        table pays only for the buckets that actually moved."""
+        changed). Unchanged buckets carry their previous metrics forward
+        as mode='carried' manifest rows, committed together in one file,
+        and keep their already-written violations partition — so an
+        append-mostly table pays only for the buckets that moved."""
         fps = self.bucket_fingerprints(df)
         prev = self.latest_fingerprints()
-        carried = validated = 0
-        for b in sorted(fps):
-            if b in prev and prev[b] is not None and prev[b] == fps[b]:
-                n_rows, n_vio = self._latest_meta[b]
-                self._append_manifest(
-                    b, n_rows, n_vio, 0.0, fps[b], mode="carried"
-                )
-                carried += 1
-            else:
-                self._validate_bucket(df, b, fps[b])
-                validated += 1
+        carried = [
+            (b, prev[b][1], prev[b][2], 0.0, fps[b], "carried")
+            for b in sorted(fps)
+            if b in prev and prev[b][0] is not None and prev[b][0] == fps[b]
+        ]
+        if carried:
+            self._append_manifest(carried)
+        changed = sorted(set(fps) - {row[0] for row in carried})
+        for b in changed:
+            self._validate_bucket(df, b)
         return {
             "run_id": self.run_id,
             "buckets_total": len(fps),
-            "buckets_validated": validated,
-            "buckets_carried": carried,
+            "buckets_validated": len(changed),
+            "buckets_carried": len(carried),
         }
 
     # -- run -----------------------------------------------------------
 
-    def _validate_bucket(
-        self, df: DataFrame, b: int, fingerprint: int | None = None
-    ) -> None:
+    def _validate_bucket(self, df: DataFrame, b: int) -> None:
+        """ONE Spark action: the violations write. Observations on it
+        count the bucket's rows and fingerprint them (before the check
+        projection, the same hash `bucket_fingerprints` sums, so a later
+        run_incremental can diff against it) and count the violations."""
         t0 = time.time()
+        seen, found = Observation(), Observation()
         part = df.where(F.col(self.bucket_col) == b)
+        part = part.observe(seen, F.count(F.lit(1)).alias("n"),
+                            F.sum(row_hash(part.columns)).alias("fp"))
         vio = self.plan.violations(part, with_message=False)
+        vio = vio.observe(found, F.count(F.lit(1)).alias("n"))
         # per-bucket directory -> re-running a bucket overwrites, not
         # duplicates (exactly-once output under at-least-once driver)
-        out_dir = os.path.join(self.violations_path, f"bucket={b}")
-        vio.write.mode("overwrite").parquet(out_dir)
-        # ONE expensive check-evaluation pass per bucket: the
-        # violation count comes from the (tiny) written output and
-        # the row count from a projection-free count — a prior
-        # version ran the fused check projection twice (once for
-        # counts, once for the write), doubling every bucket's cost
-        nv = self.spark.read.parquet(out_dir).count()
-        # row count and content fingerprint in ONE projection-light pass
-        # (full runs record fingerprints too, so a later run_incremental
-        # can diff against them)
-        h = F.pmod(
-            F.xxhash64(*[F.col(c) for c in part.columns]), F.lit(1 << 31)
-        )
-        meta = part.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(h).alias("fp")
-        ).head()
-        fp = fingerprint if fingerprint is not None else meta["fp"]
-        self._append_manifest(b, meta["n"], nv, time.time() - t0, fp)
+        vio.write.mode("overwrite").parquet(os.path.join(self.violations_path, f"bucket={b}"))
+        n, fp, nv = seen.get["n"], seen.get["fp"], found.get["n"]
+        self._append_manifest([(b, n, nv, time.time() - t0, fp, "validated")])
 
-    def run(
-        self,
-        df: DataFrame,
-        fail_after: int | None = None,
-    ) -> dict:
+    def run(self, df: DataFrame, fail_after: int | None = None) -> dict:
         """Process every not-yet-done bucket. `fail_after` aborts after N
         buckets (test hook for kill-and-resume)."""
-        buckets = sorted(
-            r[0]
-            for r in df.select(self.bucket_col).distinct().collect()
-        )
+        buckets = sorted(r[0] for r in df.select(self.bucket_col).distinct().collect())
         done = self.completed_buckets()
         todo = [b for b in buckets if b not in done]
-        processed = 0
-        for b in todo:
+        for processed, b in enumerate(todo):
             if fail_after is not None and processed >= fail_after:
                 raise RuntimeError(f"injected failure after {processed} buckets")
             self._validate_bucket(df, b)
-            processed += 1
         return {
             "run_id": self.run_id,
             "buckets_total": len(buckets),
             "buckets_previously_done": len(done),
-            "buckets_processed": processed,
+            "buckets_processed": len(todo),
         }
 
     def violations(self) -> DataFrame:
-        return self.spark.read.option("basePath", self.violations_path).parquet(
-            self.violations_path
-        )
+        path = self.violations_path
+        return self.spark.read.option("basePath", path).parquet(path)
 
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(self.manifest_path)

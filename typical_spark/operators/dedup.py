@@ -544,7 +544,10 @@ def dedup_groups_connected(pairs: DataFrame, max_iterations: int = 25) -> DataFr
     for _ in range(max_iterations):
         nbr = (
             edges.join(labels, edges["dst"] == labels["id"])
-            .select(edges["src"].alias("id"), F.col("label"), F.lit(None).alias("_old"))
+            .select(
+                edges["src"].alias("id"), F.col("label"),
+                F.lit(None).cast(labels.schema["label"].dataType).alias("_old"),
+            )
         )
         # Carry each node's OWN previous label through the same aggregate
         # (self rows tag it in `_old`; labels are a min-semilattice so
