@@ -88,7 +88,7 @@ def flagship_components(repeats: int = 3):
 
     timed(
         "full_validation summary",
-        lambda: full_validation(plan, tdf, cdf, salt_buckets=8)
+        lambda: full_validation(plan, tdf, cdf)
         .groupBy("check_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect(),

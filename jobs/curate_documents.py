@@ -117,11 +117,9 @@ def main(argv=None) -> int:
     )
     from typical_spark.operators.packing import pack_sequences
     from typical_spark.operators.sampling import hash_split, stratified_sample
-    from typical_spark.sources.tables import write_output
+    from typical_spark.sources.tables import read_target, sub_target, write_output
 
-    docs = spark.read.parquet(args.input) \
-        if not args.input.startswith("iceberg://") \
-        else spark.read.format("iceberg").load(args.input[len("iceberg://"):])
+    docs = read_target(spark, args.input)
     counts = {"input": docs.count()}
 
     ck = None
@@ -299,16 +297,9 @@ def main(argv=None) -> int:
         ).count()
         counts["after_rebalance"] = kept.count()
 
-    def sub_target(name: str) -> str:
-        # Iceberg identifiers take '.' separators; a '/' would be an
-        # unparseable multipart name
-        if args.out.startswith("iceberg://"):
-            return f"{args.out.rstrip('.')}.{name}"
-        return f"{args.out.rstrip('/')}/{name}"
-
     splits = [(n, w) for n, w in _parse_weights(args.splits).items()]
     curated = hash_split(kept, args.id_col, splits)
-    write_output(curated, sub_target("survivors"), mode="overwrite")
+    write_output(curated, sub_target(args.out, "survivors"), mode="overwrite")
 
     # pack the split NAMED train if present, else the first listed one
     split_names = [n for n, _ in splits]
@@ -318,7 +309,7 @@ def main(argv=None) -> int:
         train, args.id_col, args.length_col,
         budget=args.budget, n_shards=args.n_shards,
     )
-    write_output(packed, sub_target("packing"), mode="overwrite")
+    write_output(packed, sub_target(args.out, "packing"), mode="overwrite")
     counts["train_docs"] = train.count()
     counts["packed_rows"] = packed.count()
     print(json.dumps(counts))

@@ -10,10 +10,12 @@
 
 By default runs the fused check suite (row-level + uniqueness + ordering
 + referential, `pipeline.full_validation`) once, writes the violations
-under <out>/violations and prints their counts by check, read back from
-what was written. --checkpointed instead runs the row-level pass bucket
-by bucket with a lineage manifest; re-running it with the same --run-id
-continues an interrupted run. On a cluster the SparkSession comes from
+to <out>/violations (the table <out>.violations for an iceberg:// --out)
+and prints their counts by check, read back from what was written.
+--checkpointed instead runs the row-level pass bucket by bucket with a
+lineage manifest; re-running it with the same --run-id continues an
+interrupted run. Its manifest commits by file rename, so it needs a
+directory --out. On a cluster the SparkSession comes from
 spark-submit's conf (no master hardcoded here).
 """
 
@@ -24,12 +26,6 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
-
-
-def _read(spark, target: str):
-    if target.startswith("iceberg://"):
-        return spark.read.format("iceberg").load(target[len("iceberg://"):])
-    return spark.read.parquet(target)
 
 
 def main(argv=None) -> int:
@@ -50,6 +46,10 @@ def main(argv=None) -> int:
                          "the built-in transcript spec")
     ap.add_argument("--mode", default="coerce", choices=("coerce", "strict"))
     args = ap.parse_args(argv)
+    if (args.checkpointed or args.incremental) and args.out.startswith("iceberg://"):
+        # the checkpoint manifest commits by POSIX rename
+        ap.error("--checkpointed/--incremental need a directory --out, "
+                 f"not {args.out}")
 
     # only configure a session we create — getOrCreate() would apply
     # runtime confs to an already-running shared session
@@ -65,14 +65,14 @@ def main(argv=None) -> int:
     from typical_spark.checkpoint import CheckpointedRun
     from typical_spark.compiler import compile_table_spec
     from typical_spark.pipeline import full_validation
-    from typical_spark.sources.tables import write_output
+    from typical_spark.sources.tables import read_target, sub_target, write_output
     from typical_spark.spec_io import spec_from_json_file
     from typical_spark.specs import transcript_spec
 
     spec = spec_from_json_file(args.spec) if args.spec else transcript_spec()
     plan = compile_table_spec(spec, mode=args.mode)
-    tdf = _read(spark, args.input)
-    cdf = _read(spark, args.conversations) if args.conversations else None
+    tdf = read_target(spark, args.input)
+    cdf = read_target(spark, args.conversations) if args.conversations else None
 
     if args.checkpointed or args.incremental:
         run = CheckpointedRun(spark, plan, args.out, run_id=args.run_id,
@@ -81,12 +81,12 @@ def main(argv=None) -> int:
         print(json.dumps(summary))
         return 0
 
-    out = f"{args.out.rstrip('/')}/violations"
+    out = sub_target(args.out, "violations")
     write_output(full_validation(plan, tdf, cdf), out, mode="overwrite")
     # count what was written (small) instead of running the fused pass again
     counts = {
         r["check_id"]: r["count"]
-        for r in _read(spark, out).groupBy("check_id").count().collect()
+        for r in read_target(spark, out).groupBy("check_id").count().collect()
     }
     print(json.dumps({"run_id": args.run_id, "violations_by_check": counts}))
     return 0

@@ -206,3 +206,32 @@ def test_validate_job_incremental_flag(spark, transcripts_df, tmp_path):
     assert set(modes["n1"]) == {"validated"}
     assert set(modes["n2"]) == {"carried"}
     assert len(modes["n2"]) == len(modes["n1"])
+
+
+def test_validate_job_checkpointed_rejects_iceberg_out(capsys):
+    """The checkpoint manifest commits by file rename, so --checkpointed
+    and --incremental refuse an iceberg:// --out before any Spark work."""
+    from jobs.validate_transcripts import main
+
+    for flag in ("--checkpointed", "--incremental"):
+        with pytest.raises(SystemExit) as exc:
+            main(["--input", "in", "--out", "iceberg://cat.db", flag])
+        assert exc.value.code == 2
+        assert "need a directory --out" in capsys.readouterr().err
+
+
+def test_stage_checkpoint_marker_counts_the_written_rows(spark, tmp_path):
+    """The marker's n_rows is observed on the stage's write, not counted
+    by a second job over the read-back; it must still equal the rows
+    the stage holds, empty stages included."""
+    import json
+
+    from typical_spark.checkpoint import StageCheckpoint
+
+    ck = StageCheckpoint(spark, str(tmp_path / "ck"))
+    for name, df in (("some", spark.range(37).where("id % 3 != 0")),
+                     ("none", spark.range(5).where("id > 9"))):
+        out, resumed = ck.stage(name, lambda df=df: df)
+        assert not resumed
+        with open(tmp_path / "ck" / f"{name}.stage.json") as fh:
+            assert json.load(fh)["n_rows"] == out.count() == df.count()

@@ -74,6 +74,22 @@ def test_fused_pass_has_no_shuffle(spark, events):
     assert "codegen id" in p  # whole-stage codegen spans cover the checks
 
 
+def test_violation_arrays_are_evaluated_once(spark, transcripts_df):
+    """explode_violations explodes the check array as an expression. A
+    Generate over a projected array column makes Spark infer a size() > 0
+    filter, which lands below the projection and evaluates every check
+    of the row a second time."""
+    from typical_spark.operators.ordering import ordering_violations
+
+    plan = compile_table_spec(transcript_spec())
+    for out in (
+        plan.violations(transcripts_df, with_message=False),
+        ordering_violations(transcripts_df, ["conv_id"], "turn_idx", ts_col="ts"),
+    ):
+        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "size(" not in optimized, optimized
+
+
 def test_referential_uses_broadcast_anti_join(spark, events):
     dim = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     out = referential_violations(events, dim, ["user_id"], ["c_custkey"])

@@ -257,10 +257,12 @@ class StageCheckpoint:
 
     def stage(self, name: str, thunk) -> tuple[DataFrame, bool]:
         """Return (stage output, resumed?). Runs `thunk()` and
-        materializes its DataFrame unless the stage already completed.
-        Intermediates the thunk's result cached on its own behalf (the
-        dedup family's _owned_cache) are unpersisted once the write has
-        materialized them."""
+        materializes its DataFrame unless the stage already completed;
+        an Observation on that write counts the rows for the marker, so
+        no second job re-reads the stage to count it. Intermediates the
+        thunk's result cached on its own behalf (the dedup family's
+        _owned_cache) are unpersisted once the write has materialized
+        them."""
         import json
 
         if self.done(name):
@@ -279,13 +281,15 @@ class StageCheckpoint:
             return self.spark.read.parquet(self._data_path(name)), True
         t0 = time.time()
         df = thunk()
-        df.write.mode("overwrite").parquet(self._data_path(name))
+        written = Observation()
+        df.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(self._data_path(name))
         for cached in getattr(df, "_owned_cache", []):
             cached.unpersist(blocking=False)
-        out = self.spark.read.parquet(self._data_path(name))
         marker = {
             "stage": name,
-            "n_rows": out.count(),
+            "n_rows": written.get["n"],
             "wall_s": time.time() - t0,
             "finished_at": time.time(),
             "fingerprint": self.fingerprint,
@@ -294,4 +298,4 @@ class StageCheckpoint:
         with open(tmp, "w") as fh:
             json.dump(marker, fh)
         os.replace(tmp, self._marker_path(name))  # atomic commit
-        return out, False
+        return self.spark.read.parquet(self._data_path(name)), False

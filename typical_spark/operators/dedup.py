@@ -115,38 +115,6 @@ def _exact_group_reps(df: DataFrame, id_col: str, key: Column) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_MAX_LONG = (1 << 63) - 1
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 64) -> Column:
-    """n_hashes-wide minhash via a seeded hash-of-hash family:
-    each shingle is xxhash64'd ONCE to a long `h`, then
-    h_i = min over shingles of xxhash64(h, i).
-
-    Re-hashing with a per-index seed is a valid minhash family (each
-    index is an independent uniform hash of the shingle) and — unlike
-    the classic affine a*h+b over Z/2^64 — involves NO overflow-prone
-    arithmetic, so it is safe under spark.sql.ansi.enabled=true (the
-    Spark 4.x default); xxhash64 of a fixed 12-byte (long, int) input is
-    whole-stage-codegen'd and cheap.
-
-    NOTE: this expression form (array aggregate accumulator) is the
-    per-row API; `minhash_near_duplicates` uses the faster equivalent —
-    explode + n_hashes codegen'd min() aggregates — because Spark
-    interprets (does not codegen) higher-order-function lambdas. Prefer
-    the aggregate formulation for bulk signature computation."""
-    seeds = F.array(*[F.lit(i) for i in range(n_hashes)])
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    init = F.array_repeat(F.lit(_MAX_LONG).cast("long"), n_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, seeds, lambda m, i: F.least(m, F.xxhash64(h, i))
-        ),
-    )
-
-
 def _shingle_sig_bands(
     df: DataFrame,
     id_col: str,

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import violation_struct
+from typical_spark.plans.validation import explode_violations, violation_struct
 
 
 def ordering_checks(
@@ -128,14 +128,7 @@ def ordering_violations(
         order_col, ts_col, "_prev_o", "_prev_ts",
         require_contiguous, require_ts_monotonic,
     )))
-    # no size() pre-filter: explode drops empty arrays itself, and a
-    # filter would be pushed below the projection, evaluating the check
-    # array twice per row
-    return (
-        lagged.withColumn("_v", arr)
-        .select(*group_cols, F.col(order_col), F.explode("_v").alias("v"))
-        .select(*group_cols, F.col(order_col), "v.check_id", "v.observed", "v.expected")
-    )
+    return explode_violations(lagged, [*group_cols, order_col], arr).drop("column")
 
 
 def _fmt_ts(t) -> str:

@@ -28,15 +28,32 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from typical_spark.plans.validation import violation_struct
 
-def _order_cols(df: DataFrame, order_by: Sequence[str] | None):
-    if order_by:
-        return [F.col(c) for c in order_by]
-    # deterministic tiebreak when no explicit order given
-    return [F.lit(1)]
+
+def keep_first_rank(keys: Sequence[str], order_by: Sequence[str] | None) -> Column:
+    """1-based position of a row among the rows sharing its `keys`, in
+    `order_by` order: rank 1 is the kept first occurrence, every rank
+    > 1 a duplicate. Without `order_by` the rank among tied rows is
+    arbitrary (a constant sort key)."""
+    order = [F.col(c) for c in order_by] if order_by else [F.lit(1)]
+    return F.row_number().over(Window.partitionBy(*keys).orderBy(*order))
+
+
+def unique_key_check(keys: Sequence[str], rank: Column) -> Column:
+    """The unique-key check as a fused-array entry: a row whose
+    `keep_first_rank` is > 1 repeats an earlier row's `keys`. Reported
+    on the last key column, with the rank as the observed value."""
+    return F.when(
+        rank > 1,
+        violation_struct(
+            keys[-1], "unique_key", rank.cast("string"),
+            F.lit(f"unique {tuple(keys)}"),
+        ),
+    )
 
 
 def duplicate_key_counts(
@@ -55,38 +72,33 @@ def duplicate_rows(
     keys: Sequence[str],
     order_by: Sequence[str] | None = None,
     salt_buckets: int = 1,
-    prefilter: bool = True,
 ) -> DataFrame:
     """Rows that are duplicates beyond the kept-first occurrence
     (keep-first per `order_by`, mirroring array.py:30-43 order-preserving
     dedup). Output: df columns + dup_rank (>=2).
 
-    prefilter=True (default) first computes the duplicate KEY set with a
-    plain groupBy count — map-side partial aggregation makes this
-    skew-proof and cheap — then windows only the rows of those keys (a
-    null-safe semi-join; AQE broadcasts the key set when it is small).
+    The duplicate KEY set comes first, from a plain groupBy count —
+    map-side partial aggregation makes this skew-proof and cheap — and
+    only the rows of those keys are windowed (a null-safe semi-join;
+    AQE broadcasts the key set when it is small).
     Ranking therefore touches ~2x the duplicate rows instead of the whole
     table: at 0.5% duplicates that is a 100x cut of window input. The
     salted path then only ever runs on the (small) candidate set, purely
     as pathological-hot-key insurance.
     """
-    if prefilter:
-        dup_keys = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_kn"))
-            .where(F.col("_kn") > 1)
-            .select(*[F.col(k).alias(f"_dk_{k}") for k in keys])
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & F.col(k).eqNullSafe(F.col(f"_dk_{k}"))
-        df = df.join(dup_keys, cond, "inner").drop(
-            *[f"_dk_{k}" for k in keys]
-        )
+    dup_keys = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_kn"))
+        .where(F.col("_kn") > 1)
+        .select(*[F.col(k).alias(f"_dk_{k}") for k in keys])
+    )
+    cond = F.lit(True)
+    for k in keys:
+        cond = cond & F.col(k).eqNullSafe(F.col(f"_dk_{k}"))
+    df = df.join(dup_keys, cond, "inner").drop(*[f"_dk_{k}" for k in keys])
     if salt_buckets <= 1:
-        w = Window.partitionBy(*keys).orderBy(*_order_cols(df, order_by))
         return (
-            df.withColumn("dup_rank", F.row_number().over(w))
+            df.withColumn("dup_rank", keep_first_rank(keys, order_by))
             .where(F.col("dup_rank") > 1)
         )
     # Salted: global rank = rows in earlier salt buckets + local rank.
@@ -96,8 +108,7 @@ def duplicate_rows(
     salt_cols = [*keys, *(order_by or [])]
     salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets))
     sdf = df.withColumn("_salt", salt)
-    wl = Window.partitionBy(*keys, "_salt").orderBy(*_order_cols(df, order_by))
-    local = sdf.withColumn("_lrank", F.row_number().over(wl))
+    local = sdf.withColumn("_lrank", keep_first_rank([*keys, "_salt"], order_by))
     # survivor set: one row per (key, salt) carrying its bucket size
     wcnt = Window.partitionBy(*keys, "_salt")
     local = local.withColumn("_bucket_n", F.count(F.lit(1)).over(wcnt))
@@ -146,9 +157,8 @@ def dedup_keep_first(
 ) -> DataFrame:
     """Mutating dedup (the reference's array-unique contract): keep the
     first row per key under order_by, drop the rest."""
-    w = Window.partitionBy(*keys).orderBy(*_order_cols(df, order_by))
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", keep_first_rank(keys, order_by))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )

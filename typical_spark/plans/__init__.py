@@ -1,3 +1,3 @@
-from typical_spark.plans.validation import ValidationPlan, ValidationResult
+from typical_spark.plans.validation import ValidationPlan
 
-__all__ = ["ValidationPlan", "ValidationResult"]
+__all__ = ["ValidationPlan"]

@@ -18,6 +18,7 @@ only the checked columns (column pruning keeps `ReadSchema` narrow).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass
 from functools import reduce
 
@@ -42,6 +43,21 @@ def violation_struct(
         observed.alias("observed"),
         expected.alias("expected"),
     )
+
+
+def explode_violations(df: DataFrame, keys: Sequence[str], arr: Column) -> DataFrame:
+    """The violation rows: one per entry of `arr`, an array<struct> of
+    `violation_struct` entries. Output: keys…, column, check_id,
+    observed, expected.
+
+    No size() pre-filter: explode already drops empty arrays, and a
+    filter here is pushed BELOW the projection by Catalyst, which
+    duplicates the whole fused check array (every regex/range check
+    evaluated twice per row — measured ~2x on the 16M-turn flagship row
+    pass). For the same reason `arr` is exploded as an expression, never
+    through a projected column: Spark infers that same size() > 0 filter
+    from a Generate whose input is an attribute."""
+    return df.select(*keys, F.explode(arr).alias("v")).select(*keys, "v.*")
 
 
 @dataclass(frozen=True)
@@ -102,17 +118,7 @@ class ValidationPlan:
 
         Output: key_columns… , column, check_id, observed, expected[, message].
         """
-        keys = [F.col(k) for k in self.spec.key_columns]
-        ann = df.select(*keys, self._violation_array().alias("_v"))
-        # no size() pre-filter: explode already drops empty arrays, and a
-        # filter here is pushed BELOW the projection by Catalyst, which
-        # duplicates the whole fused check array (every regex/range
-        # check evaluated twice per row — measured ~2x on the 16M-turn
-        # flagship row pass)
-        out = (
-            ann.select(*self.spec.key_columns, F.explode("_v").alias("v"))
-            .select(*self.spec.key_columns, "v.*")
-        )
+        out = explode_violations(df, self.spec.key_columns, self._violation_array())
         if with_message:
             # "{field}: value <{v!r}> fails constraints: {constraints}"
             out = out.withColumn(
@@ -172,26 +178,4 @@ class ValidationPlan:
         return (
             agg.select("partition_id", "n_rows", stack.alias("check_id", "n_violations"))
             .withColumn("pass", F.col("n_violations") == 0)
-        )
-
-
-@dataclass
-class ValidationResult:
-    """Materialized run summary (driver-side), for the manifest table."""
-
-    n_rows: int
-    n_violations: int
-    by_check: dict
-
-    @classmethod
-    def from_run(cls, plan: ValidationPlan, df: DataFrame) -> "ValidationResult":
-        vio = plan.violations(df, with_message=False)
-        counts = {
-            r["check_id"]: r["n"]
-            for r in vio.groupBy("check_id").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        return cls(
-            n_rows=df.count(),
-            n_violations=sum(counts.values()),
-            by_check=counts,
         )

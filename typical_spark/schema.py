@@ -12,8 +12,6 @@ documents the reference's schemas did.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import types as T
 
 from typical_spark.specs import (
@@ -207,10 +205,6 @@ def spec_to_json_schema(
             for name, s in sorted(refs.items())
         }
     return doc
-
-
-def json_schema_str(spec: TableSpec, **kw) -> str:
-    return json.dumps(spec_to_json_schema(spec, **kw), indent=2, sort_keys=True)
 
 
 def schema_conformance(df, spec: TableSpec, total: bool = False) -> list[dict]:

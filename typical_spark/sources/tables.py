@@ -34,6 +34,23 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
 
 
+def read_target(spark: SparkSession, locator: str) -> DataFrame:
+    """One table by locator: `iceberg://catalog.db.table` or a parquet path."""
+    if locator.startswith("iceberg://"):
+        return spark.read.format("iceberg").load(locator[len("iceberg://"):])
+    return spark.read.parquet(locator)
+
+
+def sub_target(out: str, name: str) -> str:
+    """Locator of output table `name` under the root `out`:
+    `iceberg://cat.db` -> `iceberg://cat.db.name` (Iceberg identifiers
+    take '.' separators; a '/' would make an unparseable multipart
+    name), a directory -> `<out>/name`."""
+    if out.startswith("iceberg://"):
+        return f"{out.rstrip('.')}.{name}"
+    return f"{out.rstrip('/')}/{name}"
+
+
 def write_output(df: DataFrame, target: str, mode: str = "append") -> None:
     """Violations / verdicts / manifest sink. Iceberg `writeTo(...).append()`
     on a cluster; parquet locally."""

@@ -232,8 +232,9 @@ def scaled_dataset(
     its exchange outright — the parquet stand-in for the Iceberg
     bucket(conv_id) layout SURVEY §1.3 names. The catalog entry is
     session-scoped (in-memory catalog), so each session re-registers the
-    existing files with one DDL; any failure in the bucketed path falls
-    back to the plain partitioned-parquet read (identical rows)."""
+    existing files with one DDL. A failure in the bucketed path raises:
+    the plain copy has the same rows, but not the layout that keeps
+    Exchange and Sort out of the flagship plan."""
     import os
 
     tdir = os.path.join(cache_dir, f"transcripts_n{base_turns}_s{seed}_x{factor}")
@@ -249,32 +250,29 @@ def scaled_dataset(
     cdf = spark.read.parquet(cdir)
     tname = f"tx_n{base_turns}_s{seed}_x{factor}_b{buckets}"
     bdir = os.path.join(cache_dir, tname)
-    try:
-        if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
-            src = spark.read.parquet(tdir)
-            (
-                src.repartition(buckets, "conv_id")
-                .write.mode("overwrite")
-                .bucketBy(buckets, "conv_id")
-                .sortBy("conv_id", "turn_idx", "ts", "role")
-                .option("path", bdir)
-                .format("parquet")
-                .saveAsTable(tname)
-            )
-        if not spark.catalog.tableExists(tname):
-            ddl = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}"
-                for f in spark.read.parquet(bdir).schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE `{tname}` ({ddl}) USING parquet "
-                f"CLUSTERED BY (conv_id) "
-                f"SORTED BY (conv_id, turn_idx, ts, role) "
-                f"INTO {buckets} BUCKETS LOCATION '{bdir}'"
-            )
-        return spark.table(tname), cdf
-    except Exception:  # bucketed path unavailable -> identical plain read
-        return spark.read.parquet(tdir), cdf
+    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
+        src = spark.read.parquet(tdir)
+        (
+            src.repartition(buckets, "conv_id")
+            .write.mode("overwrite")
+            .bucketBy(buckets, "conv_id")
+            .sortBy("conv_id", "turn_idx", "ts", "role")
+            .option("path", bdir)
+            .format("parquet")
+            .saveAsTable(tname)
+        )
+    if not spark.catalog.tableExists(tname):
+        ddl = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in spark.read.parquet(bdir).schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE `{tname}` ({ddl}) USING parquet "
+            f"CLUSTERED BY (conv_id) "
+            f"SORTED BY (conv_id, turn_idx, ts, role) "
+            f"INTO {buckets} BUCKETS LOCATION '{bdir}'"
+        )
+    return spark.table(tname), cdf
 
 
 def transcripts_dataset(

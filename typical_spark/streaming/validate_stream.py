@@ -26,7 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import ValidationPlan
+from typical_spark.plans.validation import ValidationPlan, explode_violations
 
 
 def streaming_validation(stream: DataFrame, plan: ValidationPlan) -> DataFrame:
@@ -47,10 +47,9 @@ def windowed_check_stats(
     Output (append mode after watermark passes):
       (window_start, window_end, check_id, n_violations)
     """
-    ann = plan.annotate(stream.withWatermark(ts_col, watermark), "_v")
-    exploded = ann.select(
-        F.col(ts_col), F.explode("_v").alias("v")
-    ).select(F.col(ts_col), F.col("v.check_id"))
+    exploded = explode_violations(
+        stream.withWatermark(ts_col, watermark), [ts_col], plan._violation_array()
+    ).select(ts_col, "check_id")
     agg = (
         exploded.groupBy(
             F.window(F.col(ts_col), window_duration).alias("w"), "check_id"
