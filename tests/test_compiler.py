@@ -249,3 +249,24 @@ def test_decimal_declared_dtype_raw_carrier_no_scale_rounding(spark):
                  tdf, with_message=False).collect()}
     assert not any(rid == 0 for rid, _ in got_t)
     assert (1, "number_range") in got_t
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+@pytest.mark.parametrize("check,expected", [
+    (NumberCheck(ge=0), {(2, "number_range")}),
+    (TimestampRangeCheck(min_ts=dt.datetime(2000, 1, 1)), {(3, "ts_range")}),
+], ids=["number", "ts"])
+def test_named_value_checks_on_string_field_under_both_ansi_modes(
+    spark, ansi, check, expected
+):
+    """A field declared `string` reads NumberCheck through a double view
+    and TimestampRangeCheck through a timestamp view, as nested checks do.
+    Unparseable values give no row under either ANSI setting; comparing
+    the raw string instead would ANSI-cast 'abc' and fail the job."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        got = run_check(spark, "string", [check], ["abc", "5", "-1", "1999-01-01"])
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert got == expected

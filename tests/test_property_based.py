@@ -12,7 +12,7 @@ import math
 import re
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -24,6 +24,7 @@ from typical_spark.specs import (
     NumberCheck,
     TableSpec,
     TextCheck,
+    UnionCheck,
 )
 
 # -- reference interpreter (per-value Python, independent of compiler) ----
@@ -63,6 +64,20 @@ def interpret(checks, value):
         elif isinstance(c, EnumCheck):
             if value not in c.values:
                 out.add("enum")
+    return out
+
+
+def wrapped(chk, as_union):
+    """`chk`, or `chk` as the one member of a UnionCheck (the nested path)."""
+    return UnionCheck(members=(chk,)) if as_union else chk
+
+
+def expected_ids(checks, value, as_union):
+    """interpret(), with a one-member union's row standing for any
+    violation of its member; not_null stays outside the union."""
+    out = interpret(checks, value)
+    if as_union and out - {"not_null"}:
+        out = (out & {"not_null"}) | {"union"}
     return out
 
 
@@ -117,19 +132,24 @@ def run_plan(spark, dtype, checks, values):
 
 
 @settings(max_examples=15, deadline=None)
-@given(chk=number_checks, values=int_values)
-def test_number_checks_match_interpreter(spark, chk, values):
-    got = run_plan(spark, "int", [NotNullCheck(), chk], values)
+@given(chk=number_checks, values=int_values, as_union=st.booleans())
+@example(chk=NumberCheck(ge=0, le=10), values=[None, -1, 5, 11], as_union=True)
+def test_number_checks_match_interpreter(spark, chk, values, as_union):
+    got = run_plan(spark, "int", [NotNullCheck(), wrapped(chk, as_union)], values)
     for i, v in enumerate(values):
-        assert got.get(i, set()) == interpret([NotNullCheck(), chk], v), (v, chk)
+        want = expected_ids([NotNullCheck(), chk], v, as_union)
+        assert got.get(i, set()) == want, (v, chk, as_union)
 
 
 @settings(max_examples=15, deadline=None)
-@given(chk=text_checks, values=text_values)
-def test_text_checks_match_interpreter(spark, chk, values):
-    got = run_plan(spark, "string", [chk], values)
+@given(chk=text_checks, values=text_values, as_union=st.booleans())
+@example(chk=TextCheck(min_length=2, max_length=4), values=[None, "a", "abc", "abcde"],
+         as_union=True)
+def test_text_checks_match_interpreter(spark, chk, values, as_union):
+    got = run_plan(spark, "string", [wrapped(chk, as_union)], values)
     for i, v in enumerate(values):
-        assert got.get(i, set()) == interpret([chk], v), (v, chk)
+        want = expected_ids([chk], v, as_union)
+        assert got.get(i, set()) == want, (v, chk, as_union)
 
 
 @settings(max_examples=10, deadline=None)

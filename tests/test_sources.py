@@ -1,12 +1,14 @@
 """Table-IO seam: output locators, and the bucketed scaled table that
 the flagship's Exchange-free plan depends on."""
 
+import collections
 import os
+import re
 
 import pytest
 from pyspark.errors import AnalysisException
 
-from typical_spark.sources.tables import sub_target
+from typical_spark.sources.tables import read_bucketed, sub_target, write_bucketed
 from typical_spark.sources.transcripts import scaled_dataset
 
 
@@ -40,3 +42,24 @@ def test_scaled_dataset_raises_when_bucketed_table_is_unreadable(
 
     with pytest.raises(AnalysisException):
         scaled_dataset(spark, n, factor, seed=seed, cache_dir=root, buckets=buckets)
+
+
+def test_write_bucketed_writes_one_file_per_bucket(spark):
+    """A 4-partition input written into 8 buckets holds one file per
+    bucket, not one per input partition: a bucketed scan reports its
+    declared sort order only when each bucket is a single file."""
+    try:
+        write_bucketed(
+            spark.range(0, 20000, numPartitions=4), "bk_files", ["id"],
+            n_buckets=8, sort_cols=["id"],
+        )
+        files = read_bucketed(spark, "bk_files").inputFiles()
+        # bucket files are named part-<task>-<uuid>_<bucket id>.c000...
+        per_bucket = collections.Counter(
+            re.search(r"_(\d{5})\.c\d{3}", os.path.basename(f)).group(1)
+            for f in files
+        )
+        assert len(per_bucket) == 8
+        assert set(per_bucket.values()) == {1}, per_bucket
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bk_files")

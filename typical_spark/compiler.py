@@ -14,6 +14,19 @@ NotNullCheck. Violation condition for a value-check C on column c is
 therefore `c IS NOT NULL AND NOT C(c)`, which keeps each predicate
 null-intolerant and pushdown-friendly.
 
+Each scalar check kind (NotNull, Number, Text, Enum, TimestampRange,
+Format, Decimal, Union) is defined once, by its branch of `_scalar_parts`:
+check_id, expected text, OK predicate, observed value and typed view
+(NULL = unparseable). The reference applies one constraint object to a
+field and to each element nested in it (array.py:144-161); here too both
+a named column (`compile_check`) and a nested value — union member,
+tagged case, array element, map value (`scalar_violation_pred`) — use
+that builder. The two call sites differ in exactly two ways:
+  1. an unparseable view gives no row on a named column (`coerce` or
+     `strict_type` reports it), but fails a nested value;
+  2. a named TextCheck emits separate `text_length` and `text_regex`
+     rows, a nested one is one predicate.
+
 Violation rows mirror ConstraintValueError's message format
 "{field}: value <{value!r}> fails constraints: {constraints}"
 (reference typic/constraints/common.py:169-173) as structured fields
@@ -22,7 +35,9 @@ Violation rows mirror ConstraintValueError's message format
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -52,13 +67,7 @@ _NUMERIC_DDLS = {
     "tinyint", "byte", "smallint", "short", "int", "integer",
     "bigint", "long", "float", "real", "double",
 }
-
-
-def _is_numeric_ddl(ddl: str | None) -> bool:
-    if ddl is None:
-        return False
-    d = ddl.strip().lower()
-    return d in _NUMERIC_DDLS or d.startswith("decimal")
+_TEMPORAL_DDLS = {"timestamp", "timestamp_ntz", "timestamp_ltz", "date"}
 
 
 def _widened_decimal_ddl(ddl: str) -> str:
@@ -79,6 +88,46 @@ def _widened_decimal_ddl(ddl: str) -> str:
     return f"decimal(38,{scale})"
 
 
+def _number_view(col: Column, ddl: str | None) -> Column:
+    """The value as a number. A declared numeric type compares natively
+    (identity-folded on a typed carrier: a blanket double view loses
+    exactness above 2^53, so `ge=2**53+2` would pass 2**53+1); a declared
+    decimal reads through its widened scale; anything else through
+    double. Always a try_cast: strict mode checks the RAW carrier, which
+    may be a string, and a bare compare would ANSI-cast 'abc' and crash
+    the job — try_cast gives NULL instead."""
+    d = (ddl or "").strip().lower()
+    if d.startswith("decimal"):
+        return col.try_cast(_widened_decimal_ddl(ddl))
+    return col.try_cast(ddl if d in _NUMERIC_DDLS else "double")
+
+
+def _timestamp_view(col: Column, ddl: str | None) -> Column:
+    """The value as a timestamp: the declared temporal type, else
+    `timestamp`; a try_cast for the same reason as `_number_view`."""
+    known = ddl is not None and ddl.strip().lower() in _TEMPORAL_DDLS
+    return col.try_cast(ddl if known else "timestamp")
+
+
+def _in_range(x: Column, lo: int | None, hi: int | None) -> Column | None:
+    """`lo <= x <= hi` for a length or size (lo defaults to 0, no hi =
+    unbounded); None when neither bound is set."""
+    if lo is None and hi is None:
+        return None
+    ok = x >= F.lit(lo or 0)
+    if hi is not None:
+        ok = ok & (x <= F.lit(hi))
+    return ok
+
+
+def _anchored(pattern: str) -> str:
+    """Anchor a regex at the start (re.match semantics, reference
+    text.py:41-42), after a leading `(?i)` flag."""
+    flag = "(?i)" if pattern.startswith("(?i)") else ""
+    body = pattern[len(flag):]
+    return flag + (body if body.startswith("^") else "^" + body)
+
+
 def _array_elem_ddl(ddl: str | None) -> str | None:
     """'array<X>' -> 'X' (None when the ddl isn't a plain array)."""
     if ddl is None:
@@ -89,42 +138,40 @@ def _array_elem_ddl(ddl: str | None) -> str | None:
     return None
 
 
-def scalar_violation_pred(
-    chk: Check, col: Column, value_ddl: str | None = None
-) -> Column:
-    """Violation predicate for a scalar check against an arbitrary value
-    expression (used for array elements via higher-order lambdas, where the
-    value is a lambda variable, not a named column). Null short-circuits
-    every check except NotNull (reference common.py:272-287).
+class _Parts(NamedTuple):
+    """One scalar check's meaning against one value.
 
-    value_ddl: the value's KNOWN Spark type, when the caller has one
-    (array element type, map value type, the named column's declared
-    dtype). Known-numeric/timestamp values compare natively — a blanket
-    try_cast('double') loses exactness above 2^53 on bigint and at high
-    decimal scale, so `ge=2**53+2` would silently pass 2**53+1."""
-    nn = col.isNotNull()
+    ok: true iff a non-null value passes; None for NotNull, the one check
+    a NULL value fails (NULL short-circuits every other check, reference
+    common.py:272-287).
+    observed: what a violation row shows; None = the value as a string.
+    view: the typed view the check reads, NULL when the value does not
+    parse as that type.
+    """
+
+    check_id: str
+    expected: str
+    ok: Column | None
+    observed: Column | None = None
+    view: Column | None = None
+
+
+_SCALAR_CHECKS = (
+    NotNullCheck, NumberCheck, TextCheck, EnumCheck, TimestampRangeCheck,
+    FormatCheck, DecimalCheck, UnionCheck,
+)
+
+
+def _scalar_parts(chk: Check, col: Column, value_ddl: str | None) -> list[_Parts]:
+    """The one definition of every scalar check kind, against the value
+    `col` whose declared Spark type is `value_ddl` (None = unknown). A
+    TextCheck has one part per configured property (length, regex); every
+    other kind has exactly one."""
+    cid, desc = chk.check_id(), chk.describe()
     if isinstance(chk, NotNullCheck):
-        return col.isNull()
+        return [_Parts(cid, desc, None, F.lit(None).cast("string"))]
     if isinstance(chk, NumberCheck):
-        # Untyped value expressions (union members, tagged cases, map
-        # values, array elements over string columns) try_cast first: a
-        # bare `col >= lit(0)` would ANSI-cast the string and crash the
-        # job on 'abc' — the same hazard compile_check's try_cast handles
-        # for named columns. Unparseable -> the member is violated, never
-        # a crash. Values with a DECLARED numeric type try_cast to that
-        # type instead of double: identity-folded when the carrier is
-        # already typed (exact comparison, no 2^53 rounding), still NULL
-        # on junk when the carrier is raw (strict mode runs checks on
-        # the RAW column, which may be a string regardless of dtype —
-        # a bare `col` here would reintroduce the ANSI crash).
-        if value_ddl is not None and value_ddl.strip().lower().startswith("decimal"):
-            # widened scale, NOT the declared decimal: see
-            # _widened_decimal_ddl (raw '1.5' vs decimal(10,0) rounds)
-            num = col.try_cast(_widened_decimal_ddl(value_ddl))
-        elif _is_numeric_ddl(value_ddl):
-            num = col.try_cast(value_ddl)
-        else:
-            num = col.try_cast("double")
+        num = _number_view(col, value_ddl)
         ok = F.lit(True)
         if chk.gt is not None:
             ok = ok & (num > F.lit(chk.gt))
@@ -136,46 +183,63 @@ def scalar_violation_pred(
             ok = ok & (num <= F.lit(chk.le))
         if chk.multiple_of is not None:
             ok = ok & (num % F.lit(chk.multiple_of) == 0)
-        return nn & (num.isNull() | ~ok)
-    if isinstance(chk, TextCheck):
-        ok = F.lit(True)
-        if chk.min_length is not None:
-            ok = ok & (F.length(col) >= F.lit(chk.min_length))
-        if chk.max_length is not None:
-            ok = ok & (F.length(col) <= F.lit(chk.max_length))
-        if chk.regex is not None:
-            pat = chk.regex if chk.regex.startswith("^") else "^" + chk.regex
-            ok = ok & col.rlike(pat)
-        return nn & ~ok
-    if isinstance(chk, EnumCheck):
-        return nn & ~col.isin(list(chk.values))
-    if isinstance(chk, FormatCheck):
-        pat = STRING_FORMATS[chk.format]
-        return nn & ~col.rlike("^" + pat if not pat.startswith("(?i)") else
-                               "(?i)^" + pat[4:])
-    if isinstance(chk, DecimalCheck):
-        dec = col.try_cast(f"decimal({chk.max_digits},{chk.decimal_places})")
-        return nn & dec.isNull()
-    if isinstance(chk, UnionCheck):
-        viol = F.lit(True)
-        for m in chk.members:
-            viol = viol & scalar_violation_pred(m, col, value_ddl)
-        return nn & viol
+        return [_Parts(cid, desc, ok, view=num)]
     if isinstance(chk, TimestampRangeCheck):
-        # same ANSI hazard as NumberCheck: try_cast (to the declared
-        # temporal type when known — identity-folded on typed carriers,
-        # NULL on raw junk), unparseable = violated
-        known_ts = value_ddl is not None and value_ddl.strip().lower() in (
-            "timestamp", "timestamp_ntz", "timestamp_ltz", "date"
-        )
-        ts = col.try_cast(value_ddl) if known_ts else col.try_cast("timestamp")
+        ts = _timestamp_view(col, value_ddl)
         ok = F.lit(True)
         if chk.min_ts is not None:
             ok = ok & (ts >= F.lit(chk.min_ts))
         if chk.max_ts is not None:
             ok = ok & (ts < F.lit(chk.max_ts))
-        return nn & (ts.isNull() | ~ok)
+        return [_Parts(cid, desc, ok, view=ts)]
+    if isinstance(chk, TextCheck):
+        out = []
+        ln = F.length(col)
+        ok = _in_range(ln, chk.min_length, chk.max_length)
+        if ok is not None:
+            out.append(_Parts("text_length",
+                              f"{chk.min_length or 0} <= length <= {chk.max_length}",
+                              ok, ln.cast("string")))
+        if chk.regex is not None:
+            pat = _anchored(chk.regex)
+            out.append(_Parts("text_regex", f"matches '{pat}'", col.rlike(pat)))
+        return out
+    if isinstance(chk, EnumCheck):
+        return [_Parts(cid, desc, col.isin(list(chk.values)))]
+    if isinstance(chk, FormatCheck):
+        return [_Parts(cid, desc, col.rlike(_anchored(STRING_FORMATS[chk.format])))]
+    if isinstance(chk, DecimalCheck):
+        dec = col.try_cast(f"decimal({chk.max_digits},{chk.decimal_places})")
+        return [_Parts(cid, desc, dec.isNotNull())]
+    if isinstance(chk, UnionCheck):
+        ok = F.lit(False)
+        for m in chk.members:
+            ok = ok | ~scalar_violation_pred(m, col, value_ddl)
+        return [_Parts(cid, desc, ok)]
     raise TypeError(f"not a scalar check: {type(chk).__name__}")
+
+
+def scalar_violation_pred(
+    chk: Check, col: Column, value_ddl: str | None = None
+) -> Column:
+    """Violation predicate for a scalar check on a nested value: a union
+    member, a tagged case, an array element or a map value (a lambda
+    variable inside a higher-order function, not a named column).
+    value_ddl: the value's declared Spark type when the caller knows it
+    (array element type, map value type, the field's dtype)."""
+    parts = _scalar_parts(chk, col, value_ddl)
+    if any(p.ok is None for p in parts):
+        return col.isNull()
+    # Nested rule 2: a TextCheck's length and regex parts are one predicate.
+    oks = [p.ok for p in parts]
+    ok = functools.reduce(Column.__and__, oks) if oks else F.lit(True)
+    bad = ~ok
+    for p in parts:
+        if p.view is not None:
+            # Nested rule 1: an unparseable value fails the member or
+            # element (there is no coerce/strict_type row to report it).
+            bad = p.view.isNull() | bad
+    return col.isNotNull() & bad
 
 
 @dataclass(frozen=True)
@@ -191,6 +255,15 @@ class CompiledCheck:
     expected: str
     violation_cond: Column
     observed: Column
+
+
+def _compiled(column: str, check_id: str, expected: str, cond: Column,
+              observed: Column | None = None) -> CompiledCheck:
+    """The one CompiledCheck constructor; `observed` defaults to the
+    column's value as a string."""
+    if observed is None:
+        observed = F.col(column).cast("string")
+    return CompiledCheck(column, check_id, expected, cond, observed)
 
 
 def _value_expr(fs: FieldSpec, base: Column | None = None) -> Column:
@@ -223,93 +296,23 @@ def compile_check(fs: FieldSpec, chk: Check, value: Column) -> list[CompiledChec
 
     def cc(cond: Column, check_id: str | None = None, expected: str | None = None,
            observed: Column | None = None) -> CompiledCheck:
-        return CompiledCheck(
-            column=name,
-            check_id=check_id or chk.check_id(),
-            expected=expected or chk.describe(),
-            violation_cond=cond,
-            observed=observed if observed is not None else obs_str,
-        )
+        return _compiled(name, check_id or chk.check_id(), expected or chk.describe(),
+                         cond, obs_str if observed is None else observed)
 
-    if isinstance(chk, NotNullCheck):
-        return [cc(col.isNull(), observed=F.lit(None).cast("string"))]
-
-    if isinstance(chk, NumberCheck):
-        # Compare on a try_cast view of the column: identity (folded away
-        # by Catalyst) when the column already has the declared type, NULL
-        # for raw values that don't parse — which matches the non-ANSI
-        # implicit-cast-to-NULL semantics, so the predicate never throws
-        # under spark.sql.ansi.enabled=true (strict mode range-checks the
-        # RAW column, which may be a string; 'zzz' must flag strict_type,
-        # not crash the job).
-        if fs.dtype.strip().lower().startswith("decimal"):
-            # widened scale for declared decimals: strict mode runs this
-            # on the RAW carrier, and a string->decimal cast rounds to
-            # the target scale ('1.5' -> decimal(10,0) = 2), so bounds
-            # would compare against the rounded value
-            num = col.try_cast(_widened_decimal_ddl(fs.dtype))
-        else:
-            num = col.try_cast(fs.dtype)
-        preds = []
-        if chk.gt is not None:
-            preds.append(num > F.lit(chk.gt))
-        if chk.ge is not None:
-            preds.append(num >= F.lit(chk.ge))
-        if chk.lt is not None:
-            preds.append(num < F.lit(chk.lt))
-        if chk.le is not None:
-            preds.append(num <= F.lit(chk.le))
-        if chk.multiple_of is not None:
-            preds.append(num % F.lit(chk.multiple_of) == 0)
-        # degenerate NumberCheck() with no bound set: vacuously ok (the
-        # scalar_violation_pred path already behaved this way; an
-        # unguarded preds[0] raised IndexError here)
-        ok = F.lit(True)
-        for p in preds:
-            ok = ok & p
-        return [cc(nn & ~ok)]
-
-    if isinstance(chk, TextCheck):
-        out = []
-        ln = F.length(col)
-        if chk.min_length is not None or chk.max_length is not None:
-            lo = chk.min_length if chk.min_length is not None else 0
-            ok = ln >= F.lit(lo)
-            if chk.max_length is not None:
-                ok = ok & (ln <= F.lit(chk.max_length))
-            out.append(cc(nn & ~ok, check_id="text_length",
-                          expected=f"{lo} <= length <= {chk.max_length}",
-                          observed=ln.cast("string")))
-        if chk.regex is not None:
-            # anchored-at-start match (re.match), reference text.py:41-42
-            pat = chk.regex if chk.regex.startswith("^") else "^" + chk.regex
-            out.append(cc(nn & ~col.rlike(pat), check_id="text_regex",
-                          expected=f"matches '{pat}'"))
-        return out
-
-    if isinstance(chk, EnumCheck):
-        return [cc(nn & ~col.isin(list(chk.values)))]
-
-    if isinstance(chk, TimestampRangeCheck):
-        # try_cast view for the same ANSI-safety reason as NumberCheck:
-        # a malformed raw string must yield NULL (no violation row from
-        # this check; strict_type catches it), never throw.
-        ts = col.try_cast(fs.dtype)
-        ok = F.lit(True)
-        if chk.min_ts is not None:
-            ok = ok & (ts >= F.lit(chk.min_ts))
-        if chk.max_ts is not None:
-            ok = ok & (ts < F.lit(chk.max_ts))
-        return [cc(nn & ~ok)]
+    if isinstance(chk, _SCALAR_CHECKS):
+        # Named rule 1: an unparseable value leaves `ok` NULL, so the
+        # check emits no row; `coerce` or `strict_type` reports it.
+        # Named rule 2: each TextCheck part (text_length, text_regex) is
+        # its own row.
+        return [cc(col.isNull() if p.ok is None else nn & ~p.ok,
+                   p.check_id, p.expected, p.observed)
+                for p in _scalar_parts(chk, col, fs.dtype)]
 
     if isinstance(chk, ArrayCheck):
         out = []
         sz = F.size(col)
-        if chk.min_items is not None or chk.max_items is not None:
-            lo = chk.min_items if chk.min_items is not None else 0
-            ok = sz >= F.lit(lo)
-            if chk.max_items is not None:
-                ok = ok & (sz <= F.lit(chk.max_items))
+        ok = _in_range(sz, chk.min_items, chk.max_items)
+        if ok is not None:
             out.append(cc(nn & ~ok, check_id="array_size",
                           expected=chk.describe(), observed=sz.cast("string")))
         if chk.reject_dupes:
@@ -322,13 +325,10 @@ def compile_check(fs: FieldSpec, chk: Check, value: Column) -> list[CompiledChec
         out = []
         keys = F.map_keys(col)
         sz = F.size(col)
-        if chk.min_items is not None or chk.max_items is not None:
-            lo = chk.min_items if chk.min_items is not None else 0
-            ok = sz >= F.lit(lo)
-            if chk.max_items is not None:
-                ok = ok & (sz <= F.lit(chk.max_items))
+        ok = _in_range(sz, chk.min_items, chk.max_items)
+        if ok is not None:
             out.append(cc(nn & ~ok, check_id="map_size",
-                          expected=f"{lo} <= size <= {chk.max_items}",
+                          expected=f"{chk.min_items or 0} <= size <= {chk.max_items}",
                           observed=sz.cast("string")))
         if chk.required_keys:
             # valkeys ⊇ required (mapping.py:228-235)
@@ -347,7 +347,7 @@ def compile_check(fs: FieldSpec, chk: Check, value: Column) -> list[CompiledChec
                           expected=f"no keys outside {sorted(chk.defined_keys)}",
                           observed=F.to_json(extra)))
         if chk.key_regex is not None:
-            pat = chk.key_regex if chk.key_regex.startswith("^") else "^" + chk.key_regex
+            pat = _anchored(chk.key_regex)
             bad = F.filter(keys, lambda k: ~k.rlike(pat))
             out.append(cc(nn & (F.size(bad) > 0), check_id="map_key_pattern",
                           expected=f"all keys match '{pat}'",
@@ -376,44 +376,23 @@ def compile_check(fs: FieldSpec, chk: Check, value: Column) -> list[CompiledChec
 
     if isinstance(chk, TaggedCheck):
         tag = F.col(chk.tag_column)
-        out = []
         known_vals = [v for v, _ in chk.cases]
-        for tag_value, inner in chk.cases:
-            cond = tag.eqNullSafe(F.lit(tag_value)) & scalar_violation_pred(
-                inner, col, fs.dtype
-            )
-            out.append(
-                CompiledCheck(
-                    column=name,
-                    check_id=f"tagged[{chk.tag_column}={tag_value}]_{inner.check_id()}",
-                    expected=f"when {chk.tag_column}={tag_value!r}: {inner.describe()}",
-                    violation_cond=cond,
-                    observed=obs_str,
-                )
-            )
+        out = [
+            cc(tag.eqNullSafe(F.lit(tag_value)) & scalar_violation_pred(inner, col, fs.dtype),
+               check_id=f"tagged[{chk.tag_column}={tag_value}]_{inner.check_id()}",
+               expected=f"when {chk.tag_column}={tag_value!r}: {inner.describe()}")
+            for tag_value, inner in chk.cases
+        ]
         if chk.else_check is not None:
-            cond = ~tag.isin(known_vals) & scalar_violation_pred(
-                chk.else_check, col, fs.dtype
-            )
-            out.append(
-                CompiledCheck(
-                    column=name,
-                    check_id=f"tagged[{chk.tag_column}=*]_{chk.else_check.check_id()}",
-                    expected=f"otherwise: {chk.else_check.describe()}",
-                    violation_cond=cond,
-                    observed=obs_str,
-                )
-            )
+            out.append(cc(
+                ~tag.isin(known_vals) & scalar_violation_pred(chk.else_check, col, fs.dtype),
+                check_id=f"tagged[{chk.tag_column}=*]_{chk.else_check.check_id()}",
+                expected=f"otherwise: {chk.else_check.describe()}"))
         if chk.unknown_tag_violates:
-            out.append(
-                CompiledCheck(
-                    column=chk.tag_column,
-                    check_id=f"tagged[{chk.tag_column}]_unknown_tag",
-                    expected=f"{chk.tag_column} in {known_vals}",
-                    violation_cond=tag.isNotNull() & ~tag.isin(known_vals),
-                    observed=tag.cast("string"),
-                )
-            )
+            out.append(_compiled(
+                chk.tag_column, f"tagged[{chk.tag_column}]_unknown_tag",
+                f"{chk.tag_column} in {known_vals}",
+                tag.isNotNull() & ~tag.isin(known_vals)))
         return out
 
     if isinstance(chk, ArrayElementsCheck):
@@ -428,9 +407,6 @@ def compile_check(fs: FieldSpec, chk: Check, value: Column) -> list[CompiledChec
         failing = F.filter(col, elem_viol)
         return [cc(nn & (F.size(failing) > 0),
                    observed=F.size(failing).cast("string"))]
-
-    if isinstance(chk, (FormatCheck, DecimalCheck, UnionCheck)):
-        return [cc(scalar_violation_pred(chk, col, fs.dtype))]
 
     if isinstance(chk, CustomCheck):
         from typical_spark.specs import get_custom_check
@@ -563,35 +539,22 @@ def compile_table_spec(spec: TableSpec, mode: str = "coerce") -> "ValidationPlan
     for fs in spec.fields:
         ce = coercion_expr(fs)
         if ce is not None:
-            src = F.col(fs.name)
+            violated = F.col(fs.name).isNotNull() & ce.isNull()
             if mode == "coerce":
-                coercions[fs.name] = ce
                 # transmute failure -> `coerce` violation (the distributed
                 # analog of transmute raising; reference des.py builders)
-                compiled.append(
-                    CompiledCheck(
-                        column=fs.name,
-                        check_id="coerce",
-                        expected=f"coercible to {fs.dtype} (from {fs.coerce_from})",
-                        violation_cond=src.isNotNull() & ce.isNull(),
-                        observed=src.cast("string"),
-                    )
-                )
+                coercions[fs.name] = ce
+                check_id = "coerce"
+                expected = f"coercible to {fs.dtype} (from {fs.coerce_from})"
             else:
                 # strict: validate, never mutate (typic/strict.py: the
                 # deserializer IS the validator, resolver.py:521-524) —
                 # unparseable values violate, parseable ones pass, and the
                 # column is NOT repaired (no projection emitted).
-                compiled.append(
-                    CompiledCheck(
-                        column=fs.name,
-                        check_id="strict_type",
-                        expected=f"parseable as {fs.dtype} (strict: not repaired)",
-                        violation_cond=src.isNotNull() & ce.isNull(),
-                        observed=src.cast("string"),
-                    )
-                )
+                check_id = "strict_type"
+                expected = f"parseable as {fs.dtype} (strict: not repaired)"
                 ce = None  # value checks run on the raw column in strict
+            compiled.append(_compiled(fs.name, check_id, expected, violated))
         val = _value_expr(fs, base=ce)
         # only record a transform projection if it's not the bare column.
         # The stored expression starts from the CURRENT column (not the

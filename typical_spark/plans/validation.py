@@ -69,15 +69,6 @@ class ValidationPlan:
 
     # ---- projections -------------------------------------------------
 
-    def schema_violations(self, df: DataFrame, total: bool = False) -> list[dict]:
-        """Structural spec-vs-schema diff (missing/extra/mis-typed
-        columns), driver-side, before any task runs — fail fast when the
-        table can't even SHAPE-satisfy the spec. See
-        schema.schema_conformance."""
-        from typical_spark.schema import schema_conformance
-
-        return schema_conformance(df, self.spec, total=total)
-
     def coerce(self, df: DataFrame) -> DataFrame:
         """Apply coercion projections (the distributed transmute). Columns
         listed in `coercions` are replaced by their repaired value; original

@@ -138,8 +138,13 @@ def write_bucketed(
     operator from a shuffle into a local sort.
 
     Uses saveAsTable (bucket metadata lives in the session catalog/
-    warehouse — plain .parquet(path) cannot record bucketing)."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
+    warehouse — plain .parquet(path) cannot record bucketing). The input
+    is first hash-partitioned by the bucket columns into n_buckets
+    partitions, so each bucket is written by one task as one file: a
+    bucketed scan can report the declared sort order only then."""
+    w = df.repartition(n_buckets, *bucket_cols).write.mode(mode).bucketBy(
+        n_buckets, *bucket_cols
+    )
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.format("parquet").saveAsTable(table)
