@@ -4,6 +4,7 @@ the flagship's Exchange-free plan depends on."""
 import collections
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -63,3 +64,24 @@ def test_write_bucketed_writes_one_file_per_bucket(spark):
         assert set(per_bucket.values()) == {1}, per_bucket
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_files")
+
+
+def test_scaled_dataset_raises_when_a_bucket_holds_two_files(spark, tmp_path):
+    """Reading the bucketed table checks one file per bucket id: a
+    bucket split over two files scans unsorted, so the Exchange-free
+    flagship plan would silently gain a Sort."""
+    n, seed, factor, buckets = 300, 5, 1, 2
+    root = str(tmp_path)
+    tname = f"tx_n{n}_s{seed}_x{factor}_b{buckets}"
+    try:
+        scaled_dataset(spark, n, factor, seed=seed, cache_dir=root, buckets=buckets)
+        bdir = os.path.join(root, tname)
+        name = next(f for f in sorted(os.listdir(bdir)) if f.endswith(".parquet"))
+        bucket = int(re.search(r"_(\d{5})\.c\d{3}", name).group(1))
+        copy = f"part-00099-copy_{bucket:05d}.c000.snappy.parquet"
+        shutil.copy(os.path.join(bdir, name), os.path.join(bdir, copy))
+
+        with pytest.raises(RuntimeError, match=f"bucket {bucket} holds 2 files"):
+            scaled_dataset(spark, n, factor, seed=seed, cache_dir=root, buckets=buckets)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tname}")

@@ -313,6 +313,60 @@ def test_merge_keyed_upsert_idempotent(spark, tmp_path):
     assert got == [(1, 0, "a"), (1, 1, "b"), (2, 0, "C2"), (3, 0, "d")]
 
 
+@pytest.mark.parametrize("fault", ["writing_new_copy", "moving_new_copy_in"])
+def test_merge_keyed_crash_keeps_prior_rows(spark, tmp_path, monkeypatch, fault):
+    """A crash while the new copy is written, or at the rename that
+    moves it in, must not lose the table's prior rows: they survive in
+    the target or in its recoverable aside copy, and the redelivered
+    batch then merges onto them (prior ∪ batch), leaving no sibling
+    directory behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from typical_spark.sources.tables import merge_keyed
+
+    t = str(tmp_path / "tbl")
+    schema = "k long, v string"
+    prior = [(1, "a"), (2, "b")]
+    merge_keyed(spark.createDataFrame(prior, schema), t, ["k"])
+    batch = spark.createDataFrame([(2, "B"), (3, "c")], schema)
+
+    if fault == "writing_new_copy":
+        def broken_write(self, path, *args, **kwargs):
+            os.makedirs(path, exist_ok=True)  # a partial copy lands
+            with open(os.path.join(path, "part-00000.parquet"), "wb") as fh:
+                fh.write(b"PAR1 torn")
+            raise OSError("injected crash while writing the new copy")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", broken_write)
+    else:
+        rename, replace = os.rename, os.replace
+
+        def crash_moving_in(real):
+            def move(src, dst, *args, **kwargs):
+                if os.path.abspath(dst) == t:
+                    raise OSError("injected crash moving the new copy in")
+                return real(src, dst, *args, **kwargs)
+            return move
+
+        monkeypatch.setattr(os, "rename", crash_moving_in(rename))
+        monkeypatch.setattr(os, "replace", crash_moving_in(replace))
+    with pytest.raises(OSError, match="injected crash"):
+        merge_keyed(batch, t, ["k"])
+    monkeypatch.undo()
+
+    survivors = [
+        p for p in (os.path.join(tmp_path, n) for n in os.listdir(tmp_path))
+        if os.path.isdir(p) and os.path.exists(os.path.join(p, "_SUCCESS"))
+        and sorted(map(tuple, spark.read.parquet(p).collect())) == prior
+    ]
+    assert survivors, os.listdir(tmp_path)
+
+    merge_keyed(batch, t, ["k"])  # redelivery
+    got = sorted(map(tuple, spark.read.parquet(t).collect()))
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+    assert os.listdir(tmp_path) == ["tbl"]
+
+
 def test_incremental_minhash_redelivery_exactly_once_state(spark, tmp_path):
     """upsert=True (VERDICT r4 item 7): a fully REDELIVERED stream —
     same micro-batches, fresh checkpoint, index and sinks already
@@ -502,8 +556,8 @@ def test_drift_monitor_compact_state(spark, tmp_path):
     verdict matches an uncompacted twin."""
     import numpy as np
 
+    from typical_spark.operators.drift import TDigest
     from typical_spark.streaming.drift_monitor import (
-        _digest_of,
         compact_state,
         drift_stream_monitor,
         reference_digests,
@@ -551,14 +605,14 @@ def test_drift_monitor_compact_state(spark, tmp_path):
 
     main = tmp_path / "main"
     run_batches(main, [b1, b2])
-    before = _digest_of(
+    before = TDigest.merge_rows(
         spark.read.parquet(str(main / "state")).collect()
     ).quantile(np.asarray([0.1, 0.5, 0.9]))
     n_rows = compact_state(spark, str(main / "state"), keep_last=1)
     state = spark.read.parquet(str(main / "state")).collect()
     assert n_rows == len(state) == 2  # (-1, a) + (1, a)
     assert {r["batch_id"] for r in state} == {-1, 1}
-    after = _digest_of(state).quantile(np.asarray([0.1, 0.5, 0.9]))
+    after = TDigest.merge_rows(state).quantile(np.asarray([0.1, 0.5, 0.9]))
     assert np.all(np.abs(before - after) < 0.05)
 
     run_batches(main, [b3])  # resume: only b3 is a new micro-batch
@@ -591,7 +645,7 @@ def test_compact_state_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch
     rename = os.rename
 
     def crash_before_move_in(src, dst):
-        if src.endswith(".compact_tmp"):
+        if src.endswith(".swap_tmp"):
             raise OSError("injected crash between the two renames")
         rename(src, dst)
 
@@ -600,12 +654,12 @@ def test_compact_state_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch
         compact_state(spark, state, keep_last=1)
     monkeypatch.undo()
     assert not os.path.exists(state)
-    assert os.path.isdir(state + ".compact_old")
+    assert os.path.isdir(state + ".swap_old")
 
     # the next call recovers the whole old state, then compacts it
     assert compact_state(spark, state, keep_last=1) == 2
     got = {r["batch_id"]: r for r in spark.read.parquet(state).collect()}
     assert set(got) == {-1, 2} and got[-1]["n"] == 6.0
     assert str(got[2]) == before[2]
-    assert not os.path.exists(state + ".compact_old")
-    assert not os.path.exists(state + ".compact_tmp")
+    assert not os.path.exists(state + ".swap_old")
+    assert not os.path.exists(state + ".swap_tmp")

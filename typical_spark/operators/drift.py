@@ -34,6 +34,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the quantiles of the reference digest at which KS distances are probed
+PROBE_QUANTILES = (0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95)
+
 
 # ---------------------------------------------------------------------------
 # numpy t-digest (batch / merging form, k1 scale)
@@ -113,6 +116,34 @@ class TDigest:
         probs = cum / self.total_weight
         return np.interp(x, self.means, probs, left=0.0, right=1.0)
 
+    @classmethod
+    def from_row(cls, row) -> "TDigest":
+        """Decode a sketch row ({n, means, weights}, the
+        `partition_digests` and drift-monitor state format)."""
+        return cls(np.array(row["means"]), np.array(row["weights"]))
+
+    @classmethod
+    def merge_rows(cls, rows) -> "TDigest":
+        """One digest from sketch rows: decode each, then `merge_all`."""
+        return cls.merge_all([cls.from_row(r) for r in rows])
+
+    def to_row(self) -> dict:
+        """Encode as a sketch row's {n, means, weights} fields."""
+        return {
+            "n": self.total_weight,
+            "means": self.means.tolist(),
+            "weights": self.weights.tolist(),
+        }
+
+
+def ks_at_probes(d: TDigest, ref: TDigest) -> float:
+    """KS-style distance of `d` from `ref`: max |d.cdf(p) - ref.cdf(p)|
+    over p = ref.quantile(PROBE_QUANTILES); NaN when `d` is empty."""
+    if not len(d.means):
+        return float("nan")
+    probes = ref.quantile(np.asarray(PROBE_QUANTILES))
+    return float(np.nanmax(np.abs(d.cdf(probes) - ref.cdf(probes))))
+
 
 # ---------------------------------------------------------------------------
 # Spark two-phase drift operator
@@ -123,29 +154,16 @@ _SKETCH_SCHEMA = (
 )
 
 
-def partition_digests(
-    df: DataFrame,
-    value_col,
-    group_col,
-    compression: int = 100,
-) -> DataFrame:
+def partition_digests(df: DataFrame, value_col, group_col) -> DataFrame:
     """Phase 1: one t-digest sketch per group (Arrow-batched grouped map)."""
-    value_name = value_col if isinstance(value_col, str) else "value"
     gdf = df.select(
         F.col(group_col).cast("string").alias("group_id"),
         F.col(value_col).cast("double").alias("__v"),
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = TDigest.from_values(pdf["__v"].to_numpy(), compression)
-        return pd.DataFrame(
-            {
-                "group_id": [pdf["group_id"].iloc[0]],
-                "n": [d.total_weight],
-                "means": [d.means.tolist()],
-                "weights": [d.weights.tolist()],
-            }
-        )
+        d = TDigest.from_values(pdf["__v"].to_numpy())
+        return pd.DataFrame([{"group_id": pdf["group_id"].iloc[0], **d.to_row()}])
 
     return gdf.groupBy("group_id").applyInPandas(build, _SKETCH_SCHEMA)
 
@@ -154,8 +172,6 @@ def drift_report(
     df: DataFrame,
     value_col: str,
     group_col: str,
-    compression: int = 100,
-    probe_quantiles=(0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95),
     threshold: float = 0.1,
 ) -> pd.DataFrame:
     """Per-group KS-style drift vs the global distribution.
@@ -164,26 +180,20 @@ def drift_report(
     (group_id, n, ks_stat, drifted) — plus the probe quantile values under
     q_* columns for inspection. Deterministic for a fixed input.
     """
-    sketches = partition_digests(df, value_col, group_col, compression).collect()
-    per_group = {
-        r["group_id"]: TDigest(
-            np.array(r["means"]), np.array(r["weights"]), compression
-        )
-        for r in sketches
-    }
-    global_d = TDigest.merge_all(list(per_group.values()), compression)
-    probes = global_d.quantile(np.asarray(probe_quantiles))
+    sketches = partition_digests(df, value_col, group_col).collect()
+    per_group = {r["group_id"]: TDigest.from_row(r) for r in sketches}
+    global_d = TDigest.merge_all(list(per_group.values()))
     rows = []
     for gid in sorted(per_group):
         d = per_group[gid]
-        ks = float(np.nanmax(np.abs(d.cdf(probes) - global_d.cdf(probes)))) if len(d.means) else float("nan")
+        ks = ks_at_probes(d, global_d)
         row = {
             "group_id": gid,
             "n": d.total_weight,
             "ks_stat": ks,
             "drifted": bool(ks > threshold),
         }
-        for q, v in zip(probe_quantiles, d.quantile(np.asarray(probe_quantiles))):
+        for q, v in zip(PROBE_QUANTILES, d.quantile(np.asarray(PROBE_QUANTILES))):
             row[f"q_{q}"] = float(v)
         rows.append(row)
     return pd.DataFrame(rows)
@@ -245,6 +255,39 @@ def ks_two_sample(
     )
 
 
+def _group_values(df: DataFrame, value_col: str, group_col: str) -> DataFrame:
+    """The non-NULL values as (group_id string, _v double) — the input
+    of the exact per-group drift statistics."""
+    return df.where(F.col(value_col).isNotNull()).select(
+        F.col(group_col).cast("string").alias("group_id"),
+        F.col(value_col).cast("double").alias("_v"),
+    )
+
+
+def _grid_vs_global(cells: DataFrame, axis: DataFrame, key: str) -> DataFrame:
+    """Every group against every `key` of the global `axis`, with the
+    group's count of that key (`_c`, NULL when the group never emits
+    it), the group's total `n_group` and the grand total `_n_all`:
+    `cells` holds (group_id, key, _c). A group's statistic must be
+    evaluated at keys it lacks, hence the grid and the left join."""
+    totals = cells.groupBy("group_id").agg(F.sum("_c").alias("n_group"))
+    grand = cells.groupBy().agg(F.sum("_c").alias("_n_all"))
+    grid = axis.crossJoin(F.broadcast(totals)).crossJoin(F.broadcast(grand))
+    return grid.join(cells, ["group_id", key], "left")
+
+
+def _equal_width_bin(n_bins: int):
+    """Equal-width bin (0 .. n_bins-1) of `_v` over the extent [lo, hi];
+    values outside the extent clamp into the edge bins."""
+    b = F.lit(int(n_bins))
+    width = (F.col("hi") - F.col("lo")) / b
+    # degenerate extent (all one value): everything lands in bin 0
+    raw = F.when(
+        width > 0, F.floor((F.col("_v") - F.col("lo")) / width)
+    ).otherwise(F.lit(0))
+    return F.greatest(F.lit(0), F.least(b - 1, raw)).alias("bin")
+
+
 def ks_by_group(
     df: DataFrame,
     value_col: str,
@@ -275,19 +318,13 @@ def ks_by_group(
     """
     from pyspark.sql import Window
 
-    vals = df.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).cast("string").alias("group_id"),
-        F.col(value_col).cast("double").alias("_v"),
-    )
+    vals = _group_values(df, value_col, group_col)
     cnt = vals.groupBy("group_id", "_v").agg(F.count(F.lit(1)).alias("_c"))
     cnt = cnt.persist()  # reused 4x (grid, totals, grand, probe join)
     dv = cnt.groupBy("_v").agg(F.sum("_c").alias("_gc"))
     w_all = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, 0)
     dv = dv.select("_v", F.sum("_gc").over(w_all).alias("_cum_all"))
-    totals = cnt.groupBy("group_id").agg(F.sum("_c").alias("n_group"))
-    grand = cnt.groupBy().agg(F.sum("_c").alias("_n_all"))
-    grid = dv.crossJoin(F.broadcast(totals)).crossJoin(F.broadcast(grand))
-    j = grid.join(cnt, ["group_id", "_v"], "left")
+    j = _grid_vs_global(cnt, dv, "_v")
     w_g = (
         Window.partitionBy("group_id")
         .orderBy("_v")
@@ -337,28 +374,16 @@ def psi_by_group(
     psi_drift). `drifted` compares the ROUNDED statistic (>0.25 is the
     standard "drifted" monitoring threshold).
     """
-    vals = df.where(F.col(value_col).isNotNull()).select(
-        F.col(group_col).cast("string").alias("group_id"),
-        F.col(value_col).cast("double").alias("_v"),
-    )
+    vals = _group_values(df, value_col, group_col)
     ext = vals.groupBy().agg(F.min("_v").alias("lo"), F.max("_v").alias("hi"))
-    b = F.lit(int(n_bins))
-    width = (F.col("hi") - F.col("lo")) / b
-    raw = F.when(
-        width > 0, F.floor((F.col("_v") - F.col("lo")) / width)
-    ).otherwise(F.lit(0))
-    bin_ = F.greatest(F.lit(0), F.least(b - 1, raw)).alias("bin")
     cells = (
         vals.crossJoin(F.broadcast(ext))
-        .groupBy("group_id", bin_)
+        .groupBy("group_id", _equal_width_bin(n_bins))
         .agg(F.count(F.lit(1)).alias("_c"))
         .persist()  # |G| x n_bins rows, reused 4x
     )
     gbin = cells.groupBy("bin").agg(F.sum("_c").alias("_gc"))
-    totals = cells.groupBy("group_id").agg(F.sum("_c").alias("n_group"))
-    grand = cells.groupBy().agg(F.sum("_c").alias("_n_all"))
-    grid = gbin.crossJoin(F.broadcast(totals)).crossJoin(F.broadcast(grand))
-    j = grid.join(cells, ["group_id", "bin"], "left")
+    j = _grid_vs_global(cells, gbin, "bin")
     eps = F.lit(float(epsilon))
     p_ref = F.col("_gc") / F.col("_n_all") + eps
     p_g = F.coalesce(F.col("_c"), F.lit(0)) / F.col("n_group") + eps
@@ -411,16 +436,9 @@ def psi_drift(
     ext = vals.where("_is_ref").groupBy().agg(
         F.min("_v").alias("lo"), F.max("_v").alias("hi")
     )
-    b = F.lit(int(n_bins))
-    width = (F.col("hi") - F.col("lo")) / b
-    # degenerate reference (all one value): everything lands in bin 0
-    raw = F.when(
-        width > 0, F.floor((F.col("_v") - F.col("lo")) / width)
-    ).otherwise(F.lit(0))
-    bin_ = F.greatest(F.lit(0), F.least(b - 1, raw)).alias("bin")
     counts = (
         vals.crossJoin(F.broadcast(ext))
-        .groupBy(bin_)
+        .groupBy(_equal_width_bin(n_bins))
         .agg(
             F.sum(F.when(F.col("_is_ref"), 1).otherwise(0)).alias("c_ref"),
             F.sum(F.when(~F.col("_is_ref"), 1).otherwise(0)).alias("c_cur"),

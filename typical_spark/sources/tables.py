@@ -15,6 +15,7 @@ parquet/Iceberg scan (verify with .explain(): PushedFilters / ReadSchema).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -61,6 +62,37 @@ def write_output(df: DataFrame, target: str, mode: str = "append") -> None:
         df.write.mode("append" if mode == "append" else "overwrite").parquet(target)
 
 
+def recover_swap(target: str) -> None:
+    """Finish a `swap_in` that a crash cut short: an aside copy with no
+    target is the whole old table, so it moves back; an aside copy next
+    to the target is stale. A new copy that never moved in is dropped.
+    Call before reading a table that `swap_in` rewrites."""
+    # fixed sibling names, so that a later call finds them
+    tmp, aside = target.rstrip("/") + ".swap_tmp", target.rstrip("/") + ".swap_old"
+    if os.path.isdir(aside):
+        if os.path.isdir(target):
+            shutil.rmtree(aside)
+        else:
+            os.rename(aside, target)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def swap_in(df: DataFrame, target: str) -> None:
+    """Replace the parquet directory `target` with `df`'s rows, safely
+    under a crash at any point: write the new copy beside the target,
+    rename the old copy aside, rename the new copy in, drop the aside
+    copy. Until the new copy is in, the old rows stay whole in the
+    target or its aside copy (see `recover_swap`). `df` may read the
+    target: it is fully written before the target moves."""
+    recover_swap(target)
+    tmp, aside = target.rstrip("/") + ".swap_tmp", target.rstrip("/") + ".swap_old"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(target):
+        os.rename(target, aside)
+    os.rename(tmp, target)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
 def merge_keyed(df: DataFrame, target: str, key_cols: list[str]) -> None:
     """Exactly-once keyed upsert through the TableIO seam: rows in `df`
     REPLACE any existing target rows with the same key; everything else
@@ -72,11 +104,13 @@ def merge_keyed(df: DataFrame, target: str, key_cols: list[str]) -> None:
     iceberg:// targets run a real MERGE INTO (WHEN MATCHED UPDATE SET *
     / WHEN NOT MATCHED INSERT *) — atomic snapshot commit, the
     production path. The local-parquet stand-in rewrites the table
-    (anti-join old rows on the keys, union the batch, write to a
-    sibling tmp dir, swap): correct and idempotent, but the swap is not
-    crash-atomic and the rewrite is O(table) per merge — fine for a
-    sandbox index, wrong at lake scale, which is exactly why the seam
-    exists. Missing target == empty table (first micro-batch).
+    (anti-join old rows on the keys, union the batch) and replaces it
+    through `swap_in`, after `recover_swap` has finished any swap a
+    crash interrupted: the prior rows survive a crash at any point, so
+    the redelivered batch merges onto them. The rewrite is O(table)
+    per merge — fine for a sandbox index, wrong at lake scale, which is
+    exactly why the seam exists. Missing target == empty table (first
+    micro-batch).
 
     NOTE for repeated merges in one job: the caller must ensure `df` is
     deterministic or materialized (foreachBatch batches are), since the
@@ -94,29 +128,13 @@ def merge_keyed(df: DataFrame, target: str, key_cols: list[str]) -> None:
             "WHEN NOT MATCHED THEN INSERT *"
         )
         return
-    import shutil
-    import tempfile
-
-    spark = df.sparkSession
+    recover_swap(target)
+    merged = df
     if os.path.exists(target):
-        existing = spark.read.parquet(target)
+        existing = df.sparkSession.read.parquet(target)
         keys = df.select(*key_cols).dropDuplicates()
         merged = existing.join(keys, key_cols, "left_anti").unionByName(df)
-    else:
-        merged = df
-    parent = os.path.dirname(os.path.abspath(target)) or "."
-    os.makedirs(parent, exist_ok=True)  # first merge creates the lineage
-    tmp = tempfile.mkdtemp(prefix="._merge_", dir=parent)
-    try:
-        # write fully before touching the target; localCheckpoint-free
-        # because the tmp write IS the materialization barrier
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.replace(tmp, target)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+    swap_in(merged, target)
 
 
 def write_bucketed(

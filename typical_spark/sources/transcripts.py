@@ -20,7 +20,9 @@ salted-window dedup and AQE skew paths at bench scale).
 
 from __future__ import annotations
 
+import collections
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -271,6 +273,20 @@ def scaled_dataset(
             f"CLUSTERED BY (conv_id) "
             f"SORTED BY (conv_id, turn_idx, ts, role) "
             f"INTO {buckets} BUCKETS LOCATION '{bdir}'"
+        )
+    # a bucket split over several files scans unsorted: the Exchange-free
+    # flagship plan needs exactly one file per bucket id (_NNNNN suffix)
+    per_bucket = collections.Counter(
+        m.group(1)
+        for f in os.listdir(bdir)
+        if not f.startswith((".", "_"))
+        and (m := re.search(r"_(\d{5})\.c\d{3}", f))
+    )
+    split = sorted(b for b, n in per_bucket.items() if n > 1)
+    if split:
+        raise RuntimeError(
+            f"bucketed table {tname} at {bdir}: bucket {int(split[0])} "
+            f"holds {per_bucket[split[0]]} files, expected one"
         )
     return spark.table(tname), cdf
 

@@ -34,8 +34,12 @@ Two sink modes close the remaining duplicate class:
   pairs sink are row-identical to a single delivery (exactly-once
   observable state; test_streaming pins this). On iceberg:// paths
   merge_keyed is a real MERGE INTO with atomic snapshot commits; the
-  local-parquet stand-in rewrites the table per merge (O(table) — the
-  sandbox price, which is why the seam exists).
+  local-parquet stand-in rewrites the table per merge through the
+  crash-safe `sources.tables.swap_in` (new copy written beside the
+  table, old copy renamed aside, new copy renamed in), and recovers an
+  interrupted swap before it reads, so a crash at any point keeps the
+  prior index rows (O(table) per merge — the sandbox price, which is
+  why the seam exists).
 - upsert=False: plain parquet appends — cheapest writes; duplicated
   index rows only cost work (band joins dropDuplicates per run, never
   wrong jaccard values) and re-emitted identical pair rows remain, so
