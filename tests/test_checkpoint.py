@@ -127,6 +127,52 @@ def test_manifest_format_and_fingerprints(spark, bucketed_df, tmp_path):
         assert r["n_violations"] == plan.violations(part, with_message=False).count()
 
 
+def test_incremental_revalidates_every_bucket_when_the_plan_changes(
+    spark, bucketed_df, tmp_path
+):
+    """Carried violations were computed under some plan: an incremental
+    run under a different spec must re-validate every bucket though no
+    row changed, and end with that spec's output. Rows from before the
+    manifest recorded plans (plan NULL) are not carried either."""
+    import dataclasses
+
+    df = bucketed_df.localCheckpoint()
+    spec = transcript_spec()
+    no_role = dataclasses.replace(spec, fields=tuple(
+        dataclasses.replace(f, checks=()) if f.name == "role" else f
+        for f in spec.fields
+    ))
+    out = str(tmp_path / "ckpt")
+    full = CheckpointedRun(spark, compile_table_spec(spec), out, run_id="full")
+    full.run(df)
+    before = _rows(full.violations())
+
+    inc = CheckpointedRun(spark, compile_table_spec(no_role), out, run_id="inc")
+    s = inc.run_incremental(df)
+    assert s["buckets_carried"] == 0
+    assert s["buckets_validated"] == s["buckets_total"]
+    ref = CheckpointedRun(
+        spark, compile_table_spec(no_role), str(tmp_path / "ref"), run_id="ref"
+    )
+    ref.run(df)
+    assert _rows(inc.violations()) == _rows(ref.violations()) != before
+
+    # the same spec compiled again matches the recorded plan: all carried
+    again = CheckpointedRun(spark, compile_table_spec(no_role), out, run_id="again")
+    s = again.run_incremental(df)
+    assert s["buckets_carried"] == s["buckets_total"]
+
+    # an older manifest row (no plan column) with the current fingerprint
+    old_out = str(tmp_path / "old")
+    b = df.select("bucket").head()["bucket"]
+    fp = again.bucket_fingerprints(df)[b]
+    spark.createDataFrame(
+        [("old", b, "done", 1, 0, 0.1, 1.0, fp, "validated")], MANIFEST_DDL
+    ).coalesce(1).write.parquet(os.path.join(old_out, "manifest"))
+    upgraded = CheckpointedRun(spark, compile_table_spec(spec), old_out, run_id="new")
+    assert upgraded.run_incremental(df)["buckets_carried"] == 0
+
+
 def test_rerun_is_noop(spark, bucketed_df):
     plan = compile_table_spec(transcript_spec())
     tmp = tempfile.mkdtemp(prefix="ckpt_")

@@ -471,6 +471,40 @@ def test_minhash_cross_duplicates_crawl_vs_corpus(spark):
     assert all(cid != 3 for _, cid in got)             # distinct corpus doc untouched
 
 
+def test_minhash_prebanded_index_agrees_with_batch_path(spark):
+    """A persisted index (minhash_band_tables on each side) probed by
+    minhash_cross_duplicates_prebanded returns exactly the batch path's
+    rows: both are banded with the one fixed parameter set."""
+    from typical_spark.operators.dedup import (
+        minhash_band_tables,
+        minhash_cross_duplicates,
+        minhash_cross_duplicates_prebanded,
+    )
+
+    base = ("the quick brown fox jumps over the lazy dog and then runs far "
+            "away into the deep dark forest to hide from every hunter")
+    corpus = spark.createDataFrame(
+        [(1, base), (2, base + " with a tiny tail"), (3, "completely different "
+          "text about spark distributed joins and shuffle partitioning at scale")],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [(100, base + " extra"),
+         (200, "utterly novel content nothing shared here at all today")],
+        "doc_id long, text string",
+    )
+    batch = minhash_cross_duplicates(
+        new, corpus, "doc_id", "text", jaccard_threshold=0.7
+    ).collect()
+    indexed = minhash_cross_duplicates_prebanded(
+        *minhash_band_tables(new, "doc_id", "text"),
+        *minhash_band_tables(corpus, "doc_id", "text"),
+        jaccard_threshold=0.7,
+    ).collect()
+    assert {(r["new_id"], r["corpus_id"]) for r in batch} >= {(100, 1), (100, 2)}
+    assert sorted(map(tuple, indexed)) == sorted(map(tuple, batch))
+
+
 def test_group_quantiles_exact_and_approx_shapes(spark):
     from typical_spark.operators.stats import group_quantiles
 

@@ -400,7 +400,6 @@ def test_incremental_minhash_redelivery_exactly_once_state(spark, tmp_path):
             pairs_dir=str(tmp_path / "pairs"),
             checkpoint_dir=str(tmp_path / ck),
             jaccard_threshold=0.5,
-            upsert=True,
         )
         q.processAllAvailable()
         q.stop()

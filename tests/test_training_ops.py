@@ -129,16 +129,6 @@ def test_minhash_near_duplicates(spark, docs_df):
     jac = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs}
     assert jac[(0, 1)] == 1.0
 
-    # collapse off -> classic all-pairs-within-bucket semantics
-    allp = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_near_duplicates(
-            docs_df, "doc_id", "text", jaccard_threshold=0.5,
-            collapse_exact=False,
-        ).collect()
-    }
-    assert (1, 2) in allp and (0, 1) in allp
-
 
 def test_exact_group_collapse_linear_pairs(spark):
     """k identical docs must produce O(k) pairs (star to the rep), not
@@ -437,18 +427,31 @@ def test_embedding_near_dups_tolerates_null_and_ragged(spark):
     rows = [(0, v), (1, v), (2, None), (3, None),
             (4, [1.0, 2.0]), (5, [1.0, 2.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for arrow in (True, False):
-        pairs = embedding_near_duplicates(
-            df, cosine_threshold=0.99, n_planes=4, n_tables=2,
-            dim=16, use_arrow=arrow,
-        ).collect()
-        got = {(r["id_a"], r["id_b"]) for r in pairs}
-        # the identical full-dim pair is found; NULLs never pair; the
-        # identical ragged pair is still caught by the exact-hash collapse
-        assert (0, 1) in got
-        assert not any(2 in p or 3 in p for p in got)
-        assert (4, 5) in got
-        assert len(got) == 2
+    pairs = embedding_near_duplicates(
+        df, cosine_threshold=0.99, n_planes=4, n_tables=2, dim=16,
+    ).collect()
+    got = {(r["id_a"], r["id_b"]) for r in pairs}
+    # the identical full-dim pair is found; NULLs never pair; the
+    # identical ragged pair is still caught by the exact-hash collapse
+    assert (0, 1) in got
+    assert not any(2 in p or 3 in p for p in got)
+    assert (4, 5) in got
+    assert len(got) == 2
+
+
+def test_embedding_near_dups_infers_dim_past_a_null_first_vector(spark):
+    """Without `dim`, the length comes from the first non-NULL vector: a
+    NULL first row is skipped like any other NULL vector."""
+    rng = np.random.default_rng(13)
+    v = [float(x) for x in rng.standard_normal(16)]
+    w = [x + 0.001 for x in v]
+    df = spark.createDataFrame(
+        [(0, None), (1, v), (2, v), (3, w)], "vec_id long, embedding array<float>"
+    ).coalesce(1)
+    pairs = embedding_near_duplicates(
+        df, cosine_threshold=0.99, n_planes=4, n_tables=2
+    ).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2), (1, 3)}
 
 
 # ---------------------------------------------------------------------------

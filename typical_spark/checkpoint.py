@@ -10,7 +10,18 @@ files — check .explain() for PartitionFilters), writes the bucket's
 violations to the sink, then commits one lineage row to the manifest:
 
     (run_id, bucket, status, n_rows, n_violations, wall_s, finished_at,
-     fingerprint, mode)
+     fingerprint, mode, plan)
+
+`plan` is a digest of what the violations depend on besides the rows:
+the spec (`spec_io.spec_to_json`) and each compiled check's (column,
+check_id, expected). The predicate strings are left out because Spark
+numbers lambda variables per JVM, so they differ between runs of the
+same plan. `run_incremental` carries a bucket only when its last row
+matches both the current content fingerprint and the current plan;
+rows written before the column existed read back with `plan` NULL and
+so are re-validated once. `manifest()` shows the lineage columns
+without `plan`, with one schema whatever mix of older and newer files
+the directory holds.
 
 The violations write is a bucket's only Spark action; `Observation`s on
 it give the row count, content fingerprint and violation count. The
@@ -36,6 +47,7 @@ the blast radius of a restart, not parallelism.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 import uuid
@@ -46,14 +58,25 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from typical_spark.plans.validation import ValidationPlan
+from typical_spark.spec_io import spec_to_json
 
-# field for field the schema Spark wrote the manifest with
+# the lineage columns, field for field the schema Spark wrote the
+# manifest with, then the plan digest
 MANIFEST_SCHEMA = pa.schema([
     ("run_id", pa.string()), ("bucket", pa.int32()), ("status", pa.string()),
     ("n_rows", pa.int64()), ("n_violations", pa.int64()),
     ("wall_s", pa.float64()), ("finished_at", pa.float64()),
-    ("fingerprint", pa.int64()), ("mode", pa.string()),
+    ("fingerprint", pa.int64()), ("mode", pa.string()), ("plan", pa.string()),
 ])
+
+
+def plan_digest(plan: ValidationPlan) -> str:
+    """Digest of the spec and each check's (column, check_id, expected):
+    equal for two compilations of the same spec in any process."""
+    h = hashlib.sha256(spec_to_json(plan.spec).encode())
+    for c in plan.checks:
+        h.update(repr((c.column, c.check_id, c.expected)).encode())
+    return h.hexdigest()[:16]
 
 
 def row_hash(columns: list[str]) -> Column:
@@ -76,6 +99,7 @@ class CheckpointedRun:
         self.out_dir = out_dir
         self.run_id = run_id
         self.bucket_col = bucket_col
+        self.plan_digest = plan_digest(plan)
         self.manifest_path = os.path.join(out_dir, "manifest")
         self.violations_path = os.path.join(out_dir, "violations")
 
@@ -99,7 +123,7 @@ class CheckpointedRun:
         table = pa.Table.from_pylist([
             dict(run_id=self.run_id, bucket=b, status="done", n_rows=n,
                  n_violations=nv, wall_s=wall, finished_at=now,
-                 fingerprint=fp, mode=mode)
+                 fingerprint=fp, mode=mode, plan=self.plan_digest)
             for b, n, nv, wall, fp, mode in rows
         ], schema=MANIFEST_SCHEMA)
         os.makedirs(self.manifest_path, exist_ok=True)
@@ -124,30 +148,41 @@ class CheckpointedRun:
         rows = df.groupBy(self.bucket_col).agg(fp).collect()
         return {r[self.bucket_col]: r["fp"] for r in rows}
 
+    def _latest_rows(self) -> dict[int, dict]:
+        """The last committed row per bucket (max finished_at) across ALL
+        runs: the state each bucket's violations directory holds."""
+        return {
+            r["bucket"]: r
+            for r in sorted(self._done_rows(), key=lambda r: r["finished_at"])
+        }
+
     def latest_fingerprints(self) -> dict[int, tuple]:
         """{bucket: (fingerprint, n_rows, n_violations)} from the last
-        committed row per bucket (max finished_at) across ALL runs — the
-        previous validation states to diff against."""
-        latest = {}
-        for r in sorted(self._done_rows(), key=lambda r: r["finished_at"]):
-            latest[r["bucket"]] = (r["fingerprint"], r["n_rows"], r["n_violations"])
-        return latest
+        committed row per bucket — the previous validation states to diff
+        against."""
+        return {
+            b: (r["fingerprint"], r["n_rows"], r["n_violations"])
+            for b, r in self._latest_rows().items()
+        }
 
     def run_incremental(self, df: DataFrame) -> dict:
         """Nightly-rerun mode: re-validate ONLY buckets whose content
-        fingerprint changed since the last recorded validation (new
-        buckets count as changed; a bucket whose previous manifest row
-        predates fingerprints, i.e. fingerprint NULL, also counts as
-        changed). Unchanged buckets carry their previous metrics forward
-        as mode='carried' manifest rows, committed together in one file,
-        and keep their already-written violations partition — so an
-        append-mostly table pays only for the buckets that moved."""
+        fingerprint or validation plan changed since the last recorded
+        validation (new buckets count as changed; a bucket whose previous
+        manifest row predates fingerprints or plan digests, i.e. has
+        them NULL, also counts as changed). Unchanged buckets carry their
+        previous metrics forward as mode='carried' manifest rows,
+        committed together in one file, and keep their already-written
+        violations partition — so an append-mostly table pays only for
+        the buckets that moved."""
         fps = self.bucket_fingerprints(df)
-        prev = self.latest_fingerprints()
+        prev = self._latest_rows()
         carried = [
-            (b, prev[b][1], prev[b][2], 0.0, fps[b], "carried")
+            (b, prev[b]["n_rows"], prev[b]["n_violations"], 0.0, fps[b], "carried")
             for b in sorted(fps)
-            if b in prev and prev[b][0] is not None and prev[b][0] == fps[b]
+            if b in prev
+            and prev[b]["fingerprint"] == fps[b]
+            and prev[b]["plan"] == self.plan_digest
         ]
         if carried:
             self._append_manifest(carried)
@@ -203,7 +238,8 @@ class CheckpointedRun:
         return self.spark.read.option("basePath", path).parquet(path)
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.manifest_path)
+        lineage = [n for n in MANIFEST_SCHEMA.names if n != "plan"]
+        return self.spark.read.parquet(self.manifest_path).select(*lineage)
 
 
 class StageCheckpoint:

@@ -4,17 +4,33 @@ Five strategies, all shuffle-disciplined for 100 TB inputs:
 
 exact            groupBy(md5(normalized)) — map-side partial agg, one
                  shuffle of (hash, id) pairs only.
-minhash LSH      shingles -> n_hashes minhash signature (nested Catalyst
-                 lambdas, no UDF) -> b bands -> shuffle on (band, band
-                 hash) buckets -> candidate pairs -> exact Jaccard verify.
-                 Only bucket-mates ever meet: no O(n^2) compare.
-simhash          64-bit signature from token hashes (bit-vote via
-                 aggregate() higher-order fn); near-dups = equal 16-bit
-                 chunk buckets then hamming <= threshold verify.
+minhash LSH      shingles -> N_HASHES minhash signature (codegen'd min()
+                 aggregates, no UDF) -> BANDS bands -> shuffle on (band,
+                 band hash) buckets -> candidate pairs -> exact Jaccard
+                 verify. Only bucket-mates ever meet: no O(n^2) compare.
+simhash          64-bit signature from token hashes (bit-vote sum()
+                 aggregates); near-dups = equal 16-bit chunk buckets then
+                 hamming <= threshold verify.
 ngram jaccard    exact pairwise Jaccard on word shingles — the *verify*
                  kernel for candidates (never run all-pairs at scale).
 embedding cosine near-dup via random-hyperplane LSH buckets + cosine
-                 verify (see similarity.py for the shared kernels).
+                 verify (similarity.embedding_near_duplicates).
+
+Each step of LSH detection is written once and shared by every detector:
+
+- `_collapse_exact`: keep-first exact-group collapse — representatives
+  go on to banding, members come back as (rep, member) star pairs
+  (minhash, simhash, embedding);
+- `_band_join`: the equi-join on band keys that yields distinct
+  candidate id pairs (minhash self and cross joins, embedding; simhash
+  keeps its own join because its hamming test lives inside it);
+- `_verify`: candidate pairs joined to both sides' payloads plus one
+  score column (minhash, cross, embedding, containment, ngram_jaccard),
+  with `jaccard` the one set-similarity score.
+
+The minhash parameters are module constants (N_HASHES, BANDS,
+SHINGLE_WORDS): a persisted band index and the batch that probes it are
+only comparable when both were built with the same values.
 
 Pair outputs are canonicalized (id_a < id_b) and deduplicated, so a pair
 found in several buckets reports once.
@@ -22,12 +38,20 @@ found in several buckets reports once.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from typical_spark.functions.text_analysis import normalize_text, word_shingles
+
+# minhash LSH parameters: rows per band r = N_HASHES / BANDS = 4, S-curve
+# midpoint (1/BANDS)^(1/r) ~= 0.5, recall > 0.999 for pairs at Jaccard 0.8
+N_HASHES = 64
+BANDS = 16
+SHINGLE_WORDS = 3
 
 
 def release_cache(result: DataFrame) -> None:
@@ -110,18 +134,98 @@ def _exact_group_reps(df: DataFrame, id_col: str, key: Column) -> DataFrame:
     return nn.join(reps, "_ek").select("_id", "_rep").unionByName(nulls)
 
 
+def _collapse_exact(
+    df: DataFrame, id_col: str, key: Column
+) -> tuple[DataFrame, DataFrame]:
+    """(representatives, stars): the rows of `df` that are their exact
+    group's representative (semi-joined, so only they go on to banding),
+    and one (id_a = rep, id_b = member) star pair per other member.
+    Each caller scores the stars by its own rule."""
+    groups = _exact_group_reps(df, id_col, key)
+    stars = groups.where(F.col("_id") != F.col("_rep")).select(
+        F.col("_rep").alias("id_a"), F.col("_id").alias("id_b")
+    )
+    # the representative ids, named apart from df's own columns so the
+    # semi-join condition is never ambiguous
+    rid = "_rid" if "_id" in df.columns else "_id"
+    reps = groups.where(F.col("_id") == F.col("_rep")).select(
+        F.col("_id").alias(rid)
+    )
+    return df.join(reps, df[id_col] == reps[rid], "left_semi"), stars
+
+
+# ---------------------------------------------------------------------------
+# shared LSH steps: band join, verify, jaccard
+# ---------------------------------------------------------------------------
+
+
+def _band_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    extra: Column | None = None,
+    names: tuple[str, str] = ("id_a", "id_b"),
+) -> DataFrame:
+    """Distinct candidate id pairs: rows of `left` (alias l) and `right`
+    (alias r) equal on every band key in `keys` and satisfying `extra`.
+    Both sides are narrow (_id, *keys) rows, so only ids and keys ride
+    the shuffle; a pair found in several bands reports once."""
+    l, r = left.alias("l"), right.alias("r")
+    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    if extra is not None:
+        cond.append(extra)
+    a, b = names
+    return (
+        l.join(r, reduce(and_, cond))
+        .select(F.col("l._id").alias(a), F.col("r._id").alias(b))
+        .dropDuplicates([a, b])
+    )
+
+
+def _verify(
+    pairs: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    payload: str,
+    score_name: str,
+    score: Callable[[Column, Column], Column],
+    ids: tuple[str, str] = ("id_a", "id_b"),
+    names: tuple[str, str] = ("sh_a", "sh_b"),
+) -> DataFrame:
+    """Exact verify of candidate pairs: `pairs` joined to `left` on
+    ids[0] and `right` on ids[1] (each side's `_id` and `payload`
+    columns, renamed to ids and `names`), plus `score_name` =
+    score(left payload, right payload). The wide payloads meet only
+    candidates; callers apply their own threshold and projection."""
+    (a, b), (pa, pb) = ids, names
+
+    def side(t: DataFrame, i: str, p: str) -> DataFrame:
+        return t.select(F.col("_id").alias(i), F.col(payload).alias(p))
+
+    return (
+        pairs.join(side(left, a, pa), a)
+        .join(side(right, b, pb), b)
+        .withColumn(score_name, score(F.col(pa), F.col(pb)))
+    )
+
+
+def jaccard(a: Column, b: Column) -> Column:
+    """|a & b| / |a | b| of two arrays as a double. The denominator is
+    floored at 1, so two empty arrays score 0.0 instead of dividing by
+    zero (ANSI-safe)."""
+    return (
+        F.size(F.array_intersect(a, b))
+        / F.greatest(F.size(F.array_union(a, b)), F.lit(1))
+    ).cast("double")
+
+
 # ---------------------------------------------------------------------------
 # minhash + LSH
 # ---------------------------------------------------------------------------
 
 
 def _shingle_sig_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_hashes: int,
-    bands: int,
-    shingle_words: int,
+    df: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared shingle -> seeded-signature -> banding pipeline behind
     BOTH minhash variants (self-join `minhash_near_duplicates` and the
@@ -137,18 +241,14 @@ def _shingle_sig_bands(
       materialized (long-lived sessions leak one cached table per call
       otherwise).
     - banded: narrow (_id, band, bhash) rows. Signature via explode +
-      n_hashes min() aggregates — whole-stage-codegen'd with map-side
+      N_HASHES min() aggregates — whole-stage-codegen'd with map-side
       partial combine, an order of magnitude faster than interpreted
       array-lambda accumulators, and the seeded xxhash64(h, i) family
       is overflow-free so it is correct under ANSI mode. Shingle
       arrays are the WIDE payload: banding joins ride only the 16-byte
       rows, keeping the shuffle ~GBs at 10^9 docs.
     """
-    if n_hashes % bands:
-        raise ValueError(
-            f"bands ({bands}) must divide n_hashes ({n_hashes})"
-        )
-    r = n_hashes // bands
+    r = N_HASHES // BANDS
     # explode(array(...)) is a Generate barrier: without it Catalyst
     # pushes the size() filter BELOW the projection and the whole
     # shingle expression (3 regex passes + HOF slices) is evaluated
@@ -158,7 +258,7 @@ def _shingle_sig_bands(
         df.select(
             F.col(id_col).alias("_id"),
             F.explode(
-                F.array(word_shingles(F.col(text_col), shingle_words))
+                F.array(word_shingles(F.col(text_col), SHINGLE_WORDS))
             ).alias("_sh"),
         )
         .where(F.size("_sh") > 0)
@@ -167,18 +267,18 @@ def _shingle_sig_bands(
     hashed = sh.select(
         "_id", F.explode(F.transform("_sh", lambda s: F.xxhash64(s))).alias("_h")
     )
-    # one parsed expression instead of n_hashes*4 Column-API calls: each
+    # one parsed expression instead of N_HASHES*4 Column-API calls: each
     # py4j round trip costs ~0.5ms on this host and the wide aggregate
     # was ~3s of pure driver-side plan BUILD time per query (profiled;
     # the Catalyst tree is identical either way)
     sig_expr = (
         "array("
-        + ", ".join(f"min(xxhash64(_h, {i}))" for i in range(n_hashes))
+        + ", ".join(f"min(xxhash64(_h, {i}))" for i in range(N_HASHES))
         + ")"
     )
     sig = hashed.groupBy("_id").agg(F.expr(sig_expr).alias("_sig"))
     band_expr = (
-        f"explode(transform(sequence(0, {bands - 1}), "
+        f"explode(transform(sequence(0, {BANDS - 1}), "
         f"b -> struct(b AS band, "
         f"xxhash64(concat_ws(',', slice(_sig, b * {r} + 1, {r}))) AS bhash)))"
     )
@@ -192,77 +292,36 @@ def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_words: int = 3,
     jaccard_threshold: float = 0.7,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via minhash-LSH banding + exact-Jaccard verify.
+    Output: (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
 
-    rows-per-band r = n_hashes/bands; the S-curve midpoint is
-    (1/bands)^(1/r) ~= threshold. Output:
-    (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
-
-    collapse_exact (default on): byte-identical (normalized) documents
-    are collapsed to their min-id representative BEFORE banding, emitted
-    as (rep, member, 1.0) star pairs — O(k) instead of the O(k^2) pair
-    blowup an exact-duplicate group would otherwise cause inside every
-    band bucket. Pair semantics are keep-first: members pair with their
-    representative, and only representatives pair across groups.
+    Byte-identical (normalized) documents are collapsed to their min-id
+    representative BEFORE banding and emitted as (rep, member, 1.0) star
+    pairs — O(k) instead of the O(k^2) pair blowup an exact-duplicate
+    group would otherwise cause inside every band bucket. Pair semantics
+    are keep-first: members pair with their representative, and only
+    representatives pair across groups.
     """
-    df = _ensure_parallelism(df)
-    star = None
-    if collapse_exact:
-        groups = _exact_group_reps(
-            df, id_col, F.sha2(normalize_text(F.col(text_col)), 256)
-        )
-        star = (
-            groups.where(F.col("_id") != F.col("_rep"))
-            .select(
-                F.col("_rep").alias("id_a"),
-                F.col("_id").alias("id_b"),
-                F.lit(1.0).alias("jaccard"),  # identical normalized text
-            )
-            .where(F.lit(1.0) >= F.lit(jaccard_threshold))
-        )
-        reps = groups.where(F.col("_id") == F.col("_rep")).select("_id")
-        df = df.join(
-            reps, F.col(id_col) == reps["_id"], "left_semi"
-        )
-    sh, banded = _shingle_sig_bands(
-        df, id_col, text_col, n_hashes, bands, shingle_words
+    df, stars = _collapse_exact(
+        _ensure_parallelism(df),
+        id_col,
+        F.sha2(normalize_text(F.col(text_col)), 256),
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    star = stars.select(
+        "id_a", "id_b", F.lit(1.0).alias("jaccard")  # identical normalized text
+    ).where(F.lit(1.0) >= F.lit(jaccard_threshold))
+    sh, banded = _shingle_sig_bands(df, id_col, text_col)
+    cand = _band_join(
+        banded, banded, ["band", "bhash"], F.col("l._id") < F.col("r._id")
     )
-    shl = sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    shr = sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    jac = (
-        cand.join(shl, "id_a")
-        .join(shr, "id_b")
-        .withColumn(
-            "jaccard",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).cast("double"),
-        )
+    out = (
+        _verify(cand, sh, sh, "_sh", "jaccard", jaccard)
+        .where(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", "jaccard")
+        .unionAll(star)
     )
-    out = jac.where(F.col("jaccard") >= jaccard_threshold).select(
-        "id_a", "id_b", "jaccard"
-    )
-    if star is not None:
-        out = out.unionAll(star)
     out._owned_cache = [sh]  # caller releases via release_cache(out)
     return out
 
@@ -331,7 +390,6 @@ def simhash_signatures(
     id_col: str,
     text_col: str,
     token_hash: Callable[[Column], Column] | None = None,
-    hash_distinct: bool | None = None,
 ) -> DataFrame:
     """(_id, _sig) simhash table via explode + 64 codegen'd sum()
     aggregates (map-side partial combine): each token hash votes +-1 per
@@ -348,25 +406,10 @@ def simhash_signatures(
     (production). Pass `md5_lower64` for cross-engine-reproducible
     signatures (DuckDB oracle verification)."""
     th = token_hash or F.xxhash64
-    # hash_distinct: hash each DISTINCT token once and broadcast-join
-    # the (token -> hash) dim table (bit votes are integer sums, so
-    # signatures are bit-identical either way). Off by default: unlike
-    # quality_model's interpreted-HOF path, the per-occurrence hash here
-    # is already codegen'd, and the A/B at sf0.1 measured the vocab join
-    # at parity (2.8s vs 2.0s warm, within host noise) — opt in only
-    # when the vocabulary is small relative to the corpus AND the token
-    # hash is expensive (e.g. the md5 contract hash at 100x this scale).
-    if hash_distinct is None:
-        hash_distinct = False
-    toks = df.select(
+    hashed = df.select(
         F.col(id_col).alias("_id"),
         F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("_t"),
-    )
-    if hash_distinct:
-        vocab = toks.select("_t").distinct().withColumn("_h", th(F.col("_t")))
-        hashed = toks.join(F.broadcast(vocab), "_t").select("_id", "_h")
-    else:
-        hashed = toks.select("_id", th(F.col("_t")).alias("_h"))
+    ).select("_id", th(F.col("_t")).alias("_h"))
     # parsed expressions, not per-bit Column-API chains: the 64-wide
     # vote aggregate + 64-term assembly were ~1000 py4j round trips of
     # driver-side build time (~0.5ms each on this host); the Catalyst
@@ -400,27 +443,21 @@ def simhash_near_duplicates(
     text_col: str,
     max_hamming: int = 3,
     token_hash: Callable[[Column], Column] | None = None,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming. Blocking: by
     pigeonhole, two signatures within hamming 3 agree exactly on >=1 of 4
     16-bit chunks — candidates meet only in chunk buckets (1 shuffle).
-    Output: (id_a, id_b, hamming). collapse_exact: identical normalized
-    docs become (rep, member, 0) star pairs and only representatives are
-    banded (see _exact_group_reps — avoids O(k^2) bucket blowup)."""
-    df = _ensure_parallelism(df)
-    star = None
-    if collapse_exact:
-        groups = _exact_group_reps(
-            df, id_col, F.sha2(normalize_text(F.col(text_col)), 256)
-        )
-        star = groups.where(F.col("_id") != F.col("_rep")).select(
-            F.col("_rep").alias("id_a"),
-            F.col("_id").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),  # identical text
-        )
-        reps = groups.where(F.col("_id") == F.col("_rep")).select("_id")
-        df = df.join(reps, F.col(id_col) == reps["_id"], "left_semi")
+    Output: (id_a, id_b, hamming). Identical normalized docs become
+    (rep, member, 0) star pairs and only representatives are banded
+    (see _collapse_exact — avoids O(k^2) bucket blowup)."""
+    df, stars = _collapse_exact(
+        _ensure_parallelism(df),
+        id_col,
+        F.sha2(normalize_text(F.col(text_col)), 256),
+    )
+    star = stars.select(
+        "id_a", "id_b", F.lit(0).cast("int").alias("hamming")  # identical text
+    )
     sigs = simhash_signatures(df, id_col, text_col, token_hash)
     chunks = sigs.select(
         "_id",
@@ -462,10 +499,7 @@ def simhash_near_duplicates(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    out = cand.select("id_a", "id_b", "hamming")
-    if star is not None:
-        out = out.unionAll(star)
-    return out
+    return cand.unionAll(star)
 
 
 # ---------------------------------------------------------------------------
@@ -673,30 +707,15 @@ def ngram_jaccard(
     Two broadcast-or-shuffle hash joins against the docs table; the heavy
     set ops stay columnar."""
     sh = docs.select(
-        F.col(id_col).alias("_jid"),
-        word_shingles(F.col(text_col), k).alias("_jsh"),
+        F.col(id_col).alias("_id"), word_shingles(F.col(text_col), k).alias("_sh")
     )
-    out = (
-        pairs.join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_jsh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_jsh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.greatest(F.size(F.array_union("sh_a", "sh_b")), F.lit(1))
-            ).cast("double"),
-        )
-    )
-    return out.drop("sh_a", "sh_b")
+    return _verify(pairs, sh, sh, "_sh", "jaccard", jaccard).drop("sh_a", "sh_b")
 
 
 def minhash_band_tables(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_words: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """The persistable minhash index of a corpus: (shingles, banded).
 
@@ -712,11 +731,10 @@ def minhash_band_tables(
     recipe. LIFECYCLE: the shingle table IS persist()ed to executor
     storage (the shared _shingle_sig_bands pipeline reuses it across the
     signature and verify branches); call release_cache(banded) after
-    writing both frames out, or each invocation leaks one cached table."""
-    sh, banded = _shingle_sig_bands(
-        _ensure_parallelism(df), id_col, text_col,
-        n_hashes, bands, shingle_words,
-    )
+    writing both frames out, or each invocation leaks one cached table.
+    Built with the module's fixed N_HASHES/BANDS/SHINGLE_WORDS, so a
+    stored index always matches the batches that probe it."""
+    sh, banded = _shingle_sig_bands(_ensure_parallelism(df), id_col, text_col)
     banded._owned_cache = [sh]
     return sh, banded
 
@@ -734,32 +752,11 @@ def minhash_cross_duplicates_prebanded(
     Output: (new_id, corpus_id, jaccard >= threshold). Join cost is
     bounded by the new batch's bucket occupancy — corpus buckets the
     batch never touches are dropped at the join."""
-    cand = (
-        new_banded.alias("n")
-        .join(
-            corpus_banded.alias("c"),
-            (F.col("n.band") == F.col("c.band"))
-            & (F.col("n.bhash") == F.col("c.bhash")),
-        )
-        .select(
-            F.col("n._id").alias("new_id"), F.col("c._id").alias("corpus_id")
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    shl = new_sh.select(F.col("_id").alias("new_id"), F.col("_sh").alias("sh_n"))
-    shr = corpus_sh.select(
-        F.col("_id").alias("corpus_id"), F.col("_sh").alias("sh_c")
-    )
+    ids = ("new_id", "corpus_id")
+    cand = _band_join(new_banded, corpus_banded, ["band", "bhash"], names=ids)
     return (
-        cand.join(shl, "new_id")
-        .join(shr, "corpus_id")
-        .withColumn(
-            "jaccard",
-            (
-                F.size(F.array_intersect("sh_n", "sh_c"))
-                / F.size(F.array_union("sh_n", "sh_c"))
-            ).cast("double"),
-        )
+        _verify(cand, new_sh, corpus_sh, "_sh", "jaccard", jaccard,
+                ids, ("sh_n", "sh_c"))
         .where(F.col("jaccard") >= F.lit(float(jaccard_threshold)))
         .select("new_id", "corpus_id", "jaccard")
     )
@@ -770,9 +767,6 @@ def minhash_cross_duplicates(
     corpus_df: DataFrame,
     id_col: str,
     text_col: str,
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_words: int = 3,
     jaccard_threshold: float = 0.7,
 ) -> DataFrame:
     """Cross-corpus near-duplicate detection: which NEW documents
@@ -796,12 +790,10 @@ def minhash_cross_duplicates(
     Output: (new_id, corpus_id, jaccard) with jaccard >= threshold.
     """
     sh_new, band_new = _shingle_sig_bands(
-        _ensure_parallelism(new_df), id_col, text_col,
-        n_hashes, bands, shingle_words,
+        _ensure_parallelism(new_df), id_col, text_col
     )
     sh_cor, band_cor = _shingle_sig_bands(
-        _ensure_parallelism(corpus_df), id_col, text_col,
-        n_hashes, bands, shingle_words,
+        _ensure_parallelism(corpus_df), id_col, text_col
     )
     out = minhash_cross_duplicates_prebanded(
         sh_new, band_new, sh_cor, band_cor, jaccard_threshold
@@ -820,11 +812,10 @@ def containment_duplicates(
     id_col: str,
     text_col: str,
     threshold: float = 0.8,
-    shingle_words: int = 3,
 ) -> DataFrame:
     """Asymmetric containment pairs: (id_a, id_b, containment_r) where
     containment(a in b) = |S(a) & S(b)| / |S(a)| >= threshold over
-    distinct word-`shingle_words` shingles, id_a != id_b.
+    distinct word-SHINGLE_WORDS shingles, id_a != id_b.
 
     Jaccard-based near-dup (minhash/simhash) structurally MISSES the
     quote/excerpt case: a 100-shingle doc fully pasted inside a
@@ -847,8 +838,8 @@ def containment_duplicates(
     sit at the END of the frequency order, so they essentially never
     enter a prefix: the join's per-key fan-out is (rare shingle) x (its
     few holders). Exact verify then computes true containment per
-    candidate pair from the per-doc shingle arrays (same columnar
-    array_intersect verify as minhash_near_duplicates) — candidate
+    candidate pair from the per-doc shingle arrays (the same `_verify`
+    join as minhash_near_duplicates) — candidate
     generation is lossless, so the output is EXACTLY the all-pairs
     result. One groupBy (doc-frequency), one window (per-doc frequency
     rank), one equi-join on shingle, one verify join: all narrow rows
@@ -856,7 +847,7 @@ def containment_duplicates(
 
     At 10^9+ docs compose with exact_duplicates first (collapse
     byte-identical groups to representatives) exactly as
-    minhash_near_duplicates' collapse_exact does — containment within an
+    minhash_near_duplicates' exact-group collapse does — containment within an
     exact group is trivially 1.0 both ways.
 
     Output: (id_a, id_b, containment) — id_a contained in id_b.
@@ -872,7 +863,7 @@ def containment_duplicates(
         df.select(
             F.col(id_col).alias("_id"),
             F.explode(
-                F.array(word_shingles(F.col(text_col), shingle_words))
+                F.array(word_shingles(F.col(text_col), SHINGLE_WORDS))
             ).alias("_sh_arr"),
         )
         .where(F.size("_sh_arr") > 0)
@@ -899,14 +890,9 @@ def containment_duplicates(
         .dropDuplicates(["id_a", "id_b"])
     )
     out = (
-        cand.join(arrs.select(F.col("_id").alias("id_a"),
-                              F.col("_sh_arr").alias("sh_a")), "id_a")
-        .join(arrs.select(F.col("_id").alias("id_b"),
-                          F.col("_sh_arr").alias("sh_b")), "id_b")
-        .withColumn(
-            "containment",
-            (F.size(F.array_intersect("sh_a", "sh_b"))
-             / F.size("sh_a")).cast("double"),
+        _verify(
+            cand, arrs, arrs, "_sh_arr", "containment",
+            lambda a, b: (F.size(F.array_intersect(a, b)) / F.size(a)).cast("double"),
         )
         .where(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")

@@ -14,8 +14,9 @@ Kernels are pure Catalyst higher-order functions (`zip_with` dot product,
   corpora: partition/bucket the table by cell_id so a probe is a
   partition-pruned scan.
 - embedding near-dup pairs: random-hyperplane LSH buckets (sign bits of
-  h random projections -> one shuffle on the bucket key) + exact cosine
-  verify within buckets.
+  h random projections, one Arrow-batched numpy matmul per record batch
+  -> one shuffle on the bucket key) + exact cosine verify within
+  buckets, on dedup's shared exact-group collapse, band join and verify.
 """
 
 from __future__ import annotations
@@ -267,144 +268,97 @@ def embedding_near_duplicates(
     cosine_threshold: float = 0.95,
     seed: int = 42,
     dim: int | None = None,
-    collapse_exact: bool = True,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Pairs with cosine >= threshold. n_tables independent sign-bucket
     keys (n_planes random hyperplanes each); candidates meet only within
     a bucket; exact cosine verifies. Output: (id_a, id_b, cosine_sim).
+    `dim` defaults to the length of the first non-NULL vector.
 
-    use_arrow: compute the n_tables x n_planes sign projections with ONE
-    Arrow-batched numpy matmul per record batch (default) instead of
-    interpreted Catalyst higher-order-function dot products — same
-    buckets (sign of the same projections), ~4x less per-row cost; flip
-    off to stay 100% JVM-side.
+    The n_tables x n_planes sign projections are ONE Arrow-batched numpy
+    matmul per record batch — the per-row cost an interpreted Catalyst
+    dot product per hyperplane would pay is the operator's hot spot.
 
-    Shuffle discipline: the bucket self-join moves only narrow
-    (id, table, bkey) rows; vectors are joined back for the cosine
-    verify of candidates only — at 10^9 vectors the banding shuffle
-    stays ~GBs instead of the corpus size.
+    Shuffle discipline: the bucket self-join (dedup._band_join) moves
+    only narrow (id, table, bkey) rows; vectors are joined back for the
+    cosine verify (dedup._verify) of candidates only — at 10^9 vectors
+    the banding shuffle stays ~GBs instead of the corpus size.
 
-    collapse_exact: bit-identical vectors are collapsed to their min-id
-    representative before banding — (rep, member) star candidate pairs,
-    O(k) not O(k^2) per exact-duplicate group (see dedup._exact_group_reps
-    for why this matters at web duplication rates). The collapse groups
-    on xxhash64(vector) so only (id, 8-byte hash) rides its shuffle, and
-    star candidates go through the SAME exact-cosine verify as banding
-    candidates — a hash collision between different vectors therefore
-    yields a correctly-filtered pair, never a false duplicate claim.
+    Bit-identical vectors are collapsed to their min-id representative
+    before banding (dedup._collapse_exact) — (rep, member) star
+    candidate pairs, O(k) not O(k^2) per exact-duplicate group. The
+    collapse groups on xxhash64(vector) so only (id, 8-byte hash) rides
+    its shuffle, and star candidates go through the SAME exact-cosine
+    verify as banding candidates — a hash collision between different
+    vectors therefore yields a correctly-filtered pair, never a false
+    duplicate claim.
 
     NULL vectors and vectors of the wrong length never band (they cannot
-    be near-duplicates of anything; the Catalyst and Arrow paths both
-    skip them instead of failing the job)."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    from typical_spark.operators.dedup import _ensure_parallelism, _exact_group_reps
+    be near-duplicates of anything; they are skipped instead of failing
+    the job)."""
+    from pyspark.sql.functions import pandas_udf
 
+    from typical_spark.operators.dedup import (
+        _band_join,
+        _collapse_exact,
+        _ensure_parallelism,
+        _verify,
+    )
+
+    if dim is None:
+        first = df.where(F.col(vec_col).isNotNull()).select(vec_col).first()
+        dim = len(first[0]) if first is not None else 0
     allv = _ensure_parallelism(df).select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
-    base = allv
-    star_cand = None
-    if collapse_exact:
-        groups = _exact_group_reps(
-            allv, "_id",
-            F.when(F.col("_v").isNull(), F.lit(None).cast("long"))
-            .otherwise(F.xxhash64("_v")),
-        )
-        star_cand = groups.where(F.col("_id") != F.col("_rep")).select(
-            F.col("_rep").alias("id_a"), F.col("_id").alias("id_b")
-        )
-        reps = groups.where(F.col("_id") == F.col("_rep")).select(
-            F.col("_id").alias("_rid")
-        )
-        base = allv.join(reps, allv["_id"] == F.col("_rid"), "left_semi")
+    base, star_cand = _collapse_exact(
+        allv, "_id",
+        F.when(F.col("_v").isNull(), F.lit(None).cast("long"))
+        .otherwise(F.xxhash64("_v")),
+    )
     base = base.where(F.col("_v").isNotNull() & (F.size("_v") == dim))
     rng = np.random.default_rng(seed)
-    all_planes = rng.standard_normal((n_tables * n_planes, dim))
-    if use_arrow:
-        # Arrow-vectorized projection: ONE numpy matmul per record batch
-        # ((batch x dim) @ (dim x tables*planes)) replaces
-        # n_tables*n_planes interpreted zip_with/aggregate dot products
-        # per row — the HOF lambda path is not codegen'd, and this is the
-        # per-row-cost hot spot of the operator (measured ~4x on sf0.1).
-        from pyspark.sql.functions import pandas_udf
+    planes_t = rng.standard_normal((n_tables * n_planes, dim)).T
+    weights = 1 << np.arange(n_planes - 1, -1, -1, dtype=np.int64)
 
-        planes_t = all_planes.T  # (dim, tables*planes)
-        weights = 1 << np.arange(n_planes - 1, -1, -1, dtype=np.int64)
-
-        @pandas_udf("array<long>")
-        def bucket_keys(vecs: pd.Series) -> pd.Series:
-            # base pre-filters NULL/wrong-length vectors, but stay
-            # defensive: a stray bad element must yield a NULL key array
-            # (row silently unbanded), never crash the task
-            vals = vecs.to_numpy()
-            ok = np.array(
-                [v is not None and len(v) == planes_t.shape[0] for v in vals]
-            )
-            out = np.empty(len(vals), dtype=object)
-            if ok.any():
-                m = np.stack(vals[ok])  # (n_ok, dim)
-                bits = (m @ planes_t) >= 0  # (n_ok, tables*planes)
-                bt = bits.reshape(int(ok.sum()), n_tables, n_planes)
-                keys = bt @ weights  # (n_ok, tables) ints
-                for j, i in enumerate(np.nonzero(ok)[0]):
-                    out[i] = keys[j]
-            return pd.Series(out)
-
-        tagged = base.select(
-            "_id",
-            F.posexplode(bucket_keys(F.col("_v").cast("array<double>"))),
-        ).select(
-            "_id", F.col("pos").alias("table"),
-            F.col("col").cast("string").alias("bkey"),
+    @pandas_udf("array<long>")
+    def bucket_keys(vecs: pd.Series) -> pd.Series:
+        # ((batch x dim) @ (dim x tables*planes)) sign bits -> one key per
+        # table. base pre-filters NULL/wrong-length vectors, but stay
+        # defensive: a stray bad element must yield a NULL key array
+        # (row silently unbanded), never crash the task
+        vals = vecs.to_numpy()
+        ok = np.array(
+            [v is not None and len(v) == planes_t.shape[0] for v in vals]
         )
-    else:
-        keys = []
-        v = F.col("_v").cast("array<double>")
-        for t in range(n_tables):
-            planes = all_planes[t * n_planes:(t + 1) * n_planes]
-            bits = [
-                F.when(dot(v, _vec_lit(p)) >= 0, F.lit("1")).otherwise(F.lit("0"))
-                for p in planes
-            ]
-            keys.append(
-                F.struct(F.lit(t).alias("table"), F.concat(*bits).alias("bkey"))
-            )
-        tagged = base.select(
-            "_id", F.explode(F.array(*keys)).alias("kk")
-        ).select("_id", "kk.table", "kk.bkey")
-    # narrow banding rows either way: the wide vector payload does NOT
-    # ride the bucket shuffle (keys are computed map-side, then dropped)
-    l, r_ = tagged.alias("l"), tagged.alias("r")
-    cand = (
-        l.join(
-            r_,
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        out = np.empty(len(vals), dtype=object)
+        if ok.any():
+            m = np.stack(vals[ok])  # (n_ok, dim)
+            bits = (m @ planes_t) >= 0  # (n_ok, tables*planes)
+            bt = bits.reshape(int(ok.sum()), n_tables, n_planes)
+            keys = bt @ weights  # (n_ok, tables) ints
+            for j, i in enumerate(np.nonzero(ok)[0]):
+                out[i] = keys[j]
+        return pd.Series(out)
+
+    # narrow banding rows: the wide vector payload does NOT ride the
+    # bucket shuffle (keys are computed map-side, then dropped)
+    tagged = base.select(
+        "_id",
+        F.posexplode(bucket_keys(F.col("_v").cast("array<double>"))),
+    ).select(
+        "_id", F.col("pos").alias("table"),
+        F.col("col").cast("string").alias("bkey"),
     )
-    if star_cand is not None:
-        # star candidates join the SAME verify as banding candidates
-        # (members were semi-joined out of base, so no pair repeats)
-        cand = cand.unionByName(star_cand)
-    # verify against the FULL vector table: star members are not in the
-    # collapsed `base`, but their pairs still need exact cosine
-    va = allv.select(F.col("_id").alias("id_a"), F.col("_v").alias("va"))
-    vb = allv.select(F.col("_id").alias("id_b"), F.col("_v").alias("vb"))
-    out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn(
-            "cosine_sim",
-            cosine(
-                F.col("va").cast("array<double>"),
-                F.col("vb").cast("array<double>"),
-            ),
-        )
+    cand = _band_join(
+        tagged, tagged, ["table", "bkey"], F.col("l._id") < F.col("r._id")
+    )
+    # star candidates join the SAME verify as banding candidates (members
+    # were semi-joined out of base, so no pair repeats); the verify reads
+    # the FULL vector table, since star members are not in `base`
+    out = _verify(
+        cand.unionByName(star_cand), allv, allv, "_v", "cosine_sim",
+        lambda a, b: cosine(a.cast("array<double>"), b.cast("array<double>")),
+        names=("va", "vb"),
     )
     return out.where(F.col("cosine_sim") >= cosine_threshold).select(
         "id_a", "id_b", "cosine_sim"

@@ -10,46 +10,42 @@ documents is
     1. shingled + banded ONCE (minhash_band_tables — the only per-batch
        shingling cost; the corpus index is read back, never recomputed),
     2. checked against the stored index via
-       minhash_cross_duplicates_prebanded; near-dup pairs append to the
-       output sink,
-    3. appended to the index itself (shingles + bands), so every LATER
+       minhash_cross_duplicates_prebanded; near-dup pairs are merged
+       into the output sink,
+    3. merged into the index itself (shingles + bands), so every LATER
        batch deduplicates against this one.
 
-Check-then-append ordering means a batch never matches itself;
+Index and batch are banded with the same fixed minhash parameters
+(dedup.N_HASHES, BANDS, SHINGLE_WORDS), so a stored index always
+matches the batches that probe it.
+
+Check-then-merge ordering means a batch never matches itself;
 within-batch self-dups are the batch-mode operators' job (run
 minhash_near_duplicates over the batch in the same handler if wanted).
 
 Delivery semantics: foreachBatch is at-least-once — a retried
-micro-batch re-appends its index rows and may re-emit pairs. The
-handler anti-joins the batch's own ids out of the corpus side before
-matching, so a redelivered batch whose rows already landed in the index
-can NOT match itself (no (id,id) or spurious within-batch pairs).
-
-Two sink modes close the remaining duplicate class:
-
-- upsert=True (default): every write goes through the TableIO keyed
-  upsert (`sources.tables.merge_keyed`) — shingles keyed by _id, bands
-  by (_id, band), pairs by (new_id, corpus_id). A redelivered
-  micro-batch replaces its own identical rows, so the index AND the
-  pairs sink are row-identical to a single delivery (exactly-once
-  observable state; test_streaming pins this). On iceberg:// paths
-  merge_keyed is a real MERGE INTO with atomic snapshot commits; the
-  local-parquet stand-in rewrites the table per merge through the
-  crash-safe `sources.tables.swap_in` (new copy written beside the
-  table, old copy renamed aside, new copy renamed in), and recovers an
-  interrupted swap before it reads, so a crash at any point keeps the
-  prior index rows (O(table) per merge — the sandbox price, which is
-  why the seam exists).
-- upsert=False: plain parquet appends — cheapest writes; duplicated
-  index rows only cost work (band joins dropDuplicates per run, never
-  wrong jaccard values) and re-emitted identical pair rows remain, so
-  consumers read DISTINCT or key the sink downstream.
+micro-batch runs its handler again. The handler anti-joins the batch's
+own ids out of the corpus side before matching, so a redelivered batch
+whose rows already landed in the index can NOT match itself (no (id,id)
+or spurious within-batch pairs). Every write goes through the TableIO
+keyed merge (`sources.tables.merge_keyed`) — shingles keyed by _id,
+bands by (_id, band), pairs by (new_id, corpus_id) — so a redelivered
+micro-batch replaces its own identical rows and the index AND the pairs
+sink are row-identical to a single delivery (exactly-once observable
+state; test_streaming pins this). On iceberg:// paths merge_keyed is a
+real MERGE INTO with atomic snapshot commits; the local-parquet
+stand-in rewrites the table per merge through the crash-safe
+`sources.tables.swap_in` (new copy written beside the table, old copy
+renamed aside, new copy renamed in), and recovers an interrupted swap
+before it reads, so a crash at any point keeps the prior index rows
+(O(table) per merge — the sandbox price, which is why the seam exists).
 
 Redelivery != backfill: checkpoint redelivery only ever replays the
 LAST uncommitted micro-batch (committed batches never rewind), which
-both guards above make a state no-op. Re-running an OLD batch against
-an index that already holds LATER batches (fresh checkpoint over the
-same source while keeping the index) is a different operation — each
+the anti-join and the keyed merges make a state no-op. Re-running an
+OLD batch against an index that already holds LATER batches (fresh
+checkpoint over the same source while keeping the index) is a
+different operation — each
 old document would "detect" every newer near-dup in REVERSED
 (new_id, corpus_id) orientation. To backfill, reset the index with the
 checkpoint or use the batch operator (minhash_near_duplicates) over
@@ -77,19 +73,15 @@ def minhash_stream_dedup(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_hashes: int = 64,
-    bands: int = 16,
-    shingle_words: int = 3,
     jaccard_threshold: float = 0.7,
     trigger_seconds: int | None = None,
-    upsert: bool = True,
 ):
     """Start the incremental-dedup stream. Returns the StreamingQuery.
 
     index_dir: the standing minhash index (shingles/ + bands/ parquet;
     created on first batch). pairs_dir: sink of
-    (new_id, corpus_id, jaccard) detections. upsert: keyed exactly-once
-    writes via merge_keyed (see module docstring) vs plain appends."""
+    (new_id, corpus_id, jaccard) detections, written with keyed
+    exactly-once merges (see module docstring)."""
     from typical_spark.sources.tables import merge_keyed
 
     sh_path = os.path.join(index_dir, "shingles")
@@ -99,9 +91,7 @@ def minhash_stream_dedup(
         if not batch_df.head(1):
             return  # empty micro-batch: nothing to band or append
         spark = batch_df.sparkSession
-        sh_new, band_new = minhash_band_tables(
-            batch_df, id_col, text_col, n_hashes, bands, shingle_words
-        )
+        sh_new, band_new = minhash_band_tables(batch_df, id_col, text_col)
         # local-FS existence probe; on HDFS/S3 check via the Hadoop FS
         # API or make the index an Iceberg table (read of a missing path
         # would throw, and "no index yet" is a normal first-batch state)
@@ -121,17 +111,10 @@ def minhash_stream_dedup(
             pairs = minhash_cross_duplicates_prebanded(
                 sh_new, band_new, corpus_sh, corpus_band, jaccard_threshold
             )
-            if upsert:
-                merge_keyed(pairs, pairs_dir, ["new_id", "corpus_id"])
-            else:
-                pairs.write.mode("append").parquet(pairs_dir)
+            merge_keyed(pairs, pairs_dir, ["new_id", "corpus_id"])
         # grow the index AFTER the check: a batch never matches itself
-        if upsert:
-            merge_keyed(sh_new, sh_path, ["_id"])
-            merge_keyed(band_new, band_path, ["_id", "band"])
-        else:
-            sh_new.write.mode("append").parquet(sh_path)
-            band_new.write.mode("append").parquet(band_path)
+        merge_keyed(sh_new, sh_path, ["_id"])
+        merge_keyed(band_new, band_path, ["_id", "band"])
         release_cache(band_new)  # the shared shingle persist is done
 
     return streaming_verdicts(stream, handle, checkpoint_dir, trigger_seconds)
