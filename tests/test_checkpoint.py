@@ -173,6 +173,38 @@ def test_incremental_revalidates_every_bucket_when_the_plan_changes(
     assert upgraded.run_incremental(df)["buckets_carried"] == 0
 
 
+def test_resume_revalidates_buckets_done_under_another_plan(spark, transcripts_df, tmp_path):
+    """A run crashes under one spec and the same run id resumes under
+    another: the bucket finished before the crash was validated under
+    the old plan, so it is re-validated, and the output equals a fresh
+    run under the new spec."""
+    import dataclasses
+
+    df = transcripts_df.withColumn(
+        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(2)).cast("int")
+    ).localCheckpoint()
+    spec = transcript_spec()
+    no_role = dataclasses.replace(spec, fields=tuple(
+        dataclasses.replace(f, checks=()) if f.name == "role" else f
+        for f in spec.fields
+    ))
+    out = str(tmp_path / "ckpt")
+    crashed = CheckpointedRun(spark, compile_table_spec(spec), out, run_id="r")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        crashed.run(df, fail_after=1)
+    assert crashed.completed_buckets() == {0}
+    old_bucket0 = _rows(crashed.violations().where("bucket = 0"))
+
+    resumed = CheckpointedRun(spark, compile_table_spec(no_role), out, run_id="r")
+    assert resumed.completed_buckets() == set()
+    assert resumed.run(df)["buckets_processed"] == 2
+    fresh = CheckpointedRun(spark, compile_table_spec(no_role), str(tmp_path / "ref"), run_id="r")
+    fresh.run(df)
+    got = _rows(resumed.violations().where("bucket = 0"))
+    assert got == _rows(fresh.violations().where("bucket = 0")) != old_bucket0
+    assert _rows(resumed.violations()) == _rows(fresh.violations())
+
+
 def test_rerun_is_noop(spark, bucketed_df):
     plan = compile_table_spec(transcript_spec())
     tmp = tempfile.mkdtemp(prefix="ckpt_")

@@ -7,7 +7,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from typical_spark.operators.drift import TDigest, drift_report, partition_digests
+from typical_spark.operators.drift import (
+    PROBE_QUANTILES,
+    TDigest,
+    drift_report,
+    ks_at_probes,
+    partition_digests,
+)
 
 
 def test_tdigest_quantile_accuracy():
@@ -178,3 +184,62 @@ def test_psi_by_group_exact_vs_numpy(spark):
         assert abs(got[g]["psi"] - expect) < 1e-9, g
         assert got[g]["drifted"] == (expect > 1.0)
     assert got["a"]["drifted"] is False and got["b"]["drifted"] is True
+
+
+@pytest.fixture(scope="module")
+def digest_input(spark):
+    """Three continuous groups plus a 1-row, a 3-distinct-value and an
+    all-NULL group, cached so every run reads the same partitions."""
+    rng = np.random.default_rng(12)
+    rows = [(g, float(v)) for g, mu in (("a", 0.0), ("b", 0.5), ("c", 3.0))
+            for v in rng.normal(mu, 1.0, size=15_000)]
+    rows += [("one", 7.0), ("three", 1.0), ("three", 2.0), ("three", 3.0),
+             ("null", None), ("null", None)]
+    df = spark.createDataFrame(rows, "g string, v double").repartition(4).cache()
+    df.count()
+    yield df, rows
+    df.unpersist()
+
+
+def _digests(df):
+    return {r["group_id"]: r for r in partition_digests(df, "v", "g").collect()}
+
+
+def test_partition_digests_repeatable_and_partitioning_stable(digest_input):
+    """Fixed input and partitioning give identical rows; another
+    partitioning of the same rows gives digests within 0.02 KS."""
+    df, _ = digest_input
+    first = _digests(df)
+    assert first == _digests(df)
+    other = _digests(df.repartition(3))
+    for g in ("a", "b", "c"):
+        d, d3 = TDigest.from_row(first[g]), TDigest.from_row(other[g])
+        assert ks_at_probes(d3, d) < 0.02, g
+
+
+def test_partition_digests_small_and_null_groups(digest_input):
+    rows = _digests(digest_input[0])
+    assert (rows["one"]["n"], rows["one"]["means"], rows["one"]["weights"]) == (1.0, [7.0], [1.0])
+    three = rows["three"]
+    assert three["n"] == 3.0 and three["means"] == [1.0, 2.0, 3.0]
+    assert all(abs(w - 1.0) < 0.05 for w in three["weights"]), three["weights"]
+    assert abs(sum(three["weights"]) - 3.0) < 1e-9
+    assert (rows["null"]["n"], rows["null"]["means"], rows["null"]["weights"]) == (0.0, [], [])
+
+
+def test_partition_digests_ks_matches_exact_ecdf(digest_input):
+    """Each continuous group's digest KS against the merged global
+    digest is within 2e-3 of the exact ECDF gap at the same probes."""
+    df, rows = digest_input
+    digests = {g: TDigest.from_row(r) for g, r in _digests(df).items()}
+    glob = TDigest.merge_all(list(digests.values()))
+    probes = glob.quantile(np.asarray(PROBE_QUANTILES))
+
+    def ecdf(v):
+        v = np.sort(np.asarray(v, dtype=np.float64))
+        return np.searchsorted(v, probes, side="right") / len(v)
+
+    every = [v for _, v in rows if v is not None]
+    for g in ("a", "b", "c"):
+        exact = np.max(np.abs(ecdf([v for k, v in rows if k == g]) - ecdf(every)))
+        assert abs(ks_at_probes(digests[g], glob) - exact) < 2e-3, g

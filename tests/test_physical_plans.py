@@ -440,3 +440,28 @@ def test_global_shuffle_never_global_sorts(spark):
     assert "hashpartitioning(shard" in p
     assert "rangepartitioning" not in p
     assert "SinglePartition" not in p
+
+
+def test_partition_digests_shuffles_sketches_not_values(spark):
+    """partition_digests is one native grouped aggregate: no Python-eval
+    node, and its only Exchange sits above a partial aggregate, so the
+    shuffle carries per-task quantile summaries, never the values."""
+    from typical_spark.operators.drift import partition_digests
+
+    df = spark.range(2000).select(
+        (F.col("id") % 4).alias("g"), (F.col("id") * 0.5).alias("v")
+    )
+    root = partition_digests(df, "v", "g")._jdf.queryExecution().executedPlan()
+    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        root = root.executedPlan()
+    names = [n.getClass().getSimpleName() for n in _walk(root)]
+    assert not [n for n in names if "Python" in n or "Pandas" in n], names
+    exchanges = [n for n in _walk(root) if "Exchange" in n.getClass().getSimpleName()]
+    assert len(exchanges) == 1, names
+    partial = exchanges[0].child()
+    assert partial.getClass().getSimpleName().endswith("AggregateExec"), names
+    modes = {
+        partial.aggregateExpressions().apply(i).mode().toString()
+        for i in range(partial.aggregateExpressions().size())
+    }
+    assert modes == {"Partial"}, modes

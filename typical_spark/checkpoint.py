@@ -34,7 +34,8 @@ is also read with pyarrow on the driver, so no Spark job touches it.
 Like StageCheckpoint's marker this assumes a POSIX path with atomic
 rename; on Iceberg the equivalent commit is one `append`.
 
-Resume = read the manifest, subtract completed buckets, process the rest.
+Resume = read the manifest, subtract the buckets this run id completed
+under the current plan (or a NULL one), process the rest.
 A bucket is only ever marked complete AFTER its violations are durably
 written, so a crash between write and mark re-processes one bucket
 (at-least-once; the violations sink is keyed by bucket so re-writes
@@ -113,7 +114,8 @@ class CheckpointedRun:
         return [r for r in rows if r["status"] == "done"]
 
     def completed_buckets(self) -> set[int]:
-        return {r["bucket"] for r in self._done_rows() if r["run_id"] == self.run_id}
+        mine = [r for r in self._done_rows() if r["run_id"] == self.run_id]
+        return {r["bucket"] for r in mine if r["plan"] in (None, self.plan_digest)}
 
     def _append_manifest(self, rows: list[tuple]) -> None:
         """Commit (bucket, n_rows, n_violations, wall_s, fingerprint,

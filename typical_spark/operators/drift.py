@@ -2,26 +2,22 @@
 
 No reference analog (typical is exact and per-value); mandated by
 BASELINE.json north_star: "distribution-drift detection via t-digest
-quantile sketches compared across partitions". Algorithm: Dunning &
-Ertl's t-digest (batch construction with the k1 scale function), built
-fully vectorized in numpy inside `applyInPandas` — one digest per
-partition group, Arrow-batched, no per-row Python.
+quantile sketches compared across partitions". The sketch is a k1-scale
+t-digest (Dunning & Ertl): ~100 centroids, dense near the tails.
 
-Two-phase plan (the same shape as Spark's partial aggregation):
-  phase 1 (executors): groupBy(partition_col).applyInPandas -> one
-      ~O(compression) centroid sketch per group; shuffle carries only
-      sketches, never values.
-  phase 2 (driver): merge the tiny sketches into a global digest
+Two-phase plan:
+  phase 1 (executors): `partition_digests`, one native grouped aggregate:
+      `percentile_approx` (a Greenwald-Khanna summary) runs partial ->
+      final in the JVM, so the shuffle carries summaries, never values,
+      and no Python worker starts. Its quantiles at the k1 bin midpoints
+      are the centroids; fixed input and partitioning give fixed rows.
+  phase 2 (driver): merge the sketches (n_groups * compression * 16
+      bytes, a few MB for thousands of buckets) into a global digest
       (deterministic: centroids sorted by mean before re-binning, so
       merge order cannot change the result — SURVEY.md §7 hard part d).
 Drift stat per partition: max over probe quantiles of
 |CDF_partition(x) - CDF_global(x)| (a Kolmogorov-Smirnov distance
 estimated from the digests).
-
-At 10^12 rows: phase 1 is embarrassingly parallel; phase 2 moves
-n_groups * compression * 16 bytes — a few MB for thousands of buckets.
-`percentile_approx` (Greenwald-Khanna) remains available as a
-cross-check (tests do both).
 """
 
 from __future__ import annotations
@@ -31,11 +27,15 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # the quantiles of the reference digest at which KS distances are probed
 PROBE_QUANTILES = (0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95)
+# centroids per digest (k1 bins), and the rank accuracy of the
+# Greenwald-Khanna summary behind `percentile_approx` (error n / ACCURACY)
+COMPRESSION = 100
+ACCURACY = 10_000
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +55,6 @@ def _k1_boundaries(delta: int) -> np.ndarray:
 class TDigest:
     means: np.ndarray    # centroid means, ascending
     weights: np.ndarray  # centroid weights
-    compression: int = 100
 
     @property
     def total_weight(self) -> float:
@@ -63,18 +62,15 @@ class TDigest:
 
     @classmethod
     def from_values(
-        cls, values: np.ndarray, compression: int = 100,
+        cls, values: np.ndarray, compression: int = COMPRESSION,
         weights: np.ndarray | None = None,
     ) -> "TDigest":
         v = np.asarray(values, dtype=np.float64)
-        if weights is None:
-            w = np.ones_like(v)
-        else:
-            w = np.asarray(weights, dtype=np.float64)
+        w = np.ones_like(v) if weights is None else np.asarray(weights, dtype=np.float64)
         mask = ~np.isnan(v)
         v, w = v[mask], w[mask]
         if len(v) == 0:
-            return cls(np.empty(0), np.empty(0), compression)
+            return cls(np.empty(0), np.empty(0))
         order = np.argsort(v, kind="mergesort")
         v, w = v[order], w[order]
         cum = np.cumsum(w)
@@ -86,17 +82,17 @@ class TDigest:
         wsum = np.bincount(bins, weights=w, minlength=compression)
         msum = np.bincount(bins, weights=v * w, minlength=compression)
         nz = wsum > 0
-        return cls(msum[nz] / wsum[nz], wsum[nz], compression)
+        return cls(msum[nz] / wsum[nz], wsum[nz])
 
     @classmethod
-    def merge_all(cls, digests: list["TDigest"], compression: int = 100) -> "TDigest":
+    def merge_all(cls, digests: list["TDigest"]) -> "TDigest":
         ds = [d for d in digests if len(d.means)]
         if not ds:
-            return cls(np.empty(0), np.empty(0), compression)
+            return cls(np.empty(0), np.empty(0))
         means = np.concatenate([d.means for d in ds])
         weights = np.concatenate([d.weights for d in ds])
         # re-binning sorted-by-mean centroids is merge-order independent
-        return cls.from_values(means, compression, weights=weights)
+        return cls.from_values(means, weights=weights)
 
     def quantile(self, q) -> np.ndarray:
         """Interpolated quantile(s) at probability q (scalar or array)."""
@@ -149,23 +145,32 @@ def ks_at_probes(d: TDigest, ref: TDigest) -> float:
 # Spark two-phase drift operator
 # ---------------------------------------------------------------------------
 
-_SKETCH_SCHEMA = (
-    "group_id string, n double, means array<double>, weights array<double>"
-)
-
 
 def partition_digests(df: DataFrame, value_col, group_col) -> DataFrame:
-    """Phase 1: one t-digest sketch per group (Arrow-batched grouped map)."""
-    gdf = df.select(
-        F.col(group_col).cast("string").alias("group_id"),
-        F.col(value_col).cast("double").alias("__v"),
+    """Phase 1: one sketch row (group_id, n, means, weights) per group from
+    one native aggregate: the GK quantile at each k1 bin's rank midpoint,
+    weighted by the bin's rank mass, equal quantiles (ties) collapsed into
+    one centroid. An all-NULL group gives n = 0 and empty arrays."""
+    b = _k1_boundaries(COMPRESSION)
+    bounds = F.array(*[F.lit(float(x)) for x in b])
+    q, n, none = F.col("_q"), F.col("n"), F.array().cast("array<double>")
+
+    def weight(m):
+        # rank mass of m's bins: the bound after the last (from the end) - before the first
+        last = F.array_position(F.reverse(q), m).cast("int")
+        first = F.array_position(q, m).cast("int")
+        return n * (F.element_at(bounds, -last) - F.element_at(bounds, first))
+
+    means = F.array_distinct(q)
+    v = F.nanvl(F.col(value_col).cast("double"), F.lit(None).cast("double"))
+    return (
+        df.select(F.col(group_col).cast("string").alias("group_id"), v.alias("_v"))
+        .groupBy("group_id")
+        .agg(F.count("_v").cast("double").alias("n"),
+             F.percentile_approx("_v", list((b[:-1] + b[1:]) / 2), ACCURACY).alias("_q"))
+        .select("group_id", "n", F.coalesce(means, none).alias("means"),
+                F.coalesce(F.transform(means, weight), none).alias("weights"))
     )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = TDigest.from_values(pdf["__v"].to_numpy())
-        return pd.DataFrame([{"group_id": pdf["group_id"].iloc[0], **d.to_row()}])
-
-    return gdf.groupBy("group_id").applyInPandas(build, _SKETCH_SCHEMA)
 
 
 def drift_report(
@@ -218,8 +223,6 @@ def ks_two_sample(
     INCLUSIVE of the current value handles ties exactly.
 
     Output: one row (n_a, n_b, ks_stat)."""
-    from pyspark.sql import Window
-
     vals = df.where(
         F.col(group_col).isin([group_a, group_b])
         & F.col(value_col).isNotNull()
@@ -316,8 +319,6 @@ def ks_by_group(
     `drifted` is derived from the ROUNDED statistic so both engines
     compare the same 6-decimal value.
     """
-    from pyspark.sql import Window
-
     vals = _group_values(df, value_col, group_col)
     cnt = vals.groupBy("group_id", "_v").agg(F.count(F.lit(1)).alias("_c"))
     cnt = cnt.persist()  # reused 4x (grid, totals, grand, probe join)

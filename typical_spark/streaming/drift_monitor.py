@@ -6,19 +6,17 @@ t-digest quantile sketches compared across partitions").
 foreachBatch shape (streaming_verdicts bridge):
 
     1. each micro-batch sketches its values per group
-       (drift.partition_digests — one Arrow pass over the batch),
+       (drift.partition_digests — one native aggregate, no Python worker),
     2. the per-batch digests are upserted into a state table KEYED BY
-       (batch_id, group_id) via the TableIO keyed upsert
-       (sources.tables.merge_keyed): a redelivered micro-batch REPLACES
-       its own rows, so the state is row-identical to a single delivery
-       (exactly-once observable state — same discipline as
-       incremental.minhash_stream_dedup's index),
+       (batch_id, group_id) via sources.tables.merge_keyed: a
+       redelivered micro-batch REPLACES its own rows with the same rows
+       (the digest is deterministic for a fixed input and partitioning),
+       so the state is row-identical to a single delivery,
     3. the RUNNING digest per group = t-digest merge of all per-batch
-       rows (merge is associative and order-independent —
-       test_tdigest_merge_order_independent pins it), compared against
-       a REFERENCE digest table at drift.PROBE_QUANTILES; one verdict
-       row (batch_id, group_id, n, ks_stat, drifted) per group is
-       upserted per batch.
+       rows (order-independent — test_tdigest_merge_order_independent),
+       compared against a REFERENCE digest table at
+       drift.PROBE_QUANTILES; one verdict row (batch_id, group_id, n,
+       ks_stat, drifted) per group is upserted per batch.
 
 The sketch row format (TDigest.from_row / to_row / merge_rows) and the
 KS comparison (drift.ks_at_probes) are drift_report's own; only the
@@ -27,16 +25,15 @@ global one).
 
 Keeping PER-BATCH digests (not one mutable running row) is what makes
 redelivery idempotent without read-modify-write races: state size is
-O(#batches x |groups|) rows of ~100 centroids — tiny; on a years-long
-stream, `compact_state` folds old batches into one row per group (safe:
+O(#batches x |groups|) rows of ~100 centroids; on a years-long stream,
+`compact_state` folds old batches into one row per group (safe:
 redelivery only replays the LAST uncommitted batch). On local parquet,
 every rewrite of the state, verdict and reference tables goes through
 sources.tables.swap_in, and every read-before-rewrite first runs
 recover_swap, so a crash at any point loses no committed row.
 
-Driver-side bounds: digests and verdicts are O(|groups|) rows per batch
-(the same bounded-collect contract as drift.drift_report); the raw
-stream values never leave the executors.
+Driver-side bounds: digests and verdicts are O(|groups|) rows per batch;
+the raw stream values never leave the executors.
 """
 
 from __future__ import annotations
