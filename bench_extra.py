@@ -5,6 +5,7 @@ measurement harness; numbers from here are cited in OPTIMIZATION_r06.md.
 
 Usage:
   python bench_extra.py flagship          # component breakdown at 16M turns
+  python bench_extra.py build [N]         # driver plan build per flagship builder
   python bench_extra.py query <name> [N]  # warm min-of-N (default 3) noop-sink
   python bench_extra.py explain <name>    # formatted plan to stdout
 """
@@ -109,6 +110,46 @@ def flagship_components(repeats: int = 3):
     )
 
 
+def plan_build(repeats: int = 10):
+    """The driver plan build (py4j) layer of each flagship builder: the
+    median wall time to build its DataFrame, with no Spark action, and the
+    py4j round trips one build sends, on the 40.2k-turn bucketed table
+    (`scaled_dataset(20_000, 2, buckets=4)`)."""
+    import statistics
+
+    from pyspark.sql import functions as F
+
+    from typical_spark import compile_table_spec
+    from typical_spark.operators.drift import partition_digests
+    from typical_spark.operators.stats import column_stats
+    from typical_spark.pipeline import full_validation
+    from typical_spark.session import count_jvm_calls
+    from typical_spark.sources.transcripts import scaled_dataset
+    from typical_spark.specs import transcript_spec
+
+    spark = _spark()
+    tdf, cdf = scaled_dataset(spark, 20_000, 2, buckets=4)
+    tsd = tdf.withColumn("tsd", F.unix_timestamp("ts").cast("double"))
+    plan = compile_table_spec(transcript_spec())
+    builders = {
+        "compile_table_spec": lambda: compile_table_spec(transcript_spec()),
+        "full_validation": lambda: full_validation(plan, tdf, cdf),
+        "column_stats": lambda: column_stats(tdf, ["turn_idx", "text", "ts"]),
+        "partition_digests": lambda: partition_digests(tsd, "tsd", "bucket"),
+    }
+    for label, build in builders.items():
+        build()
+        walls = []
+        for _ in range(repeats):
+            t0 = time.perf_counter()
+            build()
+            walls.append(time.perf_counter() - t0)
+        with count_jvm_calls(spark) as n:
+            build()
+        ms = statistics.median(walls) * 1e3
+        print(f"{label:20s} build_ms={ms:7.1f}  round_trips={n[0]}")
+
+
 def run_query(name: str, repeats: int = 3):
     import __spark_entry__ as entrymod
 
@@ -136,6 +177,8 @@ if __name__ == "__main__":
     cmd = sys.argv[1]
     if cmd == "flagship":
         flagship_components(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
+    elif cmd == "build":
+        plan_build(int(sys.argv[2]) if len(sys.argv) > 2 else 10)
     elif cmd == "query":
         run_query(sys.argv[2], int(sys.argv[3]) if len(sys.argv) > 3 else 3)
     elif cmd == "explain":

@@ -176,3 +176,31 @@ def test_full_validation_edge_rows_pinned(fused):
         ("c90000002", 3, "ts_out_of_order", "2025-03-01 12:00:14.25",
          ">= prev ts 2025-03-01 12:00:15"),
     ])
+
+
+def test_dirty_dim_gives_the_same_rows(spark, frames, fused):
+    """A conversations table with duplicate and NULL conv_ids gives the
+    rows of the deduplicated one: EXISTS and the anti join need no
+    distinct keys, a NULL dim key matches nothing, and a missing conv
+    still fails (the EXISTS flag is false, never NULL, so a NULL in the
+    dim cannot hide a miss the way it does in NOT IN). NULL-conv turns
+    take no referential check."""
+    _, conv, tdf, cdf = frames
+    plan, rows = fused
+    dirty = pd.concat(
+        [conv, conv.head(40), pd.DataFrame({"conv_id": [None, None]})],
+        ignore_index=True,
+    )
+    assert dirty["conv_id"].duplicated().any() and dirty["conv_id"].isna().any()
+    ddf = spark.createDataFrame(dirty, "conv_id string")
+
+    got = full_validation(plan, tdf, ddf).select(*COLS).collect()
+    assert Counter(tuple(r) for r in got) == Counter(tuple(r) for r in rows)
+    referential = [r for r in got if r["check_id"] == "referential"]
+    assert referential and all(r["conv_id"] is not None for r in referential)
+
+    def anti(dim):
+        rows = referential_violations(tdf, dim, ["conv_id"]).collect()
+        return Counter(tuple(r) for r in rows)
+
+    assert anti(ddf) == anti(cdf)

@@ -274,6 +274,48 @@ def test_full_validation_bucketed_window_has_no_exchange_or_sort(
         spark.sql("DROP TABLE IF EXISTS bk_flagship")
 
 
+def _initial_plan(df):
+    """The physical plan before AQE re-plans it: the executed (final)
+    plans flap from run to run, the initial one does not."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        root = root.initialPlan()
+    return root
+
+
+def test_full_validation_dim_check_is_broadcast_exists(
+    spark, transcripts_df, tmp_path
+):
+    """The referential flag is a correlated EXISTS on the non-NULL branch,
+    planned as a broadcast ExistenceJoin: the dim is scanned once and
+    never deduplicated (no Aggregate on its side), so the only shuffles
+    are the two window Exchanges (conv_id for the non-NULL rows, turn_idx
+    for the NULL ones). A dedup of the dim adds an Aggregate and a third
+    Exchange before its broadcast."""
+    from typical_spark.pipeline import full_validation
+    from typical_spark.sources.transcripts import generate_conversations_pdf
+
+    dim_path = str(tmp_path / "conversations")
+    spark.createDataFrame(
+        generate_conversations_pdf(transcripts_df.toPandas())[["conv_id"]]
+    ).write.parquet(dim_path)
+    plan = compile_table_spec(transcript_spec())
+    out = full_validation(plan, transcripts_df, spark.read.parquet(dim_path))
+    nodes = list(_walk(_initial_plan(out)))
+    names = [n.getClass().getSimpleName() for n in nodes]
+
+    joins = [n for n, name in zip(nodes, names) if name == "BroadcastHashJoinExec"]
+    assert len(joins) == 1, names
+    join_type = joins[0].joinType().toString()
+    assert join_type.startswith("ExistenceJoin"), join_type
+    dim_side = [m.getClass().getSimpleName() for m in _walk(joins[0].right())]
+    assert dim_side[0] == "BroadcastExchangeExec", dim_side
+    assert not [m for m in dim_side if "Aggregate" in m], dim_side
+    assert names.count("ShuffleExchangeExec") == 2, names
+    assert names.count("FileSourceScanExec") == 1, names  # the dim, once
+    out.count()  # executes
+
+
 def test_parsed_url_computed_once_per_row(spark):
     """attach_parsed_url's Generate barrier must keep the URL parse at
     ONE evaluation per row: reading N components from an inline

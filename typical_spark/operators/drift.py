@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from typical_spark import sql_text
+
 # the quantiles of the reference digest at which KS distances are probed
 PROBE_QUANTILES = (0.05, 0.1, 0.25, 0.5, 0.75, 0.9, 0.95)
 # centroids per digest (k1 bins), and the rank accuracy of the
@@ -150,26 +152,31 @@ def partition_digests(df: DataFrame, value_col, group_col) -> DataFrame:
     """Phase 1: one sketch row (group_id, n, means, weights) per group from
     one native aggregate: the GK quantile at each k1 bin's rank midpoint,
     weighted by the bin's rank mass, equal quantiles (ties) collapsed into
-    one centroid. An all-NULL group gives n = 0 and empty arrays."""
+    one centroid. An all-NULL group gives n = 0 and empty arrays.
+
+    The 101 bin bounds and 100 midpoints reach the JVM as parsed array
+    literals: an `F.array` of `F.lit`s would cost three py4j round trips
+    per element, more driver time than running the plan on a small
+    table."""
     b = _k1_boundaries(COMPRESSION)
-    bounds = F.array(*[F.lit(float(x)) for x in b])
-    q, n, none = F.col("_q"), F.col("n"), F.array().cast("array<double>")
-
-    def weight(m):
-        # rank mass of m's bins: the bound after the last (from the end) - before the first
-        last = F.array_position(F.reverse(q), m).cast("int")
-        first = F.array_position(q, m).cast("int")
-        return n * (F.element_at(bounds, -last) - F.element_at(bounds, first))
-
-    means = F.array_distinct(q)
+    bounds = sql_text.double_array(b)
+    # rank mass of each distinct quantile m: the bound after its last bin
+    # (found from the end) minus the bound before its first bin
+    weights = (
+        "transform(array_distinct(_q), m -> n * ("
+        f"element_at({bounds}, -CAST(array_position(reverse(_q), m) AS INT))"
+        f" - element_at({bounds}, CAST(array_position(_q, m) AS INT))))"
+    )
+    none = "CAST(array() AS ARRAY<DOUBLE>)"
     v = F.nanvl(F.col(value_col).cast("double"), F.lit(None).cast("double"))
+    mids = F.expr(sql_text.double_array((b[:-1] + b[1:]) / 2))
     return (
-        df.select(F.col(group_col).cast("string").alias("group_id"), v.alias("_v"))
-        .groupBy("group_id")
-        .agg(F.count("_v").cast("double").alias("n"),
-             F.percentile_approx("_v", list((b[:-1] + b[1:]) / 2), ACCURACY).alias("_q"))
-        .select("group_id", "n", F.coalesce(means, none).alias("means"),
-                F.coalesce(F.transform(means, weight), none).alias("weights"))
+        df.groupBy(F.col(group_col).cast("string").alias("group_id"))
+        .agg(F.count(v).cast("double").alias("n"),
+             F.percentile_approx(v, mids, ACCURACY).alias("_q"))
+        .selectExpr("group_id", "n",
+                    f"coalesce(array_distinct(_q), {none}) AS means",
+                    f"coalesce({weights}, {none}) AS weights")
     )
 
 

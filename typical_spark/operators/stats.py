@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from typical_spark import sql_text
+
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
     T.FloatType, T.DoubleType, T.DecimalType,
@@ -41,24 +43,28 @@ def column_stats(
     fields = {f.name: f.dataType for f in df.schema.fields}
     columns = list(columns or fields)
 
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for c in columns:
-        col = F.col(c)
-        aggs.append(F.sum(col.isNull().cast("long")).alias(f"{c}__nulls"))
+    # Every aggregate and the pivot are SQL text, parsed in the JVM in
+    # one call per DataFrame step: built from `F.*` calls, each column
+    # would cost ~50 py4j round trips before Spark sees the plan.
+    aggs = ["count(1) AS __n"]
+    for i, c in enumerate(columns):
+        col = sql_text.ident(c)
+        aggs.append(f"sum(CAST({col} IS NULL AS BIGINT)) AS _{i}_nulls")
         if not exact:
             # HLL sketches aggregate like any other buffer — keep them in
             # the single pass.
-            aggs.append(F.approx_count_distinct(col, rsd).alias(f"{c}__dist"))
-        aggs.append(F.min(col).cast("string").alias(f"{c}__min"))
-        aggs.append(F.max(col).cast("string").alias(f"{c}__max"))
+            rsd_lit = sql_text.double(rsd)
+            aggs.append(f"approx_count_distinct({col}, {rsd_lit}) AS _{i}_dist")
+        aggs.append(f"CAST(min({col}) AS STRING) AS _{i}_min")
+        aggs.append(f"CAST(max({col}) AS STRING) AS _{i}_max")
         if isinstance(fields[c], _NUMERIC):
-            aggs.append(F.avg(col).cast("double").alias(f"{c}__avg"))
-            aggs.append(F.stddev_samp(col).cast("double").alias(f"{c}__std"))
+            aggs.append(f"CAST(avg({col}) AS DOUBLE) AS _{i}_avg")
+            aggs.append(f"CAST(stddev_samp({col}) AS DOUBLE) AS _{i}_std")
         else:
-            aggs.append(F.lit(None).cast("double").alias(f"{c}__avg"))
-            aggs.append(F.lit(None).cast("double").alias(f"{c}__std"))
+            aggs.append(f"CAST(NULL AS DOUBLE) AS _{i}_avg")
+            aggs.append(f"CAST(NULL AS DOUBLE) AS _{i}_std")
 
-    wide = df.agg(*aggs)
+    wide = df.selectExpr(*aggs)
 
     if exact:
         # Exact distincts go in their OWN aggregation: Catalyst implements
@@ -67,27 +73,21 @@ def column_stats(
         # same operator makes every copy carry all of them (measured 6x
         # slower fused than split at sf0.1). Both results are single rows,
         # so the recombining cross join is free.
-        dist = df.agg(
-            *[F.count_distinct(F.col(c)).alias(f"{c}__dist") for c in columns]
-        )
+        dist = df.selectExpr(*[
+            f"count(DISTINCT {sql_text.ident(c)}) AS _{i}_dist"
+            for i, c in enumerate(columns)
+        ])
         wide = wide.crossJoin(dist)
 
-    # pivot wide -> long with a single stack (still one aggregation job)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("__n").alias("n_rows"),
-            F.col(f"{c}__nulls").alias("n_null"),
-            (F.col(f"{c}__nulls") / F.col("__n")).alias("null_rate"),
-            F.col(f"{c}__dist").alias("n_distinct"),
-            F.col(f"{c}__min").alias("min_value"),
-            F.col(f"{c}__max").alias("max_value"),
-            F.col(f"{c}__avg").alias("avg_value"),
-            F.col(f"{c}__std").alias("stddev_value"),
-        )
-        for c in columns
-    ]
-    return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    # pivot wide -> long with a single inline (still one aggregation job)
+    structs = ", ".join(
+        f"named_struct('column', {sql_text.string(c)}, 'n_rows', __n, "
+        f"'n_null', _{i}_nulls, 'null_rate', _{i}_nulls / __n, "
+        f"'n_distinct', _{i}_dist, 'min_value', _{i}_min, 'max_value', _{i}_max, "
+        f"'avg_value', _{i}_avg, 'stddev_value', _{i}_std)"
+        for i, c in enumerate(columns)
+    )
+    return wide.selectExpr(f"inline(array({structs}))")
 
 
 def grouped_stats(

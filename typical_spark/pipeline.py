@@ -8,18 +8,22 @@ common schema
     (conv_id, turn_idx, column, check_id, observed, expected)
 
 from ONE scan of the narrow columns they need (conv_id, turn_idx, ts,
-role) plus the scan-local row-check array. The conversations table is
-broadcast-joined before any shuffle. Rows with a conv_id get both of
-their windows from one sort by (conv_id, turn_idx, ts, role), so on a
+role) plus the scan-local row-check array. Rows with a conv_id get both
+of their windows from one sort by (conv_id, turn_idx, ts, role), so on a
 table bucketed by conv_id and sorted that way they need no Exchange and
-no Sort. NULL-conv rows take no ordering or referential check and rank
-their duplicates on their own. `validation_summary` counts the stream by
-check in one action.
+no Sort, and their referential flag from a correlated EXISTS against the
+conversations table, planned as a broadcast ExistenceJoin: the dim is
+scanned once, never deduplicated, and nothing on the fact side moves.
+NULL-conv rows take no ordering or referential check and rank their
+duplicates on their own. `validation_summary` counts the stream by check
+in one action.
 
 Every check is built by the same function its standalone operator uses:
 `ordering.ordering_checks`, `uniqueness.keep_first_rank` +
-`unique_key_check`, `referential.dim_key_set` + `referential_check`, and
-`validation.explode_violations` for the rows.
+`unique_key_check`, `referential.referential_check`, and
+`validation.explode_violations` for the rows. Each branch is one
+projection (its windows and its EXISTS together), because every
+DataFrame step costs a Catalyst analysis on the driver.
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from typical_spark.operators.ordering import ordering_checks
-from typical_spark.operators.referential import dim_key_set, referential_check
+from typical_spark.operators.referential import referential_check
 from typical_spark.operators.uniqueness import keep_first_rank, unique_key_check
 from typical_spark.plans.validation import ValidationPlan, explode_violations
 
@@ -41,11 +45,12 @@ def full_validation(
     """All violation classes as one DataFrame (see module docstring):
 
       scan -> fused row-check array (text etc. never leaves the scan)
-           -> broadcast-join the conversations dim (scan-local, pre-shuffle)
            -> conv_id IS NOT NULL: lag() over (conv_id) = ordering checks
               + keep_first_rank over (conv_id, turn_idx) = dup rank
               (exchange AND sort both elided on a bucketed scan sorted
               by (conv_id, turn_idx, ts, role))
+              + EXISTS (conversations.conv_id = conv_id) = referential
+              flag (broadcast ExistenceJoin)
               conv_id IS NULL: keep_first_rank over (turn_idx) only — no
               ordering/referential checks apply, and the null rows
               shuffle/sort just themselves
@@ -63,14 +68,13 @@ def full_validation(
     key = list(plan.spec.key_columns)
     kc, oc = key[0], key[-1]
 
-    src = transcripts.select(
+    # the alias names the fact side for the EXISTS's outer reference: an
+    # unqualified outer conv_id would resolve against the dim itself
+    src = transcripts.alias("_turns").select(
         F.col(kc), F.col(oc), F.col("ts"), F.col("role"),
         plan._violation_array().alias("_rv"),
     )
     has_ref = conversations is not None
-    if has_ref:
-        dim = dim_key_set(conversations, [kc]).withColumn("_dim", F.lit(True))
-        src = src.join(F.broadcast(dim), [kc], "left")
 
     # Two branches on conv_id nullability, unioned before the explode.
     # Non-null convs (≈ the whole table) window on conv_id ALONE with
@@ -89,19 +93,29 @@ def full_validation(
         F.col(oc).asc(), F.col("ts").asc(), F.col("role").asc()
     )
     tie_break = ["ts", "role"]
+    # the EXISTS sits on the non-NULL branch only, so the dim is scanned
+    # once; a NULL conv_id takes no referential check (its flag is true)
+    ref_a, ref_b = [], []
+    if has_ref:
+        dim = F.broadcast(conversations)
+        exists = dim.where(F.col(kc) == F.col(f"_turns.{kc}").outer()).exists()
+        ref_a, ref_b = [exists.alias("_ref")], [F.lit(True).alias("_ref")]
     ann_a = conv_rows.select(
         "*",
         F.lag(oc).over(w_ord).alias("_po"),
         F.lag("ts").over(w_ord).alias("_pts"),
-    ).select("*", keep_first_rank(key, tie_break).alias("_dr"))
+        keep_first_rank(key, tie_break).alias("_dr"),
+        *ref_a,
+    )
 
-    oc_type = src.schema[oc].dataType
-    ts_type = src.schema["ts"].dataType
+    fields = transcripts.schema
     ann_b = null_rows.select(
         "*",
-        F.lit(None).cast(oc_type).alias("_po"),
-        F.lit(None).cast(ts_type).alias("_pts"),
-    ).select("*", keep_first_rank([oc], tie_break).alias("_dr"))
+        F.lit(None).cast(fields[oc].dataType).alias("_po"),
+        F.lit(None).cast(fields["ts"].dataType).alias("_pts"),
+        keep_first_rank([oc], tie_break).alias("_dr"),
+        *ref_b,
+    )
     ann = ann_a.unionByName(ann_b)
 
     extras = [
@@ -111,7 +125,7 @@ def full_validation(
         *ordering_checks(oc, "ts", "_po", "_pts"),
     ]
     if has_ref:
-        extras.append(referential_check(kc, F.col("_dim")))
+        extras.append(referential_check(kc, F.col("_ref")))
 
     combined = F.concat(F.col("_rv"), F.array_compact(F.array(*extras)))
     return explode_violations(ann, [kc, oc], combined)

@@ -8,6 +8,7 @@ except the master URL.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -98,3 +99,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def count_jvm_calls(spark: SparkSession):
+    """Count the py4j commands the driver sends while the block runs:
+    yields a one-item list whose [0] is the running count. Memory
+    commands (`m`: Python GC releasing JVM objects) are not counted, so
+    the count depends only on what the block builds. Every PySpark
+    `F.*` call costs three (two reflection lookups and the call), which
+    is what makes a plan slow to build before Spark sees it."""
+    client_cls = type(spark.sparkContext._gateway._gateway_client)
+    send = client_cls.send_command
+    n = [0]
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\n"):
+            n[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    client_cls.send_command = counting
+    try:
+        yield n
+    finally:
+        client_cls.send_command = send
