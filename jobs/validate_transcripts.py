@@ -11,7 +11,8 @@
 By default runs the fused check suite (row-level + uniqueness + ordering
 + referential, `pipeline.full_validation`) once, writes the violations
 to <out>/violations (the table <out>.violations for an iceberg:// --out)
-and prints their counts by check, read back from what was written.
+and prints their counts by check, counted by an Observation on that
+write.
 --checkpointed instead runs the row-level pass bucket by bucket with a
 lineage manifest; re-running it with the same --run-id continues an
 interrupted run. Its manifest commits by file rename, so it needs a
@@ -64,7 +65,8 @@ def main(argv=None) -> int:
 
     from typical_spark.checkpoint import CheckpointedRun
     from typical_spark.compiler import compile_table_spec
-    from typical_spark.pipeline import full_validation
+    from typical_spark.pipeline import check_ids, full_validation
+    from typical_spark.plans.validation import count_by_check
     from typical_spark.sources.tables import read_target, sub_target, write_output
     from typical_spark.spec_io import spec_from_json_file
     from typical_spark.specs import transcript_spec
@@ -81,14 +83,10 @@ def main(argv=None) -> int:
         print(json.dumps(summary))
         return 0
 
-    out = sub_target(args.out, "violations")
-    write_output(full_validation(plan, tdf, cdf), out, mode="overwrite")
-    # count what was written (small) instead of running the fused pass again
-    counts = {
-        r["check_id"]: r["count"]
-        for r in read_target(spark, out).groupBy("check_id").count().collect()
-    }
-    print(json.dumps({"run_id": args.run_id, "violations_by_check": counts}))
+    # the write counts its rows by check: no second pass, no read-back
+    vio, counts = count_by_check(full_validation(plan, tdf, cdf), check_ids(plan))
+    write_output(vio, sub_target(args.out, "violations"), mode="overwrite")
+    print(json.dumps({"run_id": args.run_id, "violations_by_check": counts()}))
     return 0
 
 

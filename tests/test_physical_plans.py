@@ -71,7 +71,7 @@ def test_fused_pass_has_no_shuffle(spark, events):
     )
     p = _plan_str(plan.violations(events, with_message=False))
     assert "Exchange" not in p  # scan -> project -> filter -> explode only
-    assert "codegen id" in p  # whole-stage codegen spans cover the checks
+    assert "codegen id" in p  # the pass has whole-stage codegen spans
 
 
 def test_violation_arrays_are_evaluated_once(spark, transcripts_df):
@@ -88,6 +88,27 @@ def test_violation_arrays_are_evaluated_once(spark, transcripts_df):
     ):
         optimized = out._jdf.queryExecution().optimizedPlan().toString()
         assert "size(" not in optimized, optimized
+
+
+def test_fused_check_arrays_have_no_higher_order_function(spark, transcripts_df):
+    """Whole-stage codegen covers every transcript check: the physical
+    plans of plan.violations and full_validation hold no lambda. A
+    higher-order function (array_compact is a filter with a lambda) is a
+    CodegenFallback, so every check inside it runs through the
+    expression interpreter, row by row."""
+    from typical_spark.pipeline import full_validation
+    from typical_spark.sources.transcripts import generate_conversations_pdf
+
+    plan = compile_table_spec(transcript_spec())
+    conv = spark.createDataFrame(
+        generate_conversations_pdf(transcripts_df.toPandas())[["conv_id"]]
+    )
+    for out in (
+        plan.violations(transcripts_df, with_message=False),
+        full_validation(plan, transcripts_df, conv),
+    ):
+        physical = out._jdf.queryExecution().executedPlan().toString()
+        assert "lambdafunction" not in physical, physical
 
 
 def test_referential_uses_broadcast_anti_join(spark, events):
@@ -289,9 +310,9 @@ def test_full_validation_dim_check_is_broadcast_exists(
     """The referential flag is a correlated EXISTS on the non-NULL branch,
     planned as a broadcast ExistenceJoin: the dim is scanned once and
     never deduplicated (no Aggregate on its side), so the only shuffles
-    are the two window Exchanges (conv_id for the non-NULL rows, turn_idx
-    for the NULL ones). A dedup of the dim adds an Aggregate and a third
-    Exchange before its broadcast."""
+    are the two window Exchanges (conv_id for the non-NULL rows,
+    (conv_id, turn_idx) for the NULL ones). A dedup of the dim adds an
+    Aggregate and a third Exchange before its broadcast."""
     from typical_spark.pipeline import full_validation
     from typical_spark.sources.transcripts import generate_conversations_pdf
 

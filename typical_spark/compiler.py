@@ -1,22 +1,37 @@
-"""Spec compiler: CheckSpec -> Catalyst Column expressions -> ValidationPlan.
+"""Spec compiler: CheckSpec -> Catalyst SQL text -> ValidationPlan.
 
 This is the distributed analog of typical's constraint factory + codegen
 (reference: typic/constraints/factory.py:89-144 builds a Constraints tree;
 typic/gen.py:59-203 string-templates a specialized Python validator that
-contains ONLY the configured checks). We keep the same "no computation
-wasted" property — each compiled plan contains exactly the configured
-predicates, nothing else — but emit Catalyst `Column` ASTs so every check
-runs JVM-side inside whole-stage codegen instead of the Python interpreter.
+contains ONLY the configured checks). We follow the same design: each
+check's violation condition and observed value are templated as Catalyst
+SQL text, and the plan joins them into one expression that the JVM
+parses in one call. The compiled plan contains exactly the configured
+predicates, nothing else, and every check runs JVM-side inside
+whole-stage codegen instead of the Python interpreter. Building the same
+expressions as `F.*` Columns costs three py4j round trips per call,
+which made compiling the transcript spec take 206 of them; text takes
+none until the plan is applied.
+
+The text is written here, never printed back from a Column:
+`ColumnNode.sql()` prints `and(…)`, `>=(a, b)` and bare timestamps,
+which do not parse back. Literals and names go through `sql_text`.
+
+Two inputs arrive as Columns: a field's coercion (`functions/coerce.py`)
+and a registered custom check. The plan projects each once, under a
+reserved name (`ValidationPlan.inputs`), below the check array, and the
+check text refers to that name, so a coercion is evaluated once per row
+however many checks read it.
 
 Null semantics (reference typic/constraints/common.py:91,272-287): a null
 value short-circuits every value-check — NULL is only ever reported by
 NotNullCheck. Violation condition for a value-check C on column c is
-therefore `c IS NOT NULL AND NOT C(c)`, which keeps each predicate
+therefore `c IS NOT NULL AND <C fails on c>`, which keeps each predicate
 null-intolerant and pushdown-friendly.
 
 Each scalar check kind (NotNull, Number, Text, Enum, TimestampRange,
 Format, Decimal, Union) is defined once, by its branch of `_scalar_parts`:
-check_id, expected text, OK predicate, observed value and typed view
+check_id, expected text, failure predicate, observed value and typed view
 (NULL = unparseable). The reference applies one constraint object to a
 field and to each element nested in it (array.py:144-161); here too both
 a named column (`compile_check`) and a nested value — union member,
@@ -35,8 +50,7 @@ Violation rows mirror ConstraintValueError's message format
 
 from __future__ import annotations
 
-import functools
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import NamedTuple
 
 from pyspark.sql import Column
@@ -61,6 +75,7 @@ from typical_spark.specs import (
     TimestampRangeCheck,
     UnionCheck,
 )
+from typical_spark.sql_text import array, ident, in_list, literal, string
 
 
 _NUMERIC_DDLS = {
@@ -68,6 +83,12 @@ _NUMERIC_DDLS = {
     "bigint", "long", "float", "real", "double",
 }
 _TEMPORAL_DDLS = {"timestamp", "timestamp_ntz", "timestamp_ltz", "date"}
+
+# Names the compiled text uses for projected inputs and lambda
+# variables; the prefix keeps them from shadowing a table's columns.
+_RESERVED = "__typical_"
+# lambda variables: an array element, a map key, a map value
+_ELEM, _KEY, _VAL = (_RESERVED + n for n in ("elem", "key", "val"))
 
 
 def _widened_decimal_ddl(ddl: str) -> str:
@@ -88,7 +109,7 @@ def _widened_decimal_ddl(ddl: str) -> str:
     return f"decimal(38,{scale})"
 
 
-def _number_view(col: Column, ddl: str | None) -> Column:
+def _number_view(v: str, ddl: str | None) -> str:
     """The value as a number. A declared numeric type compares natively
     (identity-folded on a typed carrier: a blanket double view loses
     exactness above 2^53, so `ge=2**53+2` would pass 2**53+1); a declared
@@ -98,26 +119,24 @@ def _number_view(col: Column, ddl: str | None) -> Column:
     the job — try_cast gives NULL instead."""
     d = (ddl or "").strip().lower()
     if d.startswith("decimal"):
-        return col.try_cast(_widened_decimal_ddl(ddl))
-    return col.try_cast(ddl if d in _NUMERIC_DDLS else "double")
+        return f"try_cast({v} AS {_widened_decimal_ddl(ddl)})"
+    return f"try_cast({v} AS {ddl if d in _NUMERIC_DDLS else 'double'})"
 
 
-def _timestamp_view(col: Column, ddl: str | None) -> Column:
+def _timestamp_view(v: str, ddl: str | None) -> str:
     """The value as a timestamp: the declared temporal type, else
     `timestamp`; a try_cast for the same reason as `_number_view`."""
     known = ddl is not None and ddl.strip().lower() in _TEMPORAL_DDLS
-    return col.try_cast(ddl if known else "timestamp")
+    return f"try_cast({v} AS {ddl if known else 'timestamp'})"
 
 
-def _in_range(x: Column, lo: int | None, hi: int | None) -> Column | None:
-    """`lo <= x <= hi` for a length or size (lo defaults to 0, no hi =
-    unbounded); None when neither bound is set."""
-    if lo is None and hi is None:
-        return None
-    ok = x >= F.lit(lo or 0)
-    if hi is not None:
-        ok = ok & (x <= F.lit(hi))
-    return ok
+def _out_of_range(x: str, lo: int | None, hi: int | None) -> str:
+    """True iff the length or size `x` breaks a bound that is set. Only
+    set bounds are written: a length or size is never negative, so an
+    unset lower bound (0) needs no test, and `x` is evaluated once."""
+    bad = ([f"{x} < {literal(lo)}"] if lo else []) + (
+        [f"{x} > {literal(hi)}"] if hi is not None else [])
+    return "(" + " OR ".join(bad) + ")" if bad else "FALSE"
 
 
 def _anchored(pattern: str) -> str:
@@ -138,11 +157,17 @@ def _array_elem_ddl(ddl: str | None) -> str | None:
     return None
 
 
-class _Parts(NamedTuple):
-    """One scalar check's meaning against one value.
+def _not_all(oks: list[str]) -> str:
+    """NOT (ok_1 AND ok_2 …): NULL when a test is NULL and none is false."""
+    return f"NOT ({' AND '.join(oks)})" if oks else "FALSE"
 
-    ok: true iff a non-null value passes; None for NotNull, the one check
-    a NULL value fails (NULL short-circuits every other check, reference
+
+class _Parts(NamedTuple):
+    """One scalar check's meaning against one value (all SQL text).
+
+    bad: true iff a non-null value fails (NULL when the value does not
+    parse as the view's type); None for NotNull, the one check a NULL
+    value fails (NULL short-circuits every other check, reference
     common.py:272-287).
     observed: what a violation row shows; None = the value as a string.
     view: the typed view the check reads, NULL when the value does not
@@ -151,9 +176,9 @@ class _Parts(NamedTuple):
 
     check_id: str
     expected: str
-    ok: Column | None
-    observed: Column | None = None
-    view: Column | None = None
+    bad: str | None
+    observed: str | None = None
+    view: str | None = None
 
 
 _SCALAR_CHECKS = (
@@ -162,257 +187,240 @@ _SCALAR_CHECKS = (
 )
 
 
-def _scalar_parts(chk: Check, col: Column, value_ddl: str | None) -> list[_Parts]:
+def _scalar_parts(chk: Check, v: str, value_ddl: str | None) -> list[_Parts]:
     """The one definition of every scalar check kind, against the value
-    `col` whose declared Spark type is `value_ddl` (None = unknown). A
-    TextCheck has one part per configured property (length, regex); every
-    other kind has exactly one."""
+    `v` (SQL text) whose declared Spark type is `value_ddl` (None =
+    unknown). A TextCheck has one part per configured property (length,
+    regex); every other kind has exactly one."""
     cid, desc = chk.check_id(), chk.describe()
     if isinstance(chk, NotNullCheck):
-        return [_Parts(cid, desc, None, F.lit(None).cast("string"))]
+        return [_Parts(cid, desc, None, "CAST(NULL AS STRING)")]
     if isinstance(chk, NumberCheck):
-        num = _number_view(col, value_ddl)
-        ok = F.lit(True)
-        if chk.gt is not None:
-            ok = ok & (num > F.lit(chk.gt))
-        if chk.ge is not None:
-            ok = ok & (num >= F.lit(chk.ge))
-        if chk.lt is not None:
-            ok = ok & (num < F.lit(chk.lt))
-        if chk.le is not None:
-            ok = ok & (num <= F.lit(chk.le))
+        num = _number_view(v, value_ddl)
+        oks = [f"{num} {op} {literal(bound)}"
+               for op, bound in ((">", chk.gt), (">=", chk.ge), ("<", chk.lt), ("<=", chk.le))
+               if bound is not None]
         if chk.multiple_of is not None:
-            ok = ok & (num % F.lit(chk.multiple_of) == 0)
-        return [_Parts(cid, desc, ok, view=num)]
+            oks.append(f"{num} % {literal(chk.multiple_of)} = 0")
+        return [_Parts(cid, desc, _not_all(oks), view=num)]
     if isinstance(chk, TimestampRangeCheck):
-        ts = _timestamp_view(col, value_ddl)
-        ok = F.lit(True)
-        if chk.min_ts is not None:
-            ok = ok & (ts >= F.lit(chk.min_ts))
-        if chk.max_ts is not None:
-            ok = ok & (ts < F.lit(chk.max_ts))
-        return [_Parts(cid, desc, ok, view=ts)]
+        ts = _timestamp_view(v, value_ddl)
+        oks = ([f"{ts} >= {literal(chk.min_ts)}"] if chk.min_ts is not None else []) + (
+            [f"{ts} < {literal(chk.max_ts)}"] if chk.max_ts is not None else [])
+        return [_Parts(cid, desc, _not_all(oks), view=ts)]
     if isinstance(chk, TextCheck):
         out = []
-        ln = F.length(col)
-        ok = _in_range(ln, chk.min_length, chk.max_length)
-        if ok is not None:
+        if chk.min_length is not None or chk.max_length is not None:
+            ln = f"length({v})"
             out.append(_Parts("text_length",
                               f"{chk.min_length or 0} <= length <= {chk.max_length}",
-                              ok, ln.cast("string")))
+                              _out_of_range(ln, chk.min_length, chk.max_length),
+                              f"CAST({ln} AS STRING)"))
         if chk.regex is not None:
             pat = _anchored(chk.regex)
-            out.append(_Parts("text_regex", f"matches '{pat}'", col.rlike(pat)))
+            out.append(_Parts("text_regex", f"matches '{pat}'",
+                              f"NOT rlike({v}, {string(pat)})"))
         return out
     if isinstance(chk, EnumCheck):
-        return [_Parts(cid, desc, col.isin(list(chk.values)))]
+        return [_Parts(cid, desc, f"NOT {in_list(v, chk.values)}")]
     if isinstance(chk, FormatCheck):
-        return [_Parts(cid, desc, col.rlike(_anchored(STRING_FORMATS[chk.format])))]
+        pat = _anchored(STRING_FORMATS[chk.format])
+        return [_Parts(cid, desc, f"NOT rlike({v}, {string(pat)})")]
     if isinstance(chk, DecimalCheck):
-        dec = col.try_cast(f"decimal({chk.max_digits},{chk.decimal_places})")
-        return [_Parts(cid, desc, dec.isNotNull())]
+        dec = f"try_cast({v} AS decimal({chk.max_digits},{chk.decimal_places}))"
+        return [_Parts(cid, desc, f"{dec} IS NULL")]
     if isinstance(chk, UnionCheck):
-        ok = F.lit(False)
-        for m in chk.members:
-            ok = ok | ~scalar_violation_pred(m, col, value_ddl)
-        return [_Parts(cid, desc, ok)]
+        # fails iff every member fails
+        bad = " AND ".join(scalar_violation_pred(m, v, value_ddl) for m in chk.members)
+        return [_Parts(cid, desc, f"({bad})" if bad else "TRUE")]
     raise TypeError(f"not a scalar check: {type(chk).__name__}")
 
 
-def scalar_violation_pred(
-    chk: Check, col: Column, value_ddl: str | None = None
-) -> Column:
-    """Violation predicate for a scalar check on a nested value: a union
-    member, a tagged case, an array element or a map value (a lambda
-    variable inside a higher-order function, not a named column).
-    value_ddl: the value's declared Spark type when the caller knows it
-    (array element type, map value type, the field's dtype)."""
-    parts = _scalar_parts(chk, col, value_ddl)
-    if any(p.ok is None for p in parts):
-        return col.isNull()
-    # Nested rule 2: a TextCheck's length and regex parts are one predicate.
-    oks = [p.ok for p in parts]
-    ok = functools.reduce(Column.__and__, oks) if oks else F.lit(True)
-    bad = ~ok
-    for p in parts:
-        if p.view is not None:
-            # Nested rule 1: an unparseable value fails the member or
-            # element (there is no coerce/strict_type row to report it).
-            bad = p.view.isNull() | bad
-    return col.isNotNull() & bad
+def scalar_violation_pred(chk: Check, v: str, value_ddl: str | None = None) -> str:
+    """Violation predicate (SQL text) for a scalar check on a nested
+    value: a union member, a tagged case, an array element or a map value
+    (a lambda variable inside a higher-order function, not a named
+    column). value_ddl: the value's declared Spark type when the caller
+    knows it (array element type, map value type, the field's dtype)."""
+    parts = _scalar_parts(chk, v, value_ddl)
+    if any(p.bad is None for p in parts):
+        return f"({v} IS NULL)"
+    # Nested rule 2: a TextCheck's length and regex parts are one
+    # predicate. Nested rule 1: an unparseable value fails the member or
+    # element (there is no coerce/strict_type row to report it).
+    bad = [f"{p.view} IS NULL" for p in parts if p.view is not None]
+    bad += [f"({p.bad})" for p in parts]
+    return f"({v} IS NOT NULL AND ({' OR '.join(bad) or 'FALSE'}))"
 
 
 @dataclass(frozen=True)
 class CompiledCheck:
-    """One check compiled against one column.
+    """One check compiled against one column, as Catalyst SQL text.
 
-    violation_cond: Column<boolean> — true iff this row violates the check.
-    observed: Column<string> — the offending value, stringified.
+    violation_cond: boolean text — true iff this row violates the check.
+    observed: string text — the offending value, stringified.
     """
 
     column: str
     check_id: str
     expected: str
-    violation_cond: Column
-    observed: Column
+    violation_cond: str
+    observed: str
 
 
-def _compiled(column: str, check_id: str, expected: str, cond: Column,
-              observed: Column | None = None) -> CompiledCheck:
+def _compiled(column: str, check_id: str, expected: str, cond: str,
+              observed: str | None = None) -> CompiledCheck:
     """The one CompiledCheck constructor; `observed` defaults to the
     column's value as a string."""
     if observed is None:
-        observed = F.col(column).cast("string")
+        observed = f"CAST({ident(column)} AS STRING)"
     return CompiledCheck(column, check_id, expected, cond, observed)
 
 
-def _value_expr(fs: FieldSpec, base: Column | None = None) -> Column:
-    """The (possibly transformed) value a field's checks run against.
-
-    Starts from the coerced value when the field declares a coercion
-    (checks validate the post-transmute value, reference resolver.py:512-547
-    _finalize_deserializer ordering). Mutating pre-checks (strip_whitespace
-    text.py:50-52, curtail_length text.py:48-50, array unique dedup
-    array.py:139-141) are projections applied before predicates.
+def _value_expr(fs: FieldSpec, base: str) -> str:
+    """The (possibly transformed) value a field's checks run against,
+    starting from `base`: the column, or its coerced value when the field
+    declares a coercion (checks validate the post-transmute value,
+    reference resolver.py:512-547 _finalize_deserializer ordering).
+    Mutating pre-checks (strip_whitespace text.py:50-52, curtail_length
+    text.py:48-50, array unique dedup array.py:139-141) are projections
+    applied before predicates.
     """
-    c = base if base is not None else F.col(fs.name)
+    v = base
     for chk in fs.checks:
         if isinstance(chk, TextCheck):
             if chk.strip_whitespace:
-                c = F.trim(c)
+                v = f"trim({v})"
             if chk.curtail_length is not None:
-                c = F.substring(c, 1, chk.curtail_length)
+                v = f"substring({v}, 1, {literal(chk.curtail_length)})"
         elif isinstance(chk, ArrayCheck) and chk.unique:
-            c = F.array_distinct(c)
-    return c
+            v = f"array_distinct({v})"
+    return v
 
 
-def compile_check(fs: FieldSpec, chk: Check, value: Column) -> list[CompiledCheck]:
-    """Compile one Check into CompiledCheck(s). Pure driver-side dispatch —
-    the analog of the factory's MRO dispatch (reference factory.py:396-434)."""
-    col, name = value, fs.name
-    nn = col.isNotNull()
-    obs_str = col.cast("string")
+def compile_check(
+    fs: FieldSpec, chk: Check, v: str, inputs: dict[str, Column]
+) -> list[CompiledCheck]:
+    """Compile one Check on the value `v` (SQL text) into
+    CompiledCheck(s). Pure driver-side dispatch — the analog of the
+    factory's MRO dispatch (reference factory.py:396-434). A custom
+    check's Column goes into `inputs` under a reserved name."""
+    name = fs.name
+    nn = f"{v} IS NOT NULL"
+    obs_str = f"CAST({v} AS STRING)"
 
-    def cc(cond: Column, check_id: str | None = None, expected: str | None = None,
-           observed: Column | None = None) -> CompiledCheck:
+    def cc(cond: str, check_id: str | None = None, expected: str | None = None,
+           observed: str | None = None) -> CompiledCheck:
         return _compiled(name, check_id or chk.check_id(), expected or chk.describe(),
                          cond, obs_str if observed is None else observed)
 
     if isinstance(chk, _SCALAR_CHECKS):
-        # Named rule 1: an unparseable value leaves `ok` NULL, so the
+        # Named rule 1: an unparseable value leaves `bad` NULL, so the
         # check emits no row; `coerce` or `strict_type` reports it.
         # Named rule 2: each TextCheck part (text_length, text_regex) is
         # its own row.
-        return [cc(col.isNull() if p.ok is None else nn & ~p.ok,
+        return [cc(f"({v} IS NULL)" if p.bad is None else f"({nn} AND {p.bad})",
                    p.check_id, p.expected, p.observed)
-                for p in _scalar_parts(chk, col, fs.dtype)]
+                for p in _scalar_parts(chk, v, fs.dtype)]
 
     if isinstance(chk, ArrayCheck):
         out = []
-        sz = F.size(col)
-        ok = _in_range(sz, chk.min_items, chk.max_items)
-        if ok is not None:
-            out.append(cc(nn & ~ok, check_id="array_size",
-                          expected=chk.describe(), observed=sz.cast("string")))
+        sz = f"size({v})"
+        if chk.min_items is not None or chk.max_items is not None:
+            out.append(cc(f"({nn} AND {_out_of_range(sz, chk.min_items, chk.max_items)})",
+                          check_id="array_size", expected=chk.describe(),
+                          observed=f"CAST({sz} AS STRING)"))
         if chk.reject_dupes:
-            out.append(cc(nn & (F.size(F.array_distinct(col)) < sz),
+            out.append(cc(f"({nn} AND size(array_distinct({v})) < {sz})",
                           check_id="array_unique", expected="elements unique",
-                          observed=sz.cast("string")))
+                          observed=f"CAST({sz} AS STRING)"))
         return out
 
     if isinstance(chk, MapCheck):
         out = []
-        keys = F.map_keys(col)
-        sz = F.size(col)
-        ok = _in_range(sz, chk.min_items, chk.max_items)
-        if ok is not None:
-            out.append(cc(nn & ~ok, check_id="map_size",
+        keys = f"map_keys({v})"
+        sz = f"size({v})"
+        if chk.min_items is not None or chk.max_items is not None:
+            out.append(cc(f"({nn} AND {_out_of_range(sz, chk.min_items, chk.max_items)})",
+                          check_id="map_size",
                           expected=f"{chk.min_items or 0} <= size <= {chk.max_items}",
-                          observed=sz.cast("string")))
+                          observed=f"CAST({sz} AS STRING)"))
         if chk.required_keys:
             # valkeys ⊇ required (mapping.py:228-235)
-            missing = F.array_except(
-                F.array(*[F.lit(k) for k in chk.required_keys]), keys
-            )
-            out.append(cc(nn & (F.size(missing) > 0), check_id="map_required_keys",
+            missing = f"array_except({array(chk.required_keys)}, {keys})"
+            out.append(cc(f"({nn} AND size({missing}) > 0)", check_id="map_required_keys",
                           expected=f"has keys {sorted(chk.required_keys)}",
-                          observed=F.to_json(missing)))
+                          observed=f"to_json({missing})"))
         if chk.total and chk.defined_keys:
             # valkeys ⊆ defined (mapping.py:89-96)
-            extra = F.array_except(
-                keys, F.array(*[F.lit(k) for k in chk.defined_keys])
-            )
-            out.append(cc(nn & (F.size(extra) > 0), check_id="map_total",
+            extra = f"array_except({keys}, {array(chk.defined_keys)})"
+            out.append(cc(f"({nn} AND size({extra}) > 0)", check_id="map_total",
                           expected=f"no keys outside {sorted(chk.defined_keys)}",
-                          observed=F.to_json(extra)))
+                          observed=f"to_json({extra})"))
         if chk.key_regex is not None:
             pat = _anchored(chk.key_regex)
-            bad = F.filter(keys, lambda k: ~k.rlike(pat))
-            out.append(cc(nn & (F.size(bad) > 0), check_id="map_key_pattern",
+            bad = f"filter({keys}, {_KEY} -> NOT rlike({_KEY}, {string(pat)}))"
+            out.append(cc(f"({nn} AND size({bad}) > 0)", check_id="map_key_pattern",
                           expected=f"all keys match '{pat}'",
-                          observed=F.to_json(bad)))
+                          observed=f"to_json({bad})"))
         if chk.values_check is not None:
             inner = chk.values_check
             try:
                 val_ddl = _split_map_dtype(fs.dtype)[1]
             except ValueError:
                 val_ddl = None
-            badv = F.filter(
-                F.map_values(col),
-                lambda v: scalar_violation_pred(inner, v, val_ddl),
-            )
-            out.append(cc(nn & (F.size(badv) > 0), check_id="map_values",
+            badv = (f"filter(map_values({v}), {_VAL} -> "
+                    f"{scalar_violation_pred(inner, _VAL, val_ddl)})")
+            out.append(cc(f"({nn} AND size({badv}) > 0)", check_id="map_values",
                           expected=f"all values: {inner.describe()}",
-                          observed=F.size(badv).cast("string")))
+                          observed=f"CAST(size({badv}) AS STRING)"))
         for key, deps in chk.key_dependencies:
-            need = F.array_except(F.array(*[F.lit(d) for d in deps]), keys)
-            has_key = F.array_contains(keys, key)
-            out.append(cc(nn & has_key & (F.size(need) > 0),
+            need = f"array_except({array(deps)}, {keys})"
+            out.append(cc(f"({nn} AND array_contains({keys}, {literal(key)}) "
+                          f"AND size({need}) > 0)",
                           check_id="map_key_dependency",
                           expected=f"key '{key}' requires {sorted(deps)}",
-                          observed=F.to_json(need)))
+                          observed=f"to_json({need})"))
         return out
 
     if isinstance(chk, TaggedCheck):
-        tag = F.col(chk.tag_column)
-        known_vals = [v for v, _ in chk.cases]
+        tag = ident(chk.tag_column)
+        known_vals = [t for t, _ in chk.cases]
         out = [
-            cc(tag.eqNullSafe(F.lit(tag_value)) & scalar_violation_pred(inner, col, fs.dtype),
+            cc(f"(({tag} <=> {literal(tag_value)}) AND "
+               f"{scalar_violation_pred(inner, v, fs.dtype)})",
                check_id=f"tagged[{chk.tag_column}={tag_value}]_{inner.check_id()}",
                expected=f"when {chk.tag_column}={tag_value!r}: {inner.describe()}")
             for tag_value, inner in chk.cases
         ]
         if chk.else_check is not None:
             out.append(cc(
-                ~tag.isin(known_vals) & scalar_violation_pred(chk.else_check, col, fs.dtype),
+                f"(NOT {in_list(tag, known_vals)} AND "
+                f"{scalar_violation_pred(chk.else_check, v, fs.dtype)})",
                 check_id=f"tagged[{chk.tag_column}=*]_{chk.else_check.check_id()}",
                 expected=f"otherwise: {chk.else_check.describe()}"))
         if chk.unknown_tag_violates:
             out.append(_compiled(
                 chk.tag_column, f"tagged[{chk.tag_column}]_unknown_tag",
                 f"{chk.tag_column} in {known_vals}",
-                tag.isNotNull() & ~tag.isin(known_vals)))
+                f"({tag} IS NOT NULL AND NOT {in_list(tag, known_vals)})"))
         return out
 
     if isinstance(chk, ArrayElementsCheck):
         # element type is known from the declared array ddl (struct-field
         # elements keep the untyped path: their ddl isn't tracked here)
         elem_ddl = None if chk.element_field else _array_elem_ddl(fs.dtype)
-
-        def elem_viol(x):
-            v = x[chk.element_field] if chk.element_field else x
-            return scalar_violation_pred(chk.inner, v, elem_ddl)
-
-        failing = F.filter(col, elem_viol)
-        return [cc(nn & (F.size(failing) > 0),
-                   observed=F.size(failing).cast("string"))]
+        e = f"{_ELEM}[{string(chk.element_field)}]" if chk.element_field else _ELEM
+        failing = f"filter({v}, {_ELEM} -> {scalar_violation_pred(chk.inner, e, elem_ddl)})"
+        return [cc(f"({nn} AND size({failing}) > 0)",
+                   observed=f"CAST(size({failing}) AS STRING)")]
 
     if isinstance(chk, CustomCheck):
         from typical_spark.specs import get_custom_check
 
-        ok = get_custom_check(chk.name)(col)
-        return [cc(nn & ~ok)]
+        ok = f"{_RESERVED}in{len(inputs)}"
+        inputs[ok] = get_custom_check(chk.name)(F.expr(v))
+        return [cc(f"({nn} AND NOT {ident(ok)})")]
 
     raise TypeError(f"no compiler for check type {type(chk).__name__}")
 
@@ -535,27 +543,33 @@ def compile_table_spec(spec: TableSpec, mode: str = "coerce") -> "ValidationPlan
         raise ValueError(f"mode must be 'coerce' or 'strict', got {mode!r}")
     compiled: list[CompiledCheck] = []
     coercions: dict[str, Column] = {}
-    transforms: dict[str, Column] = {}
+    transforms: dict[str, str] = {}
+    # Column inputs, projected under reserved names below the check array
+    inputs: dict[str, Column] = {}
     for fs in spec.fields:
+        raw = ident(fs.name)
+        val = raw
         ce = coercion_expr(fs)
         if ce is not None:
-            violated = F.col(fs.name).isNotNull() & ce.isNull()
+            coerced = f"{_RESERVED}in{len(inputs)}"
+            inputs[coerced] = ce
+            violated = f"({raw} IS NOT NULL AND {ident(coerced)} IS NULL)"
             if mode == "coerce":
                 # transmute failure -> `coerce` violation (the distributed
                 # analog of transmute raising; reference des.py builders)
                 coercions[fs.name] = ce
+                val = ident(coerced)
                 check_id = "coerce"
                 expected = f"coercible to {fs.dtype} (from {fs.coerce_from})"
             else:
                 # strict: validate, never mutate (typic/strict.py: the
                 # deserializer IS the validator, resolver.py:521-524) —
                 # unparseable values violate, parseable ones pass, and the
-                # column is NOT repaired (no projection emitted).
+                # column is NOT repaired (value checks run on the raw
+                # column).
                 check_id = "strict_type"
                 expected = f"parseable as {fs.dtype} (strict: not repaired)"
-                ce = None  # value checks run on the raw column in strict
             compiled.append(_compiled(fs.name, check_id, expected, violated))
-        val = _value_expr(fs, base=ce)
         # only record a transform projection if it's not the bare column.
         # The stored expression starts from the CURRENT column (not the
         # coercion expression): plan.transform composes AFTER
@@ -563,14 +577,11 @@ def compile_table_spec(spec: TableSpec, mode: str = "coerce") -> "ValidationPlan
         # to the already-coerced column (e.g. utf8_decode of a decoded
         # string). Strict mode records no transforms at all — validate,
         # never mutate extends to the mutating pre-checks.
-        if mode != "strict" and any(
-            (isinstance(c, TextCheck) and (c.strip_whitespace or c.curtail_length))
-            or (isinstance(c, ArrayCheck) and c.unique)
-            for c in fs.checks
-        ):
-            transforms[fs.name] = _value_expr(fs)
+        if mode != "strict" and _value_expr(fs, raw) != raw:
+            transforms[fs.name] = _value_expr(fs, raw)
+        val = _value_expr(fs, val)
         for chk in fs.checks:
-            compiled.extend(compile_check(fs, chk, val))
+            compiled.extend(compile_check(fs, chk, val, inputs))
     # secret fields: star-mask the observed value in every violation row
     # (SecretStr repr contract, reference typic/types/secret.py:35-90 —
     # '*' * len(value)); the check conditions still see the real value,
@@ -578,23 +589,12 @@ def compile_table_spec(spec: TableSpec, mode: str = "coerce") -> "ValidationPlan
     # plan's message formatter) guarantees every consumer of the compiled
     # checks — violations, annotate, verdicts, streaming — inherits it.
     secret_cols = {fs.name for fs in spec.fields if fs.secret}
-    if secret_cols:
-        from dataclasses import replace as _dc_replace
-
-        compiled = [
-            _dc_replace(
-                cc,
-                observed=F.when(
-                    F.col(cc.column).isNotNull(),
-                    F.repeat(
-                        F.lit("*"),
-                        F.length(F.col(cc.column).cast("string")),
-                    ),
-                ),
-            )
-            if cc.column in secret_cols
-            else cc
-            for cc in compiled
-        ]
-    return ValidationPlan(spec=spec, checks=tuple(compiled),
-                          coercions=coercions, transforms=transforms)
+    compiled = [
+        replace(cc, observed=(
+            f"CASE WHEN {ident(cc.column)} IS NOT NULL THEN "
+            f"repeat('*', length(CAST({ident(cc.column)} AS STRING))) END"))
+        if cc.column in secret_cols else cc
+        for cc in compiled
+    ]
+    return ValidationPlan(spec=spec, checks=tuple(compiled), coercions=coercions,
+                          transforms=transforms, inputs=inputs)

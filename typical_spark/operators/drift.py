@@ -159,13 +159,14 @@ def partition_digests(df: DataFrame, value_col, group_col) -> DataFrame:
     per element, more driver time than running the plan on a small
     table."""
     b = _k1_boundaries(COMPRESSION)
-    bounds = sql_text.double_array(b)
     # rank mass of each distinct quantile m: the bound after its last bin
-    # (found from the end) minus the bound before its first bin
+    # (found from the end) minus the bound before its first bin. The
+    # bounds are projected once as `_b`: a lambda that inlines the
+    # literal twice costs more to analyse than the rest of the build.
     weights = (
         "transform(array_distinct(_q), m -> n * ("
-        f"element_at({bounds}, -CAST(array_position(reverse(_q), m) AS INT))"
-        f" - element_at({bounds}, CAST(array_position(_q, m) AS INT))))"
+        "element_at(_b, -CAST(array_position(reverse(_q), m) AS INT))"
+        " - element_at(_b, CAST(array_position(_q, m) AS INT))))"
     )
     none = "CAST(array() AS ARRAY<DOUBLE>)"
     v = F.nanvl(F.col(value_col).cast("double"), F.lit(None).cast("double"))
@@ -174,6 +175,7 @@ def partition_digests(df: DataFrame, value_col, group_col) -> DataFrame:
         df.groupBy(F.col(group_col).cast("string").alias("group_id"))
         .agg(F.count(v).cast("double").alias("n"),
              F.percentile_approx(v, mids, ACCURACY).alias("_q"))
+        .selectExpr("group_id", "n", "_q", f"{sql_text.double_array(b)} AS _b")
         .selectExpr("group_id", "n",
                     f"coalesce(array_distinct(_q), {none}) AS means",
                     f"coalesce({weights}, {none}) AS weights")

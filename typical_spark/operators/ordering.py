@@ -30,10 +30,16 @@ from collections.abc import Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import explode_violations, violation_struct
+from typical_spark.plans.validation import (
+    explode_violations,
+    violation_array,
+    violation_entry,
+    violation_struct,
+)
+from typical_spark.sql_text import ident
 
 
 def ordering_checks(
@@ -43,11 +49,11 @@ def ordering_checks(
     prev_ts: str | None,
     contiguous: bool = True,
     ts_monotonic: bool = True,
-) -> list[Column]:
-    """The turn-ordering checks as fused-array entries: one
-    `when(cond, violation_struct(...))` per check, comparing each row with
-    the previous row of its group (`prev_order` / `prev_ts`, lagged
-    columns that are NULL on a group's first row).
+) -> list[str]:
+    """The turn-ordering checks as fused-array entries (SQL text): one
+    `violation_entry` per check, comparing each row with the previous row
+    of its group (`prev_order` / `prev_ts`, lagged columns that are NULL
+    on a group's first row).
 
       order_duplicate  — same order value as the previous row
       order_gap        — order jumps by > 1 (when `contiguous`)
@@ -62,38 +68,27 @@ def ordering_checks(
     order they come. The extra key only lets the sort match a bucketed
     table's declared sort order, so the Sort disappears from the plan.
     """
-    o, po = F.col(order_col), F.col(prev_order)
-    d = o - po
+    o, po = ident(order_col), ident(prev_order)
+    d = f"({o} - {po})"
     checks = [
-        F.when(
-            po.isNotNull() & (d == 0),
-            violation_struct(
-                order_col, "order_duplicate", o.cast("string"),
-                F.concat(F.lit("!= prev "), po),
-            ),
-        )
+        violation_entry(f"{po} IS NOT NULL AND {d} = 0", violation_struct(
+            order_col, "order_duplicate", f"CAST({o} AS STRING)",
+            f"concat('!= prev ', {po})",
+        ))
     ]
     if contiguous:
-        checks.append(
-            F.when(
-                po.isNotNull() & (d > 1),
-                violation_struct(
-                    order_col, "order_gap", o.cast("string"),
-                    F.concat(F.lit("prev + 1 = "), po + 1),
-                ),
-            )
-        )
+        checks.append(violation_entry(f"{po} IS NOT NULL AND {d} > 1", violation_struct(
+            order_col, "order_gap", f"CAST({o} AS STRING)",
+            f"concat('prev + 1 = ', {po} + 1)",
+        )))
     if ts_col and ts_monotonic:
-        t, pt = F.col(ts_col), F.col(prev_ts)
-        checks.append(
-            F.when(
-                pt.isNotNull() & t.isNotNull() & (t < pt) & (d > 0),
-                violation_struct(
-                    order_col, "ts_out_of_order", t.cast("string"),
-                    F.concat(F.lit(">= prev ts "), pt.cast("string")),
-                ),
-            )
-        )
+        t, pt = ident(ts_col), ident(prev_ts)
+        checks.append(violation_entry(
+            f"{pt} IS NOT NULL AND {t} IS NOT NULL AND {t} < {pt} AND {d} > 0",
+            violation_struct(
+                order_col, "ts_out_of_order", f"CAST({t} AS STRING)",
+                f"concat('>= prev ts ', CAST({pt} AS STRING))",
+            )))
     return checks
 
 
@@ -124,10 +119,10 @@ def ordering_violations(
         *( [F.col(ts_col), F.lag(ts_col).over(w).alias("_prev_ts")]
            if ts_col else [] ),
     )
-    arr = F.array_compact(F.array(*ordering_checks(
+    arr = violation_array(ordering_checks(
         order_col, ts_col, "_prev_o", "_prev_ts",
         require_contiguous, require_ts_monotonic,
-    )))
+    ))
     return explode_violations(lagged, [*group_cols, order_col], arr).drop("column")
 
 

@@ -21,23 +21,23 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import violation_struct
+from typical_spark.plans.validation import violation_entry, violation_struct
+from typical_spark.sql_text import ident, string
 
 
-def referential_check(key: str, matched: Column) -> Column:
+def referential_check(key: str, matched: str) -> str:
     """The referential check as a fused-array entry: a non-NULL `key`
-    whose `matched` flag — an EXISTS against the dimension, false when
-    no dim row has the key — is false has no row in the dimension."""
-    return F.when(
-        F.col(key).isNotNull() & ~matched,
-        violation_struct(
-            key, "referential", F.col(key).cast("string"),
-            F.lit(f"{key} exists in conversations"),
-        ),
-    )
+    whose `matched` flag (SQL text) — an EXISTS against the dimension,
+    false when no dim row has the key — is false has no row in the
+    dimension."""
+    k = ident(key)
+    return violation_entry(f"{k} IS NOT NULL AND NOT {matched}", violation_struct(
+        key, "referential", f"CAST({k} AS STRING)",
+        string(f"{key} exists in conversations"),
+    ))
 
 
 def referential_violations(

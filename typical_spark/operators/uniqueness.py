@@ -28,32 +28,32 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import violation_struct
+from typical_spark.plans.validation import violation_entry, violation_struct
+from typical_spark.sql_text import ident, string
 
 
-def keep_first_rank(keys: Sequence[str], order_by: Sequence[str] | None) -> Column:
+def keep_first_rank(keys: Sequence[str], order_by: Sequence[str] | None) -> str:
     """1-based position of a row among the rows sharing its `keys`, in
-    `order_by` order: rank 1 is the kept first occurrence, every rank
-    > 1 a duplicate. Without `order_by` the rank among tied rows is
-    arbitrary (a constant sort key)."""
-    order = [F.col(c) for c in order_by] if order_by else [F.lit(1)]
-    return F.row_number().over(Window.partitionBy(*keys).orderBy(*order))
+    `order_by` order (SQL text of a window function): rank 1 is the kept
+    first occurrence, every rank > 1 a duplicate. Without `order_by` the
+    rank among tied rows is arbitrary (a constant sort key)."""
+    order = ", ".join(map(ident, order_by)) if order_by else "1"
+    return (f"row_number() OVER (PARTITION BY {', '.join(map(ident, keys))} "
+            f"ORDER BY {order})")
 
 
-def unique_key_check(keys: Sequence[str], rank: Column) -> Column:
+def unique_key_check(keys: Sequence[str], rank: str) -> str:
     """The unique-key check as a fused-array entry: a row whose
-    `keep_first_rank` is > 1 repeats an earlier row's `keys`. Reported
-    on the last key column, with the rank as the observed value."""
-    return F.when(
-        rank > 1,
-        violation_struct(
-            keys[-1], "unique_key", rank.cast("string"),
-            F.lit(f"unique {tuple(keys)}"),
-        ),
-    )
+    `keep_first_rank` (`rank`, SQL text) is > 1 repeats an earlier row's
+    `keys`. Reported on the last key column, with the rank as the
+    observed value."""
+    return violation_entry(f"{rank} > 1", violation_struct(
+        keys[-1], "unique_key", f"CAST({rank} AS STRING)",
+        string(f"unique {tuple(keys)}"),
+    ))
 
 
 def duplicate_key_counts(
@@ -98,7 +98,7 @@ def duplicate_rows(
     df = df.join(dup_keys, cond, "inner").drop(*[f"_dk_{k}" for k in keys])
     if salt_buckets <= 1:
         return (
-            df.withColumn("dup_rank", keep_first_rank(keys, order_by))
+            df.withColumn("dup_rank", F.expr(keep_first_rank(keys, order_by)))
             .where(F.col("dup_rank") > 1)
         )
     # Salted: global rank = rows in earlier salt buckets + local rank.
@@ -108,7 +108,7 @@ def duplicate_rows(
     salt_cols = [*keys, *(order_by or [])]
     salt = F.pmod(F.xxhash64(*salt_cols), F.lit(salt_buckets))
     sdf = df.withColumn("_salt", salt)
-    local = sdf.withColumn("_lrank", keep_first_rank([*keys, "_salt"], order_by))
+    local = sdf.withColumn("_lrank", F.expr(keep_first_rank([*keys, "_salt"], order_by)))
     # survivor set: one row per (key, salt) carrying its bucket size
     wcnt = Window.partitionBy(*keys, "_salt")
     local = local.withColumn("_bucket_n", F.count(F.lit(1)).over(wcnt))
@@ -158,7 +158,7 @@ def dedup_keep_first(
     """Mutating dedup (the reference's array-unique contract): keep the
     first row per key under order_by, drop the rest."""
     return (
-        df.withColumn("_rn", keep_first_rank(keys, order_by))
+        df.withColumn("_rn", F.expr(keep_first_rank(keys, order_by)))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )

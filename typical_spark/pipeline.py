@@ -8,33 +8,59 @@ common schema
     (conv_id, turn_idx, column, check_id, observed, expected)
 
 from ONE scan of the narrow columns they need (conv_id, turn_idx, ts,
-role) plus the scan-local row-check array. Rows with a conv_id get both
-of their windows from one sort by (conv_id, turn_idx, ts, role), so on a
-table bucketed by conv_id and sorted that way they need no Exchange and
-no Sort, and their referential flag from a correlated EXISTS against the
-conversations table, planned as a broadcast ExistenceJoin: the dim is
-scanned once, never deduplicated, and nothing on the fact side moves.
-NULL-conv rows take no ordering or referential check and rank their
-duplicates on their own. `validation_summary` counts the stream by check
-in one action.
+role) plus the scan-local row-check array. Every window sorts by
+(conv_id, turn_idx, ts, role), so on a table bucketed by conv_id and
+sorted that way the whole pass needs no Exchange and no Sort. Rows with
+a conv_id take their referential flag from a correlated EXISTS against
+the conversations table, planned as a broadcast ExistenceJoin: the dim
+is scanned once, never deduplicated, and nothing on the fact side moves.
+NULL-conv rows take no ordering or referential check; they rank their
+duplicates with the same keep-first rank over (conv_id, turn_idx) as the
+other rows. Where they sit depends on the table: bucketed by conv_id,
+they all share one bucket already, so they go through the same windows
+as every other row; otherwise they take a branch of their own, because
+a window on conv_id would shuffle them all to one task, and that branch
+shuffles them by (NULL, turn_idx). `validation_summary` counts the
+stream by check as it runs, with no aggregate.
 
 Every check is built by the same function its standalone operator uses:
 `ordering.ordering_checks`, `uniqueness.keep_first_rank` +
-`unique_key_check`, `referential.referential_check`, and
-`validation.explode_violations` for the rows. Each branch is one
-projection (its windows and its EXISTS together), because every
-DataFrame step costs a Catalyst analysis on the driver.
+`unique_key_check`, `referential.referential_check`, and the plan's
+`violation_array` for the rows; all are SQL text. Each branch is one
+projection (its windows written as `OVER (…)` and its EXISTS together),
+because every DataFrame step costs a Catalyst analysis on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from typical_spark.operators.ordering import ordering_checks
 from typical_spark.operators.referential import referential_check
 from typical_spark.operators.uniqueness import keep_first_rank, unique_key_check
-from typical_spark.plans.validation import ValidationPlan, explode_violations
+from typical_spark.plans.validation import (
+    ValidationPlan,
+    count_by_check,
+    explode_violations,
+    violation_array,
+)
+from typical_spark.sql_text import ident
+
+# the ids of the checks full_validation adds to the plan's row checks
+TABLE_CHECK_IDS = ("unique_key", "order_duplicate", "order_gap", "ts_out_of_order",
+                   "referential")
+
+
+def _hashed_by(df: DataFrame, col: str) -> bool:
+    """True when `df` is read hash-partitioned by `col` alone, as a table
+    bucketed by it is: then every row with a NULL `col` already sits in
+    one partition, and a window on `col` needs no Exchange."""
+    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
+        return False
+    exprs = part.expressions()
+    return exprs.size() == 1 and exprs.head().toString().split("#")[0] == col
 
 
 def full_validation(
@@ -45,90 +71,85 @@ def full_validation(
     """All violation classes as one DataFrame (see module docstring):
 
       scan -> fused row-check array (text etc. never leaves the scan)
-           -> conv_id IS NOT NULL: lag() over (conv_id) = ordering checks
+           -> lag() over (conv_id) = ordering checks, NULL for a NULL
+              conv_id
               + keep_first_rank over (conv_id, turn_idx) = dup rank
               (exchange AND sort both elided on a bucketed scan sorted
               by (conv_id, turn_idx, ts, role))
               + EXISTS (conversations.conv_id = conv_id) = referential
               flag (broadcast ExistenceJoin)
-              conv_id IS NULL: keep_first_rank over (turn_idx) only — no
-              ordering/referential checks apply, and the null rows
-              shuffle/sort just themselves
-           -> union, concat arrays, one explode_violations.
+           -> concat arrays, one explode_violations.
 
-    Splitting on nullability also means NULL-conv rows cannot pin one
-    task (they shuffle by the dup key). Duplicate ranks are the plain
-    keep-first rank over (ts, role); pytest pins the output equal to
-    plan.violations, duplicate_rows, ordering_violations and
-    referential_violations combined. The only window partition key is
-    conv_id, the same skew boundary ordering_violations has; a
-    pathological duplicate-key group can use
-    duplicate_rows(salt_buckets=N) standalone.
+    On a table that is not hash-partitioned by conv_id, the NULL-conv
+    rows take their own branch, with the rank alone, unioned back before
+    the explode: lagging them on conv_id would shuffle them all to one
+    task. A table bucketed by conv_id holds them in one bucket anyway,
+    so there one projection over one scan serves every row.
+
+    Duplicate ranks are the plain keep-first rank over (ts, role);
+    pytest pins the output equal to plan.violations, duplicate_rows,
+    ordering_violations and referential_violations combined, on both
+    shapes. The only window partition key of the lag is conv_id, the
+    same skew boundary ordering_violations has; a pathological
+    duplicate-key group can use duplicate_rows(salt_buckets=N)
+    standalone.
     """
     key = list(plan.spec.key_columns)
     kc, oc = key[0], key[-1]
+    k, o = ident(kc), ident(oc)
 
     # the alias names the fact side for the EXISTS's outer reference: an
     # unqualified outer conv_id would resolve against the dim itself
-    src = transcripts.alias("_turns").select(
-        F.col(kc), F.col(oc), F.col("ts"), F.col("role"),
-        plan._violation_array().alias("_rv"),
-    )
+    src = plan.with_inputs(transcripts.alias("_turns")).selectExpr(
+        k, o, "ts", "role", f"{plan.violation_array()} AS _rv")
     has_ref = conversations is not None
 
-    # Two branches on conv_id nullability, unioned before the explode.
-    # Non-null convs (≈ the whole table) window on conv_id ALONE with
-    # order (turn_idx, ts, role): the required sort (conv_id, turn_idx,
-    # ts, role) is then EXACTLY the bucketed table's declared SORTED BY,
-    # so on a bucketed scan EnsureRequirements elides the Exchange AND
-    # the full-table Sort (a second partition key would break that
-    # sort-prefix match). NULL-conv rows need no ordering/referential
-    # checks; their keep-first dup rank partitions by the dup key
-    # (turn_idx), and they sort/shuffle only their own (typically tiny,
-    # and on the bucketed layout row-group-prunable) row set.
-    conv_rows = src.where(F.col(kc).isNotNull())
-    null_rows = src.where(F.col(kc).isNull())
-
-    w_ord = Window.partitionBy(kc).orderBy(
-        F.col(oc).asc(), F.col("ts").asc(), F.col("role").asc()
-    )
-    tie_break = ["ts", "role"]
-    # the EXISTS sits on the non-NULL branch only, so the dim is scanned
-    # once; a NULL conv_id takes no referential check (its flag is true)
-    ref_a, ref_b = [], []
-    if has_ref:
-        dim = F.broadcast(conversations)
-        exists = dim.where(F.col(kc) == F.col(f"_turns.{kc}").outer()).exists()
-        ref_a, ref_b = [exists.alias("_ref")], [F.lit(True).alias("_ref")]
-    ann_a = conv_rows.select(
-        "*",
-        F.lag(oc).over(w_ord).alias("_po"),
-        F.lag("ts").over(w_ord).alias("_pts"),
-        keep_first_rank(key, tie_break).alias("_dr"),
-        *ref_a,
-    )
-
-    fields = transcripts.schema
-    ann_b = null_rows.select(
-        "*",
-        F.lit(None).cast(fields[oc].dataType).alias("_po"),
-        F.lit(None).cast(fields["ts"].dataType).alias("_pts"),
-        keep_first_rank([oc], tie_break).alias("_dr"),
-        *ref_b,
-    )
-    ann = ann_a.unionByName(ann_b)
+    # The lag windows on conv_id ALONE with order (turn_idx, ts, role),
+    # and the rank on (conv_id, turn_idx) by (ts, role): every window
+    # then requires the sort (conv_id, turn_idx, ts, role), EXACTLY the
+    # bucketed table's declared SORTED BY, so on a bucketed scan
+    # EnsureRequirements elides the Exchange AND the full-table Sort (a
+    # second lag partition key would break that sort-prefix match).
+    # NULL-conv rows need no ordering/referential checks: their lag is
+    # NULL, and referential_check skips a NULL conv_id.
+    rank = f"{keep_first_rank(key, ['ts', 'role'])} AS _dr"
+    lag = f"OVER (PARTITION BY {k} ORDER BY {o}, ts, role)"
+    exists = ([F.broadcast(conversations).where(
+        F.col(kc) == F.col(f"_turns.{kc}").outer()).exists().alias("_ref")]
+        if has_ref else [])
+    windows = ["*", f"IF({k} IS NULL, NULL, lag({o}) {lag}) AS _po",
+               f"IF({k} IS NULL, NULL, lag(ts) {lag}) AS _pts", rank]
+    if _hashed_by(transcripts, kc):
+        ann = src.select(*map(F.expr, windows), *exists)
+    else:
+        # the EXISTS sits on the non-NULL branch only, so the dim is
+        # scanned once
+        conv_rows = src.where(f"{k} IS NOT NULL").select(*map(F.expr, windows), *exists)
+        fields = transcripts.schema
+        null_rows = src.where(f"{k} IS NULL").selectExpr(
+            "*",
+            f"CAST(NULL AS {fields[oc].dataType.simpleString()}) AS _po",
+            f"CAST(NULL AS {fields['ts'].dataType.simpleString()}) AS _pts",
+            rank,
+            *(["TRUE AS _ref"] if has_ref else []),
+        )
+        ann = conv_rows.union(null_rows)  # same columns in the same order
 
     extras = [
-        unique_key_check(key, F.col("_dr")),
-        # the NULL-conv branch has NULL _po/_pts, so no ordering check
-        # fires there without a conv_id guard
+        unique_key_check(key, "_dr"),
+        # NULL-conv rows have NULL _po/_pts, so no ordering check fires
+        # there without a conv_id guard
         *ordering_checks(oc, "ts", "_po", "_pts"),
     ]
     if has_ref:
-        extras.append(referential_check(kc, F.col("_ref")))
+        extras.append(referential_check(kc, "_ref"))
+    return explode_violations(ann, [kc, oc], violation_array(["_rv", *extras]))
 
-    combined = F.concat(F.col("_rv"), F.array_compact(F.array(*extras)))
-    return explode_violations(ann, [kc, oc], combined)
+
+def check_ids(plan: ValidationPlan) -> set[str]:
+    """Every check id `full_validation` can emit under `plan`, known at
+    compile time."""
+    return {c.check_id for c in plan.checks} | set(TABLE_CHECK_IDS)
 
 
 def validation_summary(
@@ -137,8 +158,11 @@ def validation_summary(
     conversations: DataFrame | None = None,
     salt_buckets: int = 1,
 ) -> dict:
-    """One-action summary: violation counts per check class.
-    `salt_buckets` is accepted and ignored (bench.py passes it)."""
-    vio = full_validation(plan, transcripts, conversations)
-    rows = vio.groupBy("check_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    return {r["check_id"]: r["n"] for r in rows}
+    """One-action summary: violation counts per check class, counted by
+    an Observation on a `noop` write of the fused stream (no aggregate,
+    so no final Exchange). `salt_buckets` is accepted and ignored
+    (bench.py passes it)."""
+    vio, counts = count_by_check(
+        full_validation(plan, transcripts, conversations), check_ids(plan))
+    vio.write.format("noop").mode("overwrite").save()
+    return counts()

@@ -48,7 +48,8 @@ def windowed_check_stats(
       (window_start, window_end, check_id, n_violations)
     """
     exploded = explode_violations(
-        stream.withWatermark(ts_col, watermark), [ts_col], plan._violation_array()
+        plan.with_inputs(stream.withWatermark(ts_col, watermark)), [ts_col],
+        plan.violation_array(),
     ).select(ts_col, "check_id")
     agg = (
         exploded.groupBy(
