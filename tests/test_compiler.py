@@ -159,6 +159,27 @@ def test_violation_message_format(spark):
     assert row["message"] == "v: value <-5> fails constraints: number: ge=0"
 
 
+def test_dotted_names_read_as_the_caller_means_them(spark):
+    """A spec field name is read like `F.col`: `m.x` is field x of struct
+    m. A column_stats name comes from `df.schema`: `a.b` is the
+    top-level column of that name."""
+    from typical_spark.operators.stats import column_stats
+
+    spec = TableSpec(
+        name="t", key_columns=("row_id",),
+        fields=(FieldSpec("m.x", "int", checks=(NumberCheck(ge=0),)),),
+    )
+    nested = spark.createDataFrame(
+        [(0, (1,)), (1, (-2,)), (2, (None,))], "row_id int, m struct<x: int>")
+    vio = compile_table_spec(spec).violations(nested, with_message=False).collect()
+    assert [(r["row_id"], r["column"], r["observed"]) for r in vio] == [(1, "m.x", "-2")]
+
+    flat = spark.createDataFrame([(1,), (None,), (3,)], "`a.b` int")
+    (row,) = column_stats(flat).collect()
+    assert (row["column"], row["n_null"], row["min_value"], row["max_value"]) == (
+        "a.b", 1, "1", "3")
+
+
 def test_split_and_valid_predicate(spark, transcripts_df):
     from typical_spark.specs import transcript_spec
 

@@ -307,12 +307,11 @@ def _initial_plan(df):
 def test_full_validation_dim_check_is_broadcast_exists(
     spark, transcripts_df, tmp_path
 ):
-    """The referential flag is a correlated EXISTS on the non-NULL branch,
-    planned as a broadcast ExistenceJoin: the dim is scanned once and
-    never deduplicated (no Aggregate on its side), so the only shuffles
-    are the two window Exchanges (conv_id for the non-NULL rows,
-    (conv_id, turn_idx) for the NULL ones). A dedup of the dim adds an
-    Aggregate and a third Exchange before its broadcast."""
+    """The referential flag is a correlated EXISTS, planned as a
+    broadcast ExistenceJoin: the dim is scanned once and never
+    deduplicated (no Aggregate on its side), so the only shuffle is the
+    windows' one Exchange, on conv_id. A dedup of the dim adds an
+    Aggregate and a second Exchange before its broadcast."""
     from typical_spark.pipeline import full_validation
     from typical_spark.sources.transcripts import generate_conversations_pdf
 
@@ -332,7 +331,7 @@ def test_full_validation_dim_check_is_broadcast_exists(
     dim_side = [m.getClass().getSimpleName() for m in _walk(joins[0].right())]
     assert dim_side[0] == "BroadcastExchangeExec", dim_side
     assert not [m for m in dim_side if "Aggregate" in m], dim_side
-    assert names.count("ShuffleExchangeExec") == 2, names
+    assert names.count("ShuffleExchangeExec") == 1, names
     assert names.count("FileSourceScanExec") == 1, names  # the dim, once
     out.count()  # executes
 

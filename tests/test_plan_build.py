@@ -9,8 +9,8 @@ partition_digests (one `F.lit` per bin bound and midpoint), 331 for
 column_stats (~50 Column calls per column), 206 for compile_table_spec
 and 755 for full_validation (each check and violation struct built as
 `F.*` Columns, 21 round trips per struct). The compiler now writes SQL
-text, which costs none, and full_validation parses each branch in one
-call.
+text, which costs none, and full_validation parses its one projection
+in one call.
 
 The text path writes every nullability itself, so the violation rows'
 schemas are pinned here too.

@@ -75,7 +75,7 @@ from typical_spark.specs import (
     TimestampRangeCheck,
     UnionCheck,
 )
-from typical_spark.sql_text import array, ident, in_list, literal, string
+from typical_spark.sql_text import array, ident, in_list, literal, path, string
 
 
 _NUMERIC_DDLS = {
@@ -273,7 +273,7 @@ def _compiled(column: str, check_id: str, expected: str, cond: str,
     """The one CompiledCheck constructor; `observed` defaults to the
     column's value as a string."""
     if observed is None:
-        observed = f"CAST({ident(column)} AS STRING)"
+        observed = f"CAST({path(column)} AS STRING)"
     return CompiledCheck(column, check_id, expected, cond, observed)
 
 
@@ -384,7 +384,7 @@ def compile_check(
         return out
 
     if isinstance(chk, TaggedCheck):
-        tag = ident(chk.tag_column)
+        tag = path(chk.tag_column)
         known_vals = [t for t, _ in chk.cases]
         out = [
             cc(f"(({tag} <=> {literal(tag_value)}) AND "
@@ -547,7 +547,7 @@ def compile_table_spec(spec: TableSpec, mode: str = "coerce") -> "ValidationPlan
     # Column inputs, projected under reserved names below the check array
     inputs: dict[str, Column] = {}
     for fs in spec.fields:
-        raw = ident(fs.name)
+        raw = path(fs.name)
         val = raw
         ce = coercion_expr(fs)
         if ce is not None:
@@ -591,8 +591,8 @@ def compile_table_spec(spec: TableSpec, mode: str = "coerce") -> "ValidationPlan
     secret_cols = {fs.name for fs in spec.fields if fs.secret}
     compiled = [
         replace(cc, observed=(
-            f"CASE WHEN {ident(cc.column)} IS NOT NULL THEN "
-            f"repeat('*', length(CAST({ident(cc.column)} AS STRING))) END"))
+            f"CASE WHEN {path(cc.column)} IS NOT NULL THEN "
+            f"repeat('*', length(CAST({path(cc.column)} AS STRING))) END"))
         if cc.column in secret_cols else cc
         for cc in compiled
     ]

@@ -35,11 +35,10 @@ from pyspark.sql import functions as F
 
 from typical_spark.plans.validation import (
     explode_violations,
+    keyed_entry,
     violation_array,
-    violation_entry,
-    violation_struct,
 )
-from typical_spark.sql_text import ident
+from typical_spark.sql_text import path
 
 
 def ordering_checks(
@@ -49,11 +48,11 @@ def ordering_checks(
     prev_ts: str | None,
     contiguous: bool = True,
     ts_monotonic: bool = True,
-) -> list[str]:
-    """The turn-ordering checks as fused-array entries (SQL text): one
-    `violation_entry` per check, comparing each row with the previous row
-    of its group (`prev_order` / `prev_ts`, lagged columns that are NULL
-    on a group's first row).
+) -> dict[str, str]:
+    """The turn-ordering checks as fused-array entries (SQL text), by
+    check id (`keyed_entry`): one per check, comparing each row with the
+    previous row of its group (`prev_order` / `prev_ts`, lagged columns
+    that are NULL on a group's first row).
 
       order_duplicate  — same order value as the previous row
       order_gap        — order jumps by > 1 (when `contiguous`)
@@ -68,27 +67,20 @@ def ordering_checks(
     order they come. The extra key only lets the sort match a bucketed
     table's declared sort order, so the Sort disappears from the plan.
     """
-    o, po = ident(order_col), ident(prev_order)
+    o, po = path(order_col), path(prev_order)
     d = f"({o} - {po})"
-    checks = [
-        violation_entry(f"{po} IS NOT NULL AND {d} = 0", violation_struct(
-            order_col, "order_duplicate", f"CAST({o} AS STRING)",
-            f"concat('!= prev ', {po})",
-        ))
-    ]
+    checks = keyed_entry("order_duplicate", f"{po} IS NOT NULL AND {d} = 0",
+                         order_col, f"CAST({o} AS STRING)", f"concat('!= prev ', {po})")
     if contiguous:
-        checks.append(violation_entry(f"{po} IS NOT NULL AND {d} > 1", violation_struct(
-            order_col, "order_gap", f"CAST({o} AS STRING)",
-            f"concat('prev + 1 = ', {po} + 1)",
-        )))
+        checks |= keyed_entry("order_gap", f"{po} IS NOT NULL AND {d} > 1", order_col,
+                              f"CAST({o} AS STRING)", f"concat('prev + 1 = ', {po} + 1)")
     if ts_col and ts_monotonic:
-        t, pt = ident(ts_col), ident(prev_ts)
-        checks.append(violation_entry(
+        t, pt = path(ts_col), path(prev_ts)
+        checks |= keyed_entry(
+            "ts_out_of_order",
             f"{pt} IS NOT NULL AND {t} IS NOT NULL AND {t} < {pt} AND {d} > 0",
-            violation_struct(
-                order_col, "ts_out_of_order", f"CAST({t} AS STRING)",
-                f"concat('>= prev ts ', CAST({pt} AS STRING))",
-            )))
+            order_col, f"CAST({t} AS STRING)",
+            f"concat('>= prev ts ', CAST({pt} AS STRING))")
     return checks
 
 
@@ -119,10 +111,10 @@ def ordering_violations(
         *( [F.col(ts_col), F.lag(ts_col).over(w).alias("_prev_ts")]
            if ts_col else [] ),
     )
-    arr = violation_array(ordering_checks(
+    arr = violation_array([*ordering_checks(
         order_col, ts_col, "_prev_o", "_prev_ts",
         require_contiguous, require_ts_monotonic,
-    ))
+    ).values()])
     return explode_violations(lagged, [*group_cols, order_col], arr).drop("column")
 
 

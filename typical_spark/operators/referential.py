@@ -24,20 +24,18 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import violation_entry, violation_struct
-from typical_spark.sql_text import ident, string
+from typical_spark.plans.validation import keyed_entry
+from typical_spark.sql_text import path, string
 
 
-def referential_check(key: str, matched: str) -> str:
-    """The referential check as a fused-array entry: a non-NULL `key`
-    whose `matched` flag (SQL text) — an EXISTS against the dimension,
-    false when no dim row has the key — is false has no row in the
-    dimension."""
-    k = ident(key)
-    return violation_entry(f"{k} IS NOT NULL AND NOT {matched}", violation_struct(
-        key, "referential", f"CAST({k} AS STRING)",
-        string(f"{key} exists in conversations"),
-    ))
+def referential_check(key: str, matched: str) -> dict[str, str]:
+    """The referential check as a fused-array entry, by check id: a
+    non-NULL `key` whose `matched` flag (SQL text) — an EXISTS against
+    the dimension, false when no dim row has the key — is false has no
+    row in the dimension."""
+    k = path(key)
+    return keyed_entry("referential", f"{k} IS NOT NULL AND NOT {matched}", key,
+                       f"CAST({k} AS STRING)", string(f"{key} exists in conversations"))
 
 
 def referential_violations(

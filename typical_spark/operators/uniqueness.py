@@ -31,8 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from typical_spark.plans.validation import violation_entry, violation_struct
-from typical_spark.sql_text import ident, string
+from typical_spark.plans.validation import keyed_entry
+from typical_spark.sql_text import path, string
 
 
 def keep_first_rank(keys: Sequence[str], order_by: Sequence[str] | None) -> str:
@@ -40,20 +40,18 @@ def keep_first_rank(keys: Sequence[str], order_by: Sequence[str] | None) -> str:
     `order_by` order (SQL text of a window function): rank 1 is the kept
     first occurrence, every rank > 1 a duplicate. Without `order_by` the
     rank among tied rows is arbitrary (a constant sort key)."""
-    order = ", ".join(map(ident, order_by)) if order_by else "1"
-    return (f"row_number() OVER (PARTITION BY {', '.join(map(ident, keys))} "
+    order = ", ".join(map(path, order_by)) if order_by else "1"
+    return (f"row_number() OVER (PARTITION BY {', '.join(map(path, keys))} "
             f"ORDER BY {order})")
 
 
-def unique_key_check(keys: Sequence[str], rank: str) -> str:
-    """The unique-key check as a fused-array entry: a row whose
-    `keep_first_rank` (`rank`, SQL text) is > 1 repeats an earlier row's
-    `keys`. Reported on the last key column, with the rank as the
+def unique_key_check(keys: Sequence[str], rank: str) -> dict[str, str]:
+    """The unique-key check as a fused-array entry, by check id: a row
+    whose `keep_first_rank` (`rank`, SQL text) is > 1 repeats an earlier
+    row's `keys`. Reported on the last key column, with the rank as the
     observed value."""
-    return violation_entry(f"{rank} > 1", violation_struct(
-        keys[-1], "unique_key", f"CAST({rank} AS STRING)",
-        string(f"unique {tuple(keys)}"),
-    ))
+    return keyed_entry("unique_key", f"{rank} > 1", keys[-1],
+                       f"CAST({rank} AS STRING)", string(f"unique {tuple(keys)}"))
 
 
 def duplicate_key_counts(

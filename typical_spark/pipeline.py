@@ -10,28 +10,35 @@ common schema
 from ONE scan of the narrow columns they need (conv_id, turn_idx, ts,
 role) plus the scan-local row-check array. Every window sorts by
 (conv_id, turn_idx, ts, role), so on a table bucketed by conv_id and
-sorted that way the whole pass needs no Exchange and no Sort. Rows with
-a conv_id take their referential flag from a correlated EXISTS against
-the conversations table, planned as a broadcast ExistenceJoin: the dim
-is scanned once, never deduplicated, and nothing on the fact side moves.
-NULL-conv rows take no ordering or referential check; they rank their
-duplicates with the same keep-first rank over (conv_id, turn_idx) as the
-other rows. Where they sit depends on the table: bucketed by conv_id,
-they all share one bucket already, so they go through the same windows
-as every other row; otherwise they take a branch of their own, because
-a window on conv_id would shuffle them all to one task, and that branch
-shuffles them by (NULL, turn_idx). `validation_summary` counts the
-stream by check as it runs, with no aggregate.
+sorted that way the whole pass needs no Exchange and no Sort; any other
+input takes one Exchange, on conv_id. Rows with a conv_id take their
+referential flag from a correlated EXISTS against the conversations
+table, planned as a broadcast ExistenceJoin: the dim is scanned once,
+never deduplicated, and nothing on the fact side moves.
+
+NULL-conv rows go through the same windows as every other row. Their lag
+is masked to NULL, so they take no ordering check, and
+`referential_check` skips a NULL key; they rank their duplicates with
+the same keep-first rank over (conv_id, turn_idx). A window on conv_id
+puts them all in one task. That is one bucket on a bucketed table
+anyway, and on the perfbench data they are 80 of 40,200 turns (0.2%);
+a separate branch for them cost the plain copy a second scan and a task
+wave and gave no measured gain (CHANGES.md). `validation_summary` counts
+the stream by check as it runs, with no aggregate.
 
 Every check is built by the same function its standalone operator uses:
 `ordering.ordering_checks`, `uniqueness.keep_first_rank` +
 `unique_key_check`, `referential.referential_check`, and the plan's
-`violation_array` for the rows; all are SQL text. Each branch is one
-projection (its windows written as `OVER (…)` and its EXISTS together),
-because every DataFrame step costs a Catalyst analysis on the driver.
+`violation_array` for the rows; all are SQL text, and each builder keys
+its entries by the check ids they emit, so `check_ids` counts exactly
+what is built. The pass is one projection (its windows written as
+`OVER (…)` and its EXISTS together), because every DataFrame step
+costs a Catalyst analysis on the driver.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,22 +52,20 @@ from typical_spark.plans.validation import (
     explode_violations,
     violation_array,
 )
-from typical_spark.sql_text import ident
-
-# the ids of the checks full_validation adds to the plan's row checks
-TABLE_CHECK_IDS = ("unique_key", "order_duplicate", "order_gap", "ts_out_of_order",
-                   "referential")
+from typical_spark.sql_text import path
 
 
-def _hashed_by(df: DataFrame, col: str) -> bool:
-    """True when `df` is read hash-partitioned by `col` alone, as a table
-    bucketed by it is: then every row with a NULL `col` already sits in
-    one partition, and a window on `col` needs no Exchange."""
-    part = df._jdf.queryExecution().sparkPlan().outputPartitioning()
-    if part.getClass().getSimpleName() != "HashPartitioning":
-        return False
-    exprs = part.expressions()
-    return exprs.size() == 1 and exprs.head().toString().split("#")[0] == col
+def _table_checks(key: Sequence[str], referential: bool) -> dict[str, str]:
+    """The checks full_validation adds to the plan's row checks, by id,
+    over its window columns: `_dr` (duplicate rank), `_po`/`_pts` (the
+    previous row's turn_idx and ts) and `_ref` (the EXISTS flag)."""
+    return {
+        **unique_key_check(key, "_dr"),
+        # NULL-conv rows have NULL _po/_pts, so no ordering check fires
+        # there without a conv_id guard
+        **ordering_checks(key[-1], "ts", "_po", "_pts"),
+        **(referential_check(key[0], "_ref") if referential else {}),
+    }
 
 
 def full_validation(
@@ -80,23 +85,16 @@ def full_validation(
               flag (broadcast ExistenceJoin)
            -> concat arrays, one explode_violations.
 
-    On a table that is not hash-partitioned by conv_id, the NULL-conv
-    rows take their own branch, with the rank alone, unioned back before
-    the explode: lagging them on conv_id would shuffle them all to one
-    task. A table bucketed by conv_id holds them in one bucket anyway,
-    so there one projection over one scan serves every row.
-
     Duplicate ranks are the plain keep-first rank over (ts, role);
     pytest pins the output equal to plan.violations, duplicate_rows,
-    ordering_violations and referential_violations combined, on both
-    shapes. The only window partition key of the lag is conv_id, the
-    same skew boundary ordering_violations has; a pathological
-    duplicate-key group can use duplicate_rows(salt_buckets=N)
-    standalone.
+    ordering_violations and referential_violations combined. The only
+    window partition key of the lag is conv_id, the same skew boundary
+    ordering_violations has; a pathological duplicate-key group can use
+    duplicate_rows(salt_buckets=N) standalone.
     """
     key = list(plan.spec.key_columns)
     kc, oc = key[0], key[-1]
-    k, o = ident(kc), ident(oc)
+    k, o = path(kc), path(oc)
 
     # the alias names the fact side for the EXISTS's outer reference: an
     # unqualified outer conv_id would resolve against the dim itself
@@ -110,46 +108,23 @@ def full_validation(
     # bucketed table's declared SORTED BY, so on a bucketed scan
     # EnsureRequirements elides the Exchange AND the full-table Sort (a
     # second lag partition key would break that sort-prefix match).
-    # NULL-conv rows need no ordering/referential checks: their lag is
-    # NULL, and referential_check skips a NULL conv_id.
-    rank = f"{keep_first_rank(key, ['ts', 'role'])} AS _dr"
     lag = f"OVER (PARTITION BY {k} ORDER BY {o}, ts, role)"
+    windows = ["*", f"IF({k} IS NULL, NULL, lag({o}) {lag}) AS _po",
+               f"IF({k} IS NULL, NULL, lag(ts) {lag}) AS _pts",
+               f"{keep_first_rank(key, ['ts', 'role'])} AS _dr"]
     exists = ([F.broadcast(conversations).where(
         F.col(kc) == F.col(f"_turns.{kc}").outer()).exists().alias("_ref")]
         if has_ref else [])
-    windows = ["*", f"IF({k} IS NULL, NULL, lag({o}) {lag}) AS _po",
-               f"IF({k} IS NULL, NULL, lag(ts) {lag}) AS _pts", rank]
-    if _hashed_by(transcripts, kc):
-        ann = src.select(*map(F.expr, windows), *exists)
-    else:
-        # the EXISTS sits on the non-NULL branch only, so the dim is
-        # scanned once
-        conv_rows = src.where(f"{k} IS NOT NULL").select(*map(F.expr, windows), *exists)
-        fields = transcripts.schema
-        null_rows = src.where(f"{k} IS NULL").selectExpr(
-            "*",
-            f"CAST(NULL AS {fields[oc].dataType.simpleString()}) AS _po",
-            f"CAST(NULL AS {fields['ts'].dataType.simpleString()}) AS _pts",
-            rank,
-            *(["TRUE AS _ref"] if has_ref else []),
-        )
-        ann = conv_rows.union(null_rows)  # same columns in the same order
-
-    extras = [
-        unique_key_check(key, "_dr"),
-        # NULL-conv rows have NULL _po/_pts, so no ordering check fires
-        # there without a conv_id guard
-        *ordering_checks(oc, "ts", "_po", "_pts"),
-    ]
-    if has_ref:
-        extras.append(referential_check(kc, "_ref"))
+    ann = src.select(*map(F.expr, windows), *exists)
+    extras = _table_checks(key, has_ref).values()
     return explode_violations(ann, [kc, oc], violation_array(["_rv", *extras]))
 
 
 def check_ids(plan: ValidationPlan) -> set[str]:
-    """Every check id `full_validation` can emit under `plan`, known at
-    compile time."""
-    return {c.check_id for c in plan.checks} | set(TABLE_CHECK_IDS)
+    """Every check id `full_validation` can emit under `plan` (with a
+    conversations table), known at compile time."""
+    return {c.check_id for c in plan.checks} | set(
+        _table_checks(plan.spec.key_columns, referential=True))
 
 
 def validation_summary(

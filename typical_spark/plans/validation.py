@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from typical_spark.compiler import CompiledCheck
 from typical_spark.specs import TableSpec
-from typical_spark.sql_text import ident, string
+from typical_spark.sql_text import path, string
 
 # Stable violation-row schema (analog of ConstraintValueError fields,
 # reference typic/constraints/common.py:169-173).
@@ -61,6 +61,14 @@ def violation_entry(cond: str, struct: str) -> str:
     return f"CASE WHEN {cond} THEN array({struct}) ELSE {NO_VIOLATIONS} END"
 
 
+def keyed_entry(check_id: str, cond: str, column: str, observed: str,
+                expected: str) -> dict[str, str]:
+    """{check_id: entry}: one `violation_entry` keyed by the check id it
+    emits, so a caller that counts by id counts what it builds."""
+    return {check_id: violation_entry(
+        cond, violation_struct(column, check_id, observed, expected))}
+
+
 def violation_array(entries: Sequence[str]) -> str:
     """The fused array of `violation_entry` terms (or arrays of them)."""
     return f"concat({', '.join(entries)})" if entries else NO_VIOLATIONS
@@ -79,7 +87,7 @@ def explode_violations(df: DataFrame, keys: Sequence[str], arr: str) -> DataFram
     pass). For the same reason `arr` is inlined as an expression, never
     through a projected column: Spark infers that same size() > 0 filter
     from a Generate whose input is an attribute."""
-    return df.selectExpr(*map(ident, keys), f"inline({arr})")
+    return df.selectExpr(*map(path, keys), f"inline({arr})")
 
 
 def count_by_check(

@@ -22,10 +22,16 @@ _LONG_MAX = 2**63 - 1
 
 
 def ident(name: str) -> str:
-    """`name` as a quoted column reference, read the way `F.col` reads
-    it: a dot separates the parts of a nested field path (`a.b` is field
-    `b` of struct `a`)."""
-    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
+    """`name` as one quoted SQL identifier: a top-level column named
+    exactly `name`, dots and all (as `df.schema` lists it)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def path(name: str) -> str:
+    """`name` as a column reference read the way `F.col` reads it: a dot
+    separates the parts of a nested field path (`a.b` is field `b` of
+    struct `a`)."""
+    return ".".join(map(ident, name.split(".")))
 
 
 def string(s: str) -> str:
