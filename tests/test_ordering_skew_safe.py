@@ -10,12 +10,16 @@ from pyspark.sql import functions as F
 from test_stateful_streaming import _run_stream, _write_sentinel
 
 from typical_spark import compile_table_spec
+from typical_spark.operators import ordering
 from typical_spark.operators.ordering import (
     ordering_violations,
     ordering_violations_skew_safe,
 )
 from typical_spark.pipeline import full_validation
 from typical_spark.specs import transcript_spec
+
+
+ORDERING_IDS = ("order_duplicate", "order_gap", "ts_out_of_order")
 
 
 def _rows(df):
@@ -26,7 +30,13 @@ def _rows(df):
     )
 
 
-def test_skew_safe_equals_window_on_clean_fixture(spark):
+@pytest.fixture
+def small_chunks(monkeypatch):
+    """3-turn chunks, so violations straddle chunk boundaries."""
+    monkeypatch.setattr(ordering, "CHUNK_TURNS", 3)
+
+
+def test_skew_safe_equals_window_on_clean_fixture(spark, small_chunks):
     t0 = dt.datetime(2025, 1, 1)
     rows = []
     for c in range(40):
@@ -37,18 +47,17 @@ def test_skew_safe_equals_window_on_clean_fixture(spark):
             ts += dt.timedelta(seconds=-30 if (c * j) % 17 == 3 else 60)  # planted ts regressions
             rows.append((f"c{c:04d}", idx, ts))
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
-    win = ordering_violations(df, ["conv_id"], "turn_idx", ts_col="ts")
-    ss = ordering_violations_skew_safe(
-        df, ["conv_id"], "turn_idx", ts_col="ts", num_partitions=7
-    )
-    assert _rows(win) == _rows(ss)
-    assert len(_rows(win)) > 0  # fixture actually plants violations
+    for ts_col in ("ts", None):
+        win = _rows(ordering_violations(df, ["conv_id"], "turn_idx", ts_col=ts_col))
+        ss = _rows(ordering_violations_skew_safe(df, ["conv_id"], "turn_idx", ts_col=ts_col))
+        assert ss == win
+        assert len(win) > 0  # fixture actually plants violations
 
 
 def test_skew_safe_hot_group_split_across_partitions(spark):
-    """One group with 60k rows, forced across 16 range partitions: every
-    violation (including pairs that straddle partition boundaries) must
-    still be found, and no window shuffle on the group key exists."""
+    """One group with 60k rows, windowed as 7 partitions (chunks of the
+    default width): every violation (including pairs that straddle
+    chunk boundaries) must still be found."""
     t0 = dt.datetime(2025, 1, 1)
     rows = []
     idx = 0
@@ -57,39 +66,22 @@ def test_skew_safe_hot_group_split_across_partitions(spark):
         rows.append(("hot", idx, t0 + dt.timedelta(seconds=j)))
     rows.append(("cold", 1, t0))
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
-    ss = ordering_violations_skew_safe(
-        df, ["conv_id"], "turn_idx", ts_col="ts", num_partitions=16
-    )
+    ss = ordering_violations_skew_safe(df, ["conv_id"], "turn_idx", ts_col="ts")
     got = _rows(ss)
     want = _rows(ordering_violations(df, ["conv_id"], "turn_idx", ts_col="ts"))
     assert got == want
     assert len(got) == 6  # gaps at j=9999k for k=1..6 (j=0 precedes the first pair)
 
 
-def test_skew_safe_matches_on_dirty_transcripts(spark, transcripts_df):
-    """On the real dirty fixture (has order ties), the tie-order-
-    independent classes must agree exactly."""
+def test_skew_safe_matches_on_dirty_transcripts(spark, transcripts_df, small_chunks):
+    """On the real dirty fixture (order ties with unequal timestamps,
+    negative turn_idx), every row agrees in all five columns: both paths
+    order each group by (turn_idx, ts)."""
     keyed = transcripts_df.where(F.col("conv_id").isNotNull())
-    win = ordering_violations(keyed, ["conv_id"], "turn_idx", ts_col="ts")
-    ss = ordering_violations_skew_safe(
-        keyed, ["conv_id"], "turn_idx", ts_col="ts"
-    )
-
-    def stable(df):
-        return sorted(
-            tuple(r) for r in df.where(
-                F.col("check_id").isin("order_duplicate", "order_gap")
-            ).select("conv_id", "turn_idx", "check_id").collect()
-        )
-
-    assert stable(win) == stable(ss)
-    # ts check counts may differ only at tie boundaries; they must be close
-    n_win = win.where("check_id = 'ts_out_of_order'").count()
-    n_ss = ss.where("check_id = 'ts_out_of_order'").count()
-    assert abs(n_win - n_ss) <= max(5, int(0.01 * max(n_win, 1)))
-
-
-ORDERING_IDS = ("order_duplicate", "order_gap", "ts_out_of_order")
+    win = _rows(ordering_violations(keyed, ["conv_id"], "turn_idx", ts_col="ts"))
+    ss = _rows(ordering_violations_skew_safe(keyed, ["conv_id"], "turn_idx", ts_col="ts"))
+    assert ss == win
+    assert {r[2] for r in win} == set(ORDERING_IDS)
 
 
 def _parity_rows():
@@ -118,9 +110,25 @@ def _parity_rows():
     return [(cv, i, "user", "hi", None, t) for cv, i, t in rows]
 
 
-def test_four_ordering_paths_agree(spark):
+def test_four_ordering_paths_agree(spark, small_chunks):
     """The window operator, the fused flagship pass, the skew-safe twin
-    and the stateful stream emit byte-identical ordering violations."""
+    and the stateful stream emit byte-identical ordering violations,
+    under UTC and under a session time zone with an offset: all four
+    print timestamps in the session time zone."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        by_tz = []
+        for tz in ("UTC", "America/New_York"):
+            spark.conf.set(key, tz)
+            by_tz.append(_assert_four_paths_agree(spark, f"ordering_parity_{tz.split('/')[-1]}"))
+    finally:
+        spark.conf.set(key, old)
+    assert by_tz[0] != by_tz[1]  # the zone reached the timestamp text
+
+
+def _assert_four_paths_agree(spark, name):
+    """Assert the four paths agree on the parity fixture; return the rows."""
     schema = (
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp"
@@ -133,14 +141,12 @@ def test_four_ordering_paths_agree(spark):
         full_validation(compile_table_spec(transcript_spec()), df)
         .where(F.col("check_id").isin(*ORDERING_IDS))
     )
-    ss = _rows(ordering_violations_skew_safe(
-        keyed, ["conv_id"], "turn_idx", ts_col="ts", num_partitions=7
-    ))
+    ss = _rows(ordering_violations_skew_safe(keyed, ["conv_id"], "turn_idx", ts_col="ts"))
     d = tempfile.mkdtemp(prefix="ordering_parity_")
     try:
         df.repartition(3).write.mode("overwrite").parquet(d)
         _write_sentinel(spark, d)
-        stream = _rows(_run_stream(spark, d, schema, "ordering_parity"))
+        stream = _rows(_run_stream(spark, d, schema, name))
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -149,3 +155,4 @@ def test_four_ordering_paths_agree(spark):
     assert fused == win
     assert ss == win
     assert stream == win
+    return win

@@ -336,6 +336,32 @@ def test_full_validation_dim_check_is_broadcast_exists(
     out.count()  # executes
 
 
+def test_skew_safe_ordering_windows_turns_by_group_and_chunk(spark, transcripts_df):
+    """ordering_violations_skew_safe runs in Catalyst: no Python-eval
+    node, and the Window over the turn rows is partitioned by (conv_id,
+    chunk), so no task holds more than a chunk of one conversation. The
+    other Window, on conv_id alone, lags one aggregated row per chunk."""
+    from typical_spark.operators.ordering import ordering_violations_skew_safe
+
+    out = ordering_violations_skew_safe(transcripts_df, ["conv_id"], "turn_idx", ts_col="ts")
+    nodes = list(_walk(_initial_plan(out)))
+    names = [n.getClass().getSimpleName() for n in nodes]
+    assert not [n for n in names if "Python" in n or "Pandas" in n], names
+
+    def spec(w):
+        return [w.partitionSpec().apply(i).toString().split("#")[0]
+                for i in range(w.partitionSpec().size())]
+
+    windows = [n for n in nodes if n.getClass().getSimpleName() == "WindowExec"]
+    over_aggregate = [
+        w for w in windows
+        if any("Aggregate" in m.getClass().getSimpleName() for m in _walk(w))
+    ]
+    over_turns = [w for w in windows if w not in over_aggregate]
+    assert [spec(w) for w in over_turns] == [["conv_id", "_chunk"]], names
+    assert [spec(w) for w in over_aggregate] == [["conv_id"]], names
+
+
 def test_parsed_url_computed_once_per_row(spark):
     """attach_parsed_url's Generate barrier must keep the URL parse at
     ONE evaluation per row: reading N components from an inline
@@ -527,3 +553,15 @@ def test_partition_digests_shuffles_sketches_not_values(spark):
         for i in range(partial.aggregateExpressions().size())
     }
     assert modes == {"Partial"}, modes
+
+
+def test_partition_digests_evaluate_the_value_once(spark):
+    """The NaN-to-NULL value is projected once below the aggregate, not
+    inlined into both `count` and `percentile_approx`."""
+    from typical_spark.operators.drift import partition_digests
+
+    df = spark.range(2000).select(
+        (F.col("id") % 4).alias("g"), (F.col("id") * 0.5).alias("v")
+    )
+    optimized = partition_digests(df, "v", "g")._jdf.queryExecution().optimizedPlan()
+    assert optimized.toString().count("nanvl(") == 1, optimized.toString()

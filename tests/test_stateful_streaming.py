@@ -109,9 +109,9 @@ def test_shuffled_arrival_matches_batch(spark):
         _write_sentinel(spark, d)
         out = _run_stream(spark, d, batch_df.schema, "st_par")
         got = sorted(map(tuple, out.select(*cols).collect()))
-        # ALL FIVE columns byte-identical: the stateful kernel must
-        # reproduce the batch operator's observed/expected text exactly
-        # (epoch-micros reconstruct + _fmt_ts), not just the check ids
+        # ALL FIVE columns byte-identical: the stateful pairs must give
+        # the batch operator's observed/expected text exactly (epoch
+        # micros back through timestamp_micros), not just the check ids
         assert got == want and len(want) > 10
     finally:
         shutil.rmtree(d, ignore_errors=True)

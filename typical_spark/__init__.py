@@ -13,9 +13,10 @@ Design notes
 - Declarative specs (`typical_spark.specs`) are the analog of typical's
   constraint dataclasses (reference: typic/constraints/{number,text,array,
   mapping}.py); the compiler (`typical_spark.compiler`) is the analog of
-  typic/constraints/factory.py + typic/gen.py, except it emits Catalyst
-  `Column` expressions instead of string-templated Python, so every check
-  runs JVM-side inside whole-stage codegen.
+  typic/constraints/factory.py + typic/gen.py and keeps gen.py's design:
+  it templates each check as source text. The text is Catalyst SQL, not
+  Python, parsed once per fused pass, so every check runs JVM-side
+  inside whole-stage codegen.
 - Row-level checks are fused into ONE narrow projection pass producing
   `array<struct>` violation payloads that are exploded into a violations
   table — the distributed analog of `ConstraintValueError`

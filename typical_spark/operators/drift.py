@@ -169,12 +169,16 @@ def partition_digests(df: DataFrame, value_col, group_col) -> DataFrame:
         " - element_at(_b, CAST(array_position(_q, m) AS INT))))"
     )
     none = "CAST(array() AS ARRAY<DOUBLE>)"
-    v = F.nanvl(F.col(value_col).cast("double"), F.lit(None).cast("double"))
     mids = F.expr(sql_text.double_array((b[:-1] + b[1:]) / 2))
+    # the value is projected once: read inline by both aggregates, it
+    # would be evaluated twice per row
     return (
-        df.groupBy(F.col(group_col).cast("string").alias("group_id"))
-        .agg(F.count(v).cast("double").alias("n"),
-             F.percentile_approx(v, mids, ACCURACY).alias("_q"))
+        df.select(F.col(group_col).cast("string").alias("group_id"),
+                  F.nanvl(F.col(value_col).cast("double"),
+                          F.lit(None).cast("double")).alias("_v"))
+        .groupBy("group_id")
+        .agg(F.count("_v").cast("double").alias("n"),
+             F.percentile_approx("_v", mids, ACCURACY).alias("_q"))
         .selectExpr("group_id", "n", "_q", f"{sql_text.double_array(b)} AS _b")
         .selectExpr("group_id", "n",
                     f"coalesce(array_distinct(_q), {none}) AS means",

@@ -2,35 +2,39 @@
 
 No reference analog (typical validates one value at a time); required by
 the input_hint's stable-turn-ordering invariant (SURVEY.md Table B,
-"Window functions" row). One window pass per group computes lag() of the
-ordered columns; each violation class is a cheap comparison on the lagged
-values — all in a single shuffle on the group key.
+"Window functions" row). Each row is compared with the previous row of
+its group in (order, ts) order; each violation class is a cheap
+comparison of the two.
+
+`ordering_checks` is the only definition of the checks and their
+observed/expected text. Every path only supplies each row's previous
+(order, ts) and hands the pairs to `pair_violations`, one exploded
+`ordering_checks` array:
+
+  ordering_violations            — lag() over a window on the group (the
+                                   fused `full_validation` pass lags the
+                                   same way and embeds the same entries)
+  ordering_violations_skew_safe  — lag() over (group, order DIV
+                                   CHUNK_TURNS), plus one lag over the
+                                   chunks' last rows for each chunk's
+                                   first row
+  streaming.stateful             — the buffered, sorted session's shift(1)
 
 Scale: the window variant shuffles on `group_cols` (conv_id) and is the
 right default — conversations are bounded (≲10^4 turns), so per-group
-state is tiny. A group CANNOT be salted without breaking its order, but
-it does not have to be windowed either: `ordering_violations_skew_safe`
-range-partitions on (group, order) — a pathological 10^9-turn group is
-then SPLIT across many ordered partitions, adjacent pairs are checked
-inside each partition (Arrow batches, with carry between batches), and
-the O(#partitions) boundary pairs are checked in one tiny follow-up.
-Same violations, no task ever holds more than a partition's worth of one
-group (pytest asserts exact equality with the window variant).
-
-Each check is defined once per engine: `ordering_checks` builds the
-Catalyst entries (the window operator and the fused `full_validation`
-pass), and `ordering_pair_violations` is the pandas kernel (the
-skew-safe twin and the stateful streaming operator).
+state is tiny. A group cannot be salted without breaking its order, but
+it can be chunked by order value: the skew-safe twin windows each
+CHUNK_TURNS-wide chunk of a group on its own, and only one boundary row
+per chunk (its min and max (order, ts)) meets the group again, so no
+window partition holds more than a chunk of a pathological 10^9-turn
+group.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from typical_spark.plans.validation import (
@@ -39,6 +43,13 @@ from typical_spark.plans.validation import (
     violation_array,
 )
 from typical_spark.sql_text import path
+
+# Width of the order-value chunk the skew-safe twin windows on its own: a
+# typical conversation (≲10^4 turns) is one chunk, and a 10^9-turn group
+# is 10^5, whose boundary rows one task lags cheaply.
+CHUNK_TURNS = 10_000
+
+PREV_ORDER, PREV_TS = "_prev_o", "_prev_ts"
 
 
 def ordering_checks(
@@ -84,6 +95,31 @@ def ordering_checks(
     return checks
 
 
+
+
+def pair_violations(
+    lagged: DataFrame,
+    keys: Sequence[str],
+    order_col: str,
+    ts_col: str | None,
+    contiguous: bool = True,
+    ts_monotonic: bool = True,
+) -> DataFrame:
+    """The ordering violations of `lagged`, whose rows carry their
+    previous row's order value and timestamp as `PREV_ORDER` and
+    `PREV_TS` (NULL where there is none): one `ordering_checks` array,
+    exploded. Output: keys…, check_id, observed, expected."""
+    arr = violation_array([*ordering_checks(
+        order_col, ts_col, PREV_ORDER, PREV_TS, contiguous, ts_monotonic,
+    ).values()])
+    return explode_violations(lagged, keys, arr).drop("column")
+
+
+def _lags(keys: Sequence[str], w: Window) -> list[Column]:
+    """The previous row's (order, ts) in `w`, as PREV_ORDER / PREV_TS."""
+    return [F.lag(c).over(w).alias(p) for c, p in zip(keys, (PREV_ORDER, PREV_TS))]
+
+
 def ordering_violations(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -100,83 +136,12 @@ def ordering_violations(
     # stateful operator's sort): without it, duplicate order values
     # with UNEQUAL timestamps gave the next row a nondeterministic
     # "previous", so ts_out_of_order output could change run to run
-    order_keys = [F.col(order_col).asc()] + (
-        [F.col(ts_col).asc()] if ts_col else []
+    keys = [order_col] + ([ts_col] if ts_col else [])
+    w = Window.partitionBy(*group_cols).orderBy(*keys)
+    return pair_violations(
+        df.select(*group_cols, *keys, *_lags(keys, w)), [*group_cols, order_col],
+        order_col, ts_col, require_contiguous, require_ts_monotonic,
     )
-    w = Window.partitionBy(*group_cols).orderBy(*order_keys)
-    lagged = df.select(
-        *group_cols,
-        F.col(order_col),
-        F.lag(order_col).over(w).alias("_prev_o"),
-        *( [F.col(ts_col), F.lag(ts_col).over(w).alias("_prev_ts")]
-           if ts_col else [] ),
-    )
-    arr = violation_array([*ordering_checks(
-        order_col, ts_col, "_prev_o", "_prev_ts",
-        require_contiguous, require_ts_monotonic,
-    ).values()])
-    return explode_violations(lagged, [*group_cols, order_col], arr).drop("column")
-
-
-def _fmt_ts(t) -> str:
-    """Mirror Spark's timestamp->string cast (fraction without trailing
-    zeros) so skew-safe violations are byte-identical to the window
-    variant's."""
-    s = t.strftime("%Y-%m-%d %H:%M:%S")
-    us = getattr(t, "microsecond", 0)
-    if us:
-        s += "." + f"{us:06d}".rstrip("0")
-    return s
-
-
-def ordering_pair_violations(
-    cur: pd.DataFrame,
-    prev: pd.DataFrame,
-    group_cols: Sequence[str],
-    order_col: str,
-    ts_col: str | None = None,
-) -> pd.DataFrame:
-    """The pandas kernel of the turn-ordering checks: row i of `cur`
-    against row i of `prev`, its previous row in (group, order, ts) order
-    (both frames share one index). A pair from different groups, or with
-    a NULL order value on either side, is not checked; otherwise the
-    predicates and the observed/expected text are exactly
-    `ordering_checks`'s. Integral columns must arrive as nullable
-    integers, not float64, so values format as '3', not '3.0'.
-
-    Returns the violating rows of `cur`, one per failed check, with
-    check_id, observed and expected appended."""
-    same = pd.Series(True, index=cur.index)
-    for g in group_cols:
-        same &= (cur[g] == prev[g]) | (cur[g].isna() & prev[g].isna())
-    po, co = prev[order_col], cur[order_col]
-    valid = same & po.notna() & co.notna()
-    d = co - po
-    checks = [
-        ("order_duplicate", d == 0,
-         lambda m: co[m].astype(str),
-         lambda m: "!= prev " + po[m].astype(str)),
-        ("order_gap", d > 1,
-         lambda m: co[m].astype(str),
-         lambda m: "prev + 1 = " + (po[m] + 1).astype(str)),
-    ]
-    if ts_col:
-        pt, ct = prev[ts_col], cur[ts_col]
-        checks.append(
-            ("ts_out_of_order", pt.notna() & ct.notna() & (ct < pt) & (d > 0),
-             lambda m: ct[m].map(_fmt_ts),
-             lambda m: ">= prev ts " + pt[m].map(_fmt_ts)))
-    # per-row Python runs only over the (sparse) violations, formatting
-    chunks = [cur.iloc[:0].assign(check_id=None, observed=None, expected=None)]
-    for check_id, cond, observed, expected in checks:
-        mask = np.asarray(pd.Series(valid & cond).fillna(False), bool)
-        if mask.any():
-            chunks.append(cur[mask].assign(
-                check_id=check_id,
-                observed=np.asarray(observed(mask), object),
-                expected=np.asarray(expected(mask), object),
-            ))
-    return pd.concat(chunks, ignore_index=True)
 
 
 def ordering_violations_skew_safe(
@@ -184,97 +149,23 @@ def ordering_violations_skew_safe(
     group_cols: Sequence[str],
     order_col: str,
     ts_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Hot-group-proof twin of ordering_violations: identical violation
-    rows, but NO per-group window. repartitionByRange on (group, order)
-    splits even a 10^9-turn group across ordered partitions; adjacent
-    pairs are checked inside each partition with an Arrow-batched pass
-    (carrying the last row across batch boundaries), and the
-    O(#partitions) pairs that straddle partition boundaries are checked
-    in a bounded driver-side follow-up (2 summary rows per partition).
-    Both use `ordering_pair_violations`. Partitions are sorted by
-    (group, order) only, so when a repeated order value carries different
-    timestamps the next row's 'previous row', and with it
-    ts_out_of_order, may differ from the window variant's; output is
-    identical when repeated order values are exact copies, and the
-    duplicate/gap classes never depend on tie order."""
-    from pyspark import TaskContext
-
+    """Hot-group-proof twin of ordering_violations: the same rows, but
+    no window holds a whole group. Rows lag within their chunk (group,
+    order DIV CHUNK_TURNS); each chunk's first row, whose lag there is
+    NULL, takes the previous non-empty chunk's last (order, ts) from a
+    lag over one row per chunk. A NULL order value is its own chunk and
+    sorts first, as in the window. Of the rows tied on a chunk's minimum
+    (order, ts), the window lags one to the previous chunk and the rest
+    to their tie; the chunk lag does the same for all but one, whose NULL
+    lag emits nothing, and the chunk's head row stands in for that one."""
     gc = list(group_cols)
-    cols = [*gc, order_col] + ([ts_col] if ts_col else [])
-    src = df.select(*cols)
-    spark = src.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    sort_exprs = [F.col(c) for c in (*gc, order_col)]
-    rp = src.repartitionByRange(n, *sort_exprs).sortWithinPartitions(*sort_exprs)
-
-    types = {f.name: f.dataType.simpleString() for f in src.schema.fields}
-    out_schema = ", ".join(
-        [f"`{c}` {types[c]}" for c in cols]
-        + ["kind string", "pid int",
-           "check_id string", "observed string", "expected string"]
-    )
-    out_cols = [*cols, "kind", "pid", "check_id", "observed", "expected"]
-
-    # Arrow->pandas converts an integral column to float64 whenever the
-    # batch contains a NULL (and shift() widens native int64 the same
-    # way), which would format violations as '3.0' and break byte-parity
-    # with the window variant; use nullable ints throughout.
-    # (Caveat: integral values beyond 2^53 in a null-containing batch
-    # have already lost precision in that float hop.)
-    int_cols = [
-        f.name for f in src.schema.fields
-        if f.dataType.simpleString() in ("tinyint", "smallint", "int", "bigint")
-    ]
-
-    def nullable_ints(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.astype({c: "Int64" for c in int_cols})
-
-    def part(it):
-        # each batch is compared against its shift(1), with the previous
-        # batch's last row prepended so the batch-boundary pair is covered
-        pid = TaskContext.get().partitionId()
-        carry = None  # one-row DataFrame: last row of the previous batch
-        first = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            pdf = nullable_ints(pdf)
-            if first is None:
-                first = pdf.iloc[[0]]
-            work = pdf if carry is None else pd.concat(
-                [carry, pdf], ignore_index=True
-            )
-            v = ordering_pair_violations(work, work.shift(1), gc, order_col, ts_col)
-            if len(v):
-                yield v.assign(kind="v", pid=pid)[out_cols]
-            carry = work.iloc[[-1]]
-        if first is not None:
-            yield pd.concat([first, carry], ignore_index=True).assign(
-                kind=["first", "last"], pid=pid,
-                check_id=None, observed=None, expected=None,
-            )[out_cols]
-
-    # localCheckpoint (eager), NOT persist(): the two downstream reads
-    # share the materialized blocks, and the ContextCleaner reclaims them
-    # once the returned DataFrame is dereferenced — an explicit persist
-    # would pin executor storage forever with no handle for the caller
-    # to unpersist.
-    res = rp.mapInPandas(part, out_schema).localCheckpoint()
-    final = [*gc, order_col, "check_id", "observed", "expected"]
-    inner = res.where(F.col("kind") == "v").select(*final)
-
-    # boundary pairs: last(p) x first(next non-empty p) — bounded by the
-    # partition count, never by data volume
-    bounds = nullable_ints(
-        res.where(F.col("kind") != "v").select(*cols, "kind", "pid").toPandas()
-    ).sort_values(["pid", "kind"], ignore_index=True)
-    firsts = bounds[bounds["kind"] == "first"].iloc[1:].reset_index(drop=True)
-    lasts = bounds[bounds["kind"] == "last"].iloc[:-1].reset_index(drop=True)
-    edges = ordering_pair_violations(firsts, lasts, gc, order_col, ts_col)
-    edge_schema = ", ".join(
-        [f"`{c}` {types[c]}" for c in (*gc, order_col)]
-        + ["check_id string", "observed string", "expected string"]
-    )
-    return inner.unionByName(spark.createDataFrame(edges[final], edge_schema))
+    keys = [order_col] + ([ts_col] if ts_col else [])
+    rows = df.select(*gc, *keys, F.expr(f"{path(order_col)} DIV {CHUNK_TURNS}").alias("_chunk"))
+    inner = rows.select(
+        *gc, *keys, *_lags(keys, Window.partitionBy(*gc, "_chunk").orderBy(*keys)))
+    ends = rows.groupBy(*gc, "_chunk").agg(
+        F.min(F.struct(*keys)).alias("_first"), F.max(F.struct(*keys)).alias("_last"))
+    by_chunk = Window.partitionBy(*gc).orderBy("_chunk")
+    heads = ends.select(*gc, "_first.*", *_lags([f"_last.{c}" for c in keys], by_chunk))
+    return pair_violations(inner.unionByName(heads), [*gc, order_col], order_col, ts_col)

@@ -5,13 +5,15 @@ Contract: batch-identical results per conversation, independent of
 arrival order. A conversation's turns BUFFER in state until its session
 closes (event-time timeout: no new turns before the watermark passes its
 last activity + session_gap); at close the buffered turns are sorted in
-data order ((turn_idx, ts) — the batch operator's sort) and checked in
-one pass by `operators.ordering.ordering_pair_violations`, the pandas
-kernel the skew-safe batch twin also runs, so the check rules and their
-violation text are defined once. This is the session-window pattern:
-incremental checking against a running max cannot work here because the
-anomalous timestamps being *detected* would themselves reorder
-incremental finalization.
+data order ((turn_idx, ts) — the batch operator's sort) and each turn is
+emitted with its previous turn's (turn_idx, ts). Python judges nothing:
+the pairs go through `operators.ordering.pair_violations`, the Catalyst
+checks and violation text every batch path runs, so timestamps print in
+the session time zone as theirs do. Every flushed turn crosses back
+from Python, not only the violating ones. This is the session-window
+pattern: incremental checking against a running max cannot work here
+because the anomalous timestamps being *detected* would themselves
+reorder incremental finalization.
 
 Timestamps cross the Arrow boundary as EPOCH MICROSECONDS computed
 JVM-side (`unix_micros`), never as naive pandas timestamps: a naive
@@ -19,9 +21,9 @@ timestamp is session-local wall time, but pandas interprets naive as
 UTC, so `.timestamp()` would disagree with `getCurrentWatermarkMs()` by
 the session-timezone offset — sessions would flush early (split
 conversations, missed transition violations) or hold state for hours.
-Micros also survive the double-array state exactly (< 2^53); at flush
-they become `datetime64[us]`, so the violation text is byte-identical to
-the batch operator's.
+Micros also survive the long-array state exactly, and leave Python as
+micros: `timestamp_micros` turns them back into the timestamps the
+batch operators read.
 
 NULL handling mirrors the batch operator's SQL semantics exactly
 (verified by the shuffled-arrival parity test, which includes NULL-ts
@@ -40,7 +42,7 @@ time first (absurd future timestamps are a row-level ts_range violation
 AND would yank the global watermark forward — standard practice is to
 filter them before any watermarked operator).
 
-Arrow-batched grouped kernel; no per-row Python outside it.
+Arrow-batched grouped kernel; no per-row check in Python.
 """
 
 from __future__ import annotations
@@ -53,11 +55,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from typical_spark.operators.ordering import ordering_pair_violations
+from typical_spark.operators.ordering import PREV_ORDER, PREV_TS, pair_violations
 
 OUT_SCHEMA = (
-    "conv_id string, turn_idx int, check_id string, observed string, "
-    "expected string"
+    "conv_id string, turn_idx int, ts_us long, prev_turn int, prev_ts_us long"
 )
 # COMPATIBILITY: pend_ts/last_seen changed from double seconds to long
 # epoch-MICROS (round 3, commit 0c9da5e — the Arrow tz fix). Stateful
@@ -69,21 +70,20 @@ STATE_SCHEMA = "pend_turn array<int>, pend_ts array<long>, last_seen long"
 
 SESSION_GAP_S = 1.0  # flush when watermark passes last activity + gap
 
-OUT_COLUMNS = ["conv_id", "turn_idx", "check_id", "observed", "expected"]
+OUT_COLUMNS = ["conv_id", "turn_idx", "ts_us", "prev_turn", "prev_ts_us"]
 
 
 def _flush(conv_id, pending) -> pd.DataFrame:
-    """A closed session's violations: its buffered (turn_idx, ts_us)
-    turns, sorted in data order with NULLs first, through the batch
-    operators' pandas kernel."""
+    """A closed session's buffered (turn_idx, ts_us) turns, sorted in
+    data order with NULLs first, each with the previous turn's values
+    (NULL on the first)."""
     buf = pd.DataFrame({
-        "conv_id": conv_id,
         "turn_idx": pd.array([p[0] for p in pending], dtype="Int64"),
-        "ts": pd.array([p[1] for p in pending], dtype="Int64"),
-    }).sort_values(["turn_idx", "ts"], na_position="first", ignore_index=True)
-    buf["ts"] = buf["ts"].astype("datetime64[us]")
-    return ordering_pair_violations(
-        buf, buf.shift(1), [], "turn_idx", "ts"
+        "ts_us": pd.array([p[1] for p in pending], dtype="Int64"),
+    }).sort_values(["turn_idx", "ts_us"], na_position="first", ignore_index=True)
+    prev = buf.shift(1)
+    return buf.assign(
+        conv_id=conv_id, prev_turn=prev["turn_idx"], prev_ts_us=prev["ts_us"]
     )[OUT_COLUMNS]
 
 
@@ -132,7 +132,7 @@ def stateful_ordering_violations(
     """Streaming per-conversation ordering violations, arrival-order
     independent (see module docstring). Violations for a conversation
     emit when its session closes (watermark passes last activity)."""
-    return (
+    pairs = (
         stream.withWatermark("ts", watermark)
         .where(F.col("conv_id").isNotNull())
         .select(
@@ -149,4 +149,8 @@ def stateful_ordering_violations(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
+        .selectExpr("conv_id", "turn_idx", "timestamp_micros(ts_us) AS ts",
+                    f"prev_turn AS {PREV_ORDER}",
+                    f"timestamp_micros(prev_ts_us) AS {PREV_TS}")
     )
+    return pair_violations(pairs, ["conv_id", "turn_idx"], "turn_idx", "ts")
