@@ -4,6 +4,7 @@ reference tests/test_typed.py:56-157, tests/constraints/test_number.py:17-99).
 """
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -96,12 +97,48 @@ TEXT_CASES = [
     # curtail_length truncates => never violates max (reference text.py:48-50)
     ([TextCheck(curtail_length=3, max_length=3)], "string",
      ["abcdefg"], set()),
+    # bounds count characters, not bytes: 'é' is 2 bytes, '😀' 4
+    ([TextCheck(min_length=3)], "string",
+     ["😀😀", "😀😀😀", "ab", "abc", "éé", "a😀", "", None],
+     {(0, "text_length"), (2, "text_length"), (4, "text_length"),
+      (5, "text_length"), (6, "text_length")}),
+    ([TextCheck(min_length=2, max_length=3)], "string",
+     ["😀", "😀😀", "😀😀😀", "😀😀😀😀", "ééé", "éééé", None],
+     {(0, "text_length"), (3, "text_length"), (5, "text_length")}),
+    # the transcript spec's bound: 4000 'é' is 8000 bytes, 1001 '😀' 4004
+    ([TextCheck(max_length=4000)], "string",
+     ["é" * 4000, "é" * 4001, "a" * 4000, "a" * 4001, "😀" * 1001, None],
+     {(1, "text_length"), (3, "text_length")}),
 ]
 
 
 @pytest.mark.parametrize("checks,dtype,values,expected", TEXT_CASES)
 def test_text_kernels(spark, checks, dtype, values, expected):
     assert run_check(spark, dtype, checks, values) == expected
+
+
+def test_text_length_reads_bytes_first():
+    """The compiled length condition reads the O(1) `octet_length`
+    before the per-byte `length`, and the `max_length=4000` row of
+    TEXT_CASES flags what `oracle.py` flags on the transcript spec."""
+    import pandas as pd
+
+    from typical_spark import oracle
+    from typical_spark.specs import transcript_spec
+
+    (chk,) = [c for c in compile_table_spec(transcript_spec()).checks
+              if c.check_id == "text_length"]
+    cond = chk.violation_cond
+    assert cond.index("octet_length(") < re.search(r"(?<!octet_)length\(", cond).start(), cond
+
+    checks, _, texts, expected = TEXT_CASES[-1]
+    assert checks == [TextCheck(max_length=oracle.TEXT_MAX)]
+    pdf = pd.DataFrame({
+        "conv_id": "c00000001", "turn_idx": range(len(texts)), "role": "user",
+        "text": texts, "tool": None, "ts": pd.Timestamp("2025-01-01"),
+    })
+    ref = oracle.transcript_violations(pdf)
+    assert {(i, "text_length") for i in ref[ref.check_id == "text_length"].turn_idx} == expected
 
 
 def test_enum_kernel(spark):

@@ -4,6 +4,9 @@ pushed down, broadcast anti-join for referential, no shuffle in the fused
 row-level pass, whole-stage codegen covering the check expressions.
 These guard against regressions that correctness tests can't see."""
 
+import uuid
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -304,14 +307,15 @@ def _initial_plan(df):
     return root
 
 
-def test_full_validation_dim_check_is_broadcast_exists(
+def test_full_validation_dim_check_is_merge_exists(
     spark, transcripts_df, tmp_path
 ):
     """The referential flag is a correlated EXISTS, planned as a
-    broadcast ExistenceJoin: the dim is scanned once and never
-    deduplicated (no Aggregate on its side), so the only shuffle is the
-    windows' one Exchange, on conv_id. A dedup of the dim adds an
-    Aggregate and a second Exchange before its broadcast."""
+    sort-merge ExistenceJoin: the dim is scanned once and never
+    deduplicated (no Aggregate on its side). On an input not bucketed
+    by conv_id the only shuffles are the windows' Exchange on conv_id
+    and the dim's own; the join takes the windows' output as it is. A
+    dedup of the dim adds an Aggregate and another Exchange."""
     from typical_spark.pipeline import full_validation
     from typical_spark.sources.transcripts import generate_conversations_pdf
 
@@ -324,16 +328,104 @@ def test_full_validation_dim_check_is_broadcast_exists(
     nodes = list(_walk(_initial_plan(out)))
     names = [n.getClass().getSimpleName() for n in nodes]
 
-    joins = [n for n, name in zip(nodes, names) if name == "BroadcastHashJoinExec"]
+    joins = [n for n, name in zip(nodes, names) if name == "SortMergeJoinExec"]
     assert len(joins) == 1, names
     join_type = joins[0].joinType().toString()
     assert join_type.startswith("ExistenceJoin"), join_type
     dim_side = [m.getClass().getSimpleName() for m in _walk(joins[0].right())]
-    assert dim_side[0] == "BroadcastExchangeExec", dim_side
     assert not [m for m in dim_side if "Aggregate" in m], dim_side
-    assert names.count("ShuffleExchangeExec") == 1, names
+    assert "ShuffleExchangeExec" in dim_side, dim_side
+    assert "BroadcastExchangeExec" not in names, names
+    assert names.count("ShuffleExchangeExec") == 2, names
     assert names.count("FileSourceScanExec") == 1, names  # the dim, once
     out.count()  # executes
+
+
+def _spark_jobs(spark, action) -> int:
+    """How many Spark jobs `action()` runs."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4()}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_full_validation_on_co_bucketed_tables_is_one_spark_job(spark, tmp_path):
+    """`scaled_dataset` buckets the conversations dim like the
+    transcripts (conv_id, same bucket count): the merge join then reads
+    each dim bucket beside its fact bucket, so the fused pass has no
+    Exchange, no Sort and no broadcast, and `validation_summary` is one
+    Spark job. The rows equal those of the plain copies."""
+    from typical_spark.pipeline import full_validation, validation_summary
+    from typical_spark.sources.transcripts import scaled_dataset
+
+    n, seed, factor, buckets = 2000, 3, 1, 4
+    key = f"n{n}_s{seed}_x{factor}_b{buckets}"
+    try:
+        tdf, cdf = scaled_dataset(
+            spark, n, factor, seed=seed, cache_dir=str(tmp_path), buckets=buckets)
+        plan = compile_table_spec(transcript_spec())
+        out = full_validation(plan, tdf, cdf)
+        nodes = list(_walk(_initial_plan(out)))
+        names = [m.getClass().getSimpleName() for m in nodes]
+        for name in ("ShuffleExchangeExec", "SortExec", "BroadcastExchangeExec"):
+            assert name not in names, names
+        (join,) = [m for m, name in zip(nodes, names) if name == "SortMergeJoinExec"]
+        assert join.joinType().toString().startswith("ExistenceJoin")
+        assert _spark_jobs(spark, lambda: validation_summary(plan, tdf, cdf)) == 1
+
+        plain = full_validation(
+            plan,
+            spark.read.parquet(str(tmp_path / f"transcripts_n{n}_s{seed}_x{factor}")),
+            spark.read.parquet(str(tmp_path / f"conversations_n{n}_s{seed}_x{factor}")),
+        )
+        assert Counter(map(tuple, out.collect())) == Counter(map(tuple, plain.collect()))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS tx_{key}")
+        spark.sql(f"DROP TABLE IF EXISTS cv_{key}")
+
+
+def test_dim_bucket_count_decides_which_side_moves(spark, transcripts_df, tmp_path):
+    """The layout rule for the referential merge join (SCALE.md
+    "Bucketed storage"): against a fact bucketed by conv_id into 4, a
+    dim bucketed into 4 moves nothing; a plain dim or one with fewer
+    buckets (2) is shuffled to the fact's partitioning, and the fact
+    does not move; a dim with more buckets (8) makes Spark shuffle and
+    sort the fact instead. Every layout gives the same rows."""
+    from typical_spark.pipeline import full_validation
+    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.transcripts import generate_conversations_pdf
+
+    conv = spark.createDataFrame(
+        generate_conversations_pdf(transcripts_df.toPandas())[["conv_id"]])
+    conv.write.parquet(str(tmp_path / "conversations"))
+    layouts = {"plain": (spark.read.parquet(str(tmp_path / "conversations")), "dim")}
+    try:
+        write_bucketed(transcripts_df, "bk_fact", ["conv_id"], n_buckets=4,
+                       sort_cols=["conv_id", "turn_idx", "ts", "role"])
+        for b, moves in ((2, "dim"), (4, None), (8, "fact")):
+            write_bucketed(conv, f"bk_dim{b}", ["conv_id"], n_buckets=b, sort_cols=["conv_id"])
+            layouts[b] = (read_bucketed(spark, f"bk_dim{b}"), moves)
+        plan = compile_table_spec(transcript_spec())
+        rows = {}
+        for b, (dim, moves) in layouts.items():
+            out = full_validation(plan, read_bucketed(spark, "bk_fact"), dim)
+            (join,) = [m for m in _walk(_initial_plan(out))
+                       if m.getClass().getSimpleName() == "SortMergeJoinExec"]
+            moved = {
+                side for side, child in (("fact", join.left()), ("dim", join.right()))
+                if any(m.getClass().getSimpleName() == "ShuffleExchangeExec"
+                       for m in _walk(child))
+            }
+            assert moved == ({moves} if moves else set()), (b, moved)
+            rows[b] = Counter(map(tuple, out.collect()))
+        assert all(r == rows["plain"] for r in rows.values())
+    finally:
+        for t in ("bk_fact", "bk_dim2", "bk_dim4", "bk_dim8"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_skew_safe_ordering_windows_turns_by_group_and_chunk(spark, transcripts_df):

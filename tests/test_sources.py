@@ -85,3 +85,37 @@ def test_scaled_dataset_raises_when_a_bucket_holds_two_files(spark, tmp_path):
             scaled_dataset(spark, n, factor, seed=seed, cache_dir=root, buckets=buckets)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
+        spark.sql(f"DROP TABLE IF EXISTS cv{tname[2:]}")
+
+
+def test_scaled_dataset_buckets_the_dimension_like_the_transcripts(spark, tmp_path):
+    """The conversations dim is served bucketed by conv_id into the
+    transcripts' bucket count and sorted by conv_id, one file per
+    bucket, so the referential merge join needs no Exchange; a second
+    file in a dim bucket raises as it does for the transcripts."""
+    n, seed, factor, buckets = 300, 6, 1, 2
+    root = str(tmp_path)
+    key = f"n{n}_s{seed}_x{factor}_b{buckets}"
+
+    def layout(table):
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        info = {r["col_name"]: r["data_type"] for r in rows}
+        return info["Num Buckets"], info["Bucket Columns"], info["Sort Columns"]
+
+    try:
+        tdf, cdf = scaled_dataset(spark, n, factor, seed=seed, cache_dir=root, buckets=buckets)
+        assert layout(f"tx_{key}")[:2] == layout(f"cv_{key}")[:2] == ("2", "[`conv_id`]")
+        assert layout(f"cv_{key}")[2] == "[`conv_id`]"
+        expected = spark.read.parquet(os.path.join(root, f"conversations_n{n}_s{seed}_x{factor}"))
+        assert sorted(cdf.collect()) == sorted(expected.collect())
+
+        cdir = os.path.join(root, f"cv_{key}")
+        name = next(f for f in sorted(os.listdir(cdir)) if f.endswith(".parquet"))
+        bucket = int(re.search(r"_(\d{5})\.c\d{3}", name).group(1))
+        copy = f"part-00099-copy_{bucket:05d}.c000.snappy.parquet"
+        shutil.copy(os.path.join(cdir, name), os.path.join(cdir, copy))
+        with pytest.raises(RuntimeError, match=f"cv_{key} .* bucket {bucket} holds 2 files"):
+            scaled_dataset(spark, n, factor, seed=seed, cache_dir=root, buckets=buckets)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS tx_{key}")
+        spark.sql(f"DROP TABLE IF EXISTS cv_{key}")

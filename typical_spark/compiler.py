@@ -139,6 +139,19 @@ def _out_of_range(x: str, lo: int | None, hi: int | None) -> str:
     return "(" + " OR ".join(bad) + ")" if bad else "FALSE"
 
 
+def _text_length_out_of_range(v: str, lo: int | None, hi: int | None) -> str:
+    """`_out_of_range` for the character length of the text `v`, with
+    its O(1) byte length tested first: UTF-8 spends one to four bytes a
+    character, so chars <= bytes <= 4 * chars, and `length(v)`, which
+    reads every byte, runs only where the byte length cannot decide.
+    NULL stays NULL, as with `length` alone."""
+    b, n = f"octet_length({v})", f"length({v})"
+    bad = ([f"{b} < {literal(lo)} OR ({b} < {literal(4 * lo)} AND {n} < {literal(lo)})"]
+           if lo else []) + (
+        [f"({b} > {literal(hi)} AND {n} > {literal(hi)})"] if hi is not None else [])
+    return "(" + " OR ".join(bad) + ")" if bad else "FALSE"
+
+
 def _anchored(pattern: str) -> str:
     """Anchor a regex at the start (re.match semantics, reference
     text.py:41-42), after a leading `(?i)` flag."""
@@ -214,7 +227,7 @@ def _scalar_parts(chk: Check, v: str, value_ddl: str | None) -> list[_Parts]:
             ln = f"length({v})"
             out.append(_Parts("text_length",
                               f"{chk.min_length or 0} <= length <= {chk.max_length}",
-                              _out_of_range(ln, chk.min_length, chk.max_length),
+                              _text_length_out_of_range(v, chk.min_length, chk.max_length),
                               f"CAST({ln} AS STRING)"))
         if chk.regex is not None:
             pat = _anchored(chk.regex)

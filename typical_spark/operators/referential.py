@@ -4,17 +4,19 @@ The distributed generalization of the reference's required-key set algebra
 (typic/constraints/mapping.py:228-235 `issuperset` on key sets) — here the
 "required set" is a dimension table that may itself be huge.
 
-Scale design: LEFT ANTI join on the key. When the dimension is small
-(conversations dim ~ n_turns/20 keys, but each row is tiny) we broadcast
-it explicitly — zero shuffle of the 100 TB fact side. When it is too big
-to broadcast, we drop the hint and let AQE pick sort-merge with skew-join
-splitting (spark.sql.adaptive.skewJoin.enabled is on in session.py).
-Neither join needs distinct dim keys, so the dim is never deduplicated:
-that would cost an Aggregate and an Exchange before the broadcast.
+Scale design: LEFT ANTI join on the key, with no join hint. Spark
+broadcasts a dimension whose size it knows to be small (zero shuffle of
+the fact side) and sort-merges a large one, with AQE's skew-join
+splitting (spark.sql.adaptive.skewJoin.enabled is on in session.py): a
+conversations dim at 10^12/20 keys is too big to broadcast. A merge
+hint here would shuffle the fact, since nothing has clustered it on the
+key. Neither join needs distinct dim keys, so the dim is never
+deduplicated: that would cost an Aggregate and an Exchange.
 
 The fused `pipeline.full_validation` pass spells the same check as a
-correlated EXISTS against the dim (a broadcast ExistenceJoin) and emits
-`referential_check` on its flag.
+correlated EXISTS against the dim, planned as a sort-merge
+ExistenceJoin above its conv_id windows, and emits `referential_check`
+on its flag.
 """
 
 from __future__ import annotations
@@ -43,7 +45,6 @@ def referential_violations(
     dim: DataFrame,
     fact_keys: Sequence[str],
     dim_keys: Sequence[str] | None = None,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Rows of `fact` whose key has no match in `dim`.
 
@@ -55,8 +56,6 @@ def referential_violations(
     fact_keys = list(fact_keys)
     dim_keys = list(dim_keys or fact_keys)
     keyed_dim = dim.select(*[F.col(d).alias(f) for d, f in zip(dim_keys, fact_keys)])
-    if broadcast_dim:
-        keyed_dim = F.broadcast(keyed_dim)
     cond = F.lit(True)
     for k in fact_keys:
         cond = cond & F.col(k).isNotNull()

@@ -13,8 +13,14 @@ role) plus the scan-local row-check array. Every window sorts by
 sorted that way the whole pass needs no Exchange and no Sort; any other
 input takes one Exchange, on conv_id. Rows with a conv_id take their
 referential flag from a correlated EXISTS against the conversations
-table, planned as a broadcast ExistenceJoin: the dim is scanned once,
-never deduplicated, and nothing on the fact side moves.
+table, planned as a sort-merge ExistenceJoin above the windows, which
+have already clustered and sorted the fact by conv_id: the dim is
+scanned once and never deduplicated. With the dim bucketed by conv_id
+into the fact's bucket count (`sources.transcripts.scaled_dataset`)
+nothing moves, and `validation_summary` is one Spark job. Otherwise the
+dim is shuffled and sorted to the fact's partitioning, unless it has
+more buckets than the fact: then Spark shuffles and sorts the fact to
+the dim's instead (the layout rule in SCALE.md "Bucketed storage").
 
 NULL-conv rows go through the same windows as every other row. Their lag
 is masked to NULL, so they take no ordering check, and
@@ -31,9 +37,10 @@ Every check is built by the same function its standalone operator uses:
 `unique_key_check`, `referential.referential_check`, and the plan's
 `violation_array` for the rows; all are SQL text, and each builder keys
 its entries by the check ids they emit, so `check_ids` counts exactly
-what is built. The pass is one projection (its windows written as
-`OVER (…)` and its EXISTS together), because every DataFrame step
-costs a Catalyst analysis on the driver.
+what is built. The windows are one projection (all written as
+`OVER (…)`) and the EXISTS one more, because every DataFrame step costs
+a Catalyst analysis on the driver, and the join must sit above the
+windows to keep their order.
 """
 
 from __future__ import annotations
@@ -81,8 +88,8 @@ def full_validation(
               + keep_first_rank over (conv_id, turn_idx) = dup rank
               (exchange AND sort both elided on a bucketed scan sorted
               by (conv_id, turn_idx, ts, role))
-              + EXISTS (conversations.conv_id = conv_id) = referential
-              flag (broadcast ExistenceJoin)
+           -> EXISTS (conversations.conv_id = conv_id) = referential
+              flag (sort-merge ExistenceJoin on the windows' order)
            -> concat arrays, one explode_violations.
 
     Duplicate ranks are the plain keep-first rank over (ts, role);
@@ -96,9 +103,7 @@ def full_validation(
     kc, oc = key[0], key[-1]
     k, o = path(kc), path(oc)
 
-    # the alias names the fact side for the EXISTS's outer reference: an
-    # unqualified outer conv_id would resolve against the dim itself
-    src = plan.with_inputs(transcripts.alias("_turns")).selectExpr(
+    src = plan.with_inputs(transcripts).selectExpr(
         k, o, "ts", "role", f"{plan.violation_array()} AS _rv")
     has_ref = conversations is not None
 
@@ -109,13 +114,18 @@ def full_validation(
     # EnsureRequirements elides the Exchange AND the full-table Sort (a
     # second lag partition key would break that sort-prefix match).
     lag = f"OVER (PARTITION BY {k} ORDER BY {o}, ts, role)"
-    windows = ["*", f"IF({k} IS NULL, NULL, lag({o}) {lag}) AS _po",
-               f"IF({k} IS NULL, NULL, lag(ts) {lag}) AS _pts",
-               f"{keep_first_rank(key, ['ts', 'role'])} AS _dr"]
-    exists = ([F.broadcast(conversations).where(
-        F.col(kc) == F.col(f"_turns.{kc}").outer()).exists().alias("_ref")]
-        if has_ref else [])
-    ann = src.select(*map(F.expr, windows), *exists)
+    ann = src.selectExpr("*", f"IF({k} IS NULL, NULL, lag({o}) {lag}) AS _po",
+                         f"IF({k} IS NULL, NULL, lag(ts) {lag}) AS _pts",
+                         f"{keep_first_rank(key, ['ts', 'role'])} AS _dr")
+    if has_ref:
+        # A projection of its own, above the windows: the merge join then
+        # takes their output, already clustered and sorted by conv_id, as
+        # it is (in the windows' projection Catalyst plans the join below
+        # them, and a full Sort comes back). The alias names the fact
+        # side for the outer reference: an unqualified outer conv_id
+        # would resolve against the dim itself.
+        ann = ann.alias("_turns").select("*", conversations.hint("merge").where(
+            F.col(kc) == F.col(f"_turns.{kc}").outer()).exists().alias("_ref"))
     extras = _table_checks(key, has_ref).values()
     return explode_violations(ann, [kc, oc], violation_array(["_rv", *extras]))
 

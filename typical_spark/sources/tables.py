@@ -14,10 +14,15 @@ parquet/Iceberg scan (verify with .explain(): PushedFilters / ReadSchema).
 
 from __future__ import annotations
 
+import collections
 import os
+import re
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from typical_spark.sql_text import ident, string
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -144,6 +149,7 @@ def write_bucketed(
     n_buckets: int = 32,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
+    location: str | None = None,
 ) -> None:
     """Persist a table hash-bucketed (and optionally sorted) by its join/
     window keys — the storage-side half of shuffle elimination: two
@@ -156,7 +162,8 @@ def write_bucketed(
     operator from a shuffle into a local sort.
 
     Uses saveAsTable (bucket metadata lives in the session catalog/
-    warehouse — plain .parquet(path) cannot record bucketing). The input
+    warehouse — plain .parquet(path) cannot record bucketing), with the
+    files at `location` when given, else in the warehouse. The input
     is first hash-partitioned by the bucket columns into n_buckets
     partitions, so each bucket is written by one task as one file: a
     bucketed scan can report the declared sort order only then."""
@@ -165,6 +172,8 @@ def write_bucketed(
     )
     if sort_cols:
         w = w.sortBy(*sort_cols)
+    if location:
+        w = w.option("path", location)
     w.format("parquet").saveAsTable(table)
 
 
@@ -172,4 +181,49 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     """Read a write_bucketed table WITH its bucket metadata (only the
     catalog path preserves it; reading the files directly would lose the
     co-location guarantee and reintroduce the shuffle)."""
+    return spark.table(table)
+
+
+def bucketed_table(
+    spark: SparkSession,
+    table: str,
+    location: str,
+    source: Callable[[], DataFrame],
+    bucket_cols: list[str],
+    n_buckets: int,
+    sort_cols: list[str],
+) -> DataFrame:
+    """The table `table`, bucketed and sorted as `write_bucketed` writes
+    it, kept at `location` across sessions: `source()`'s rows are
+    written there once (while `location` has no `_SUCCESS`), and a
+    session whose catalog lacks `table` registers the files with one
+    `CREATE TABLE … CLUSTERED BY … SORTED BY … LOCATION`, typed from the
+    files themselves, so a broken copy fails here. Raises if a bucket
+    holds more than one file: such a bucket scans unsorted, and every
+    plan that relies on the declared order gains a Sort."""
+    if not os.path.exists(os.path.join(location, "_SUCCESS")):
+        write_bucketed(source(), table, bucket_cols, n_buckets, sort_cols, location=location)
+    if not spark.catalog.tableExists(table):
+        cols = ", ".join(
+            f"{ident(f.name)} {f.dataType.simpleString()}"
+            for f in spark.read.parquet(location).schema.fields
+        )
+        spark.sql(
+            f"CREATE TABLE {ident(table)} ({cols}) USING parquet "
+            f"CLUSTERED BY ({', '.join(map(ident, bucket_cols))}) "
+            f"SORTED BY ({', '.join(map(ident, sort_cols))}) "
+            f"INTO {n_buckets} BUCKETS LOCATION {string(location)}"
+        )
+    # bucket files are named part-<task>-<uuid>_<bucket id>.c000...
+    per_bucket = collections.Counter(
+        m.group(1)
+        for f in os.listdir(location)
+        if not f.startswith((".", "_")) and (m := re.search(r"_(\d{5})\.c\d{3}", f))
+    )
+    split = sorted(b for b, n in per_bucket.items() if n > 1)
+    if split:
+        raise RuntimeError(
+            f"bucketed table {table} at {location}: bucket {int(split[0])} "
+            f"holds {per_bucket[split[0]]} files, expected one"
+        )
     return spark.table(table)

@@ -20,9 +20,7 @@ salted-window dedup and AQE skew paths at bench scale).
 
 from __future__ import annotations
 
-import collections
 import os
-import re
 
 import numpy as np
 import pandas as pd
@@ -227,17 +225,21 @@ def scaled_dataset(
     instead of a 16-subtree union (driver planning time must not pollute
     a scaling measurement).
 
-    The transcript side is served as a CLUSTERED BY (conv_id) bucketed
-    table (guide §2.4 "bucketed tables persist a partitioning across
-    jobs"): every conv-keyed operator downstream (the fused validation
-    windows) then starts from hash(conv_id)-clustered scans and skips
-    its exchange outright — the parquet stand-in for the Iceberg
-    bucket(conv_id) layout SURVEY §1.3 names. The catalog entry is
-    session-scoped (in-memory catalog), so each session re-registers the
-    existing files with one DDL. A failure in the bucketed path raises:
-    the plain copy has the same rows, but not the layout that keeps
-    Exchange and Sort out of the flagship plan."""
-    import os
+    Both sides are served as tables CLUSTERED BY (conv_id) INTO `buckets`
+    BUCKETS (guide §2.4 "bucketed tables persist a partitioning across
+    jobs"; `tables.bucketed_table`): the transcripts sorted by (conv_id,
+    turn_idx, ts, role), the conversations dimension by conv_id. The
+    fused validation windows then start from hash(conv_id)-clustered,
+    sorted scans and skip their Exchange and Sort, and the referential
+    merge join reads the dimension's matching bucket beside each fact
+    bucket — the parquet stand-in for the Iceberg bucket(N, conv_id)
+    layout SURVEY §1.3 names. The dimension must take the fact's bucket
+    count (SCALE.md "Bucketed storage"). Catalog entries are
+    session-scoped (in-memory catalog), so each session re-registers
+    the existing files with one DDL each. The plain hive-partitioned
+    copy and the plain dimension stay on disk for the jobs that read
+    paths; a failure in the bucketed path raises."""
+    from typical_spark.sources.tables import bucketed_table
 
     tdir = os.path.join(cache_dir, f"transcripts_n{base_turns}_s{seed}_x{factor}")
     cdir = os.path.join(cache_dir, f"conversations_n{base_turns}_s{seed}_x{factor}")
@@ -249,46 +251,15 @@ def scaled_dataset(
         replicate_transcripts(cdf, factor).coalesce(8).write.mode(
             "overwrite"
         ).parquet(cdir)
-    cdf = spark.read.parquet(cdir)
-    tname = f"tx_n{base_turns}_s{seed}_x{factor}_b{buckets}"
-    bdir = os.path.join(cache_dir, tname)
-    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
-        src = spark.read.parquet(tdir)
-        (
-            src.repartition(buckets, "conv_id")
-            .write.mode("overwrite")
-            .bucketBy(buckets, "conv_id")
-            .sortBy("conv_id", "turn_idx", "ts", "role")
-            .option("path", bdir)
-            .format("parquet")
-            .saveAsTable(tname)
-        )
-    if not spark.catalog.tableExists(tname):
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}"
-            for f in spark.read.parquet(bdir).schema.fields
-        )
-        spark.sql(
-            f"CREATE TABLE `{tname}` ({ddl}) USING parquet "
-            f"CLUSTERED BY (conv_id) "
-            f"SORTED BY (conv_id, turn_idx, ts, role) "
-            f"INTO {buckets} BUCKETS LOCATION '{bdir}'"
-        )
-    # a bucket split over several files scans unsorted: the Exchange-free
-    # flagship plan needs exactly one file per bucket id (_NNNNN suffix)
-    per_bucket = collections.Counter(
-        m.group(1)
-        for f in os.listdir(bdir)
-        if not f.startswith((".", "_"))
-        and (m := re.search(r"_(\d{5})\.c\d{3}", f))
-    )
-    split = sorted(b for b, n in per_bucket.items() if n > 1)
-    if split:
-        raise RuntimeError(
-            f"bucketed table {tname} at {bdir}: bucket {int(split[0])} "
-            f"holds {per_bucket[split[0]]} files, expected one"
-        )
-    return spark.table(tname), cdf
+    key = f"n{base_turns}_s{seed}_x{factor}_b{buckets}"
+    transcripts = bucketed_table(
+        spark, f"tx_{key}", os.path.join(cache_dir, f"tx_{key}"),
+        lambda: spark.read.parquet(tdir), ["conv_id"], buckets,
+        ["conv_id", "turn_idx", "ts", "role"])
+    conversations = bucketed_table(
+        spark, f"cv_{key}", os.path.join(cache_dir, f"cv_{key}"),
+        lambda: spark.read.parquet(cdir), ["conv_id"], buckets, ["conv_id"])
+    return transcripts, conversations
 
 
 def transcripts_dataset(
