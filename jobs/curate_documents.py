@@ -40,7 +40,6 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 
@@ -98,18 +97,6 @@ def main(argv=None) -> int:
         ap.error("--min-logprob and --lm-keep-buckets are alternative "
                  "LM gates; pass one")
 
-    # getOrCreate() would apply runtime confs to an ALREADY-RUNNING
-    # session (permanently flipping ANSI off for a host embedding this
-    # job next to other workloads); only configure a session we create
-    spark = SparkSession.getActiveSession() or (
-        SparkSession.builder.appName("typical-spark-curate")
-        .config("spark.sql.session.timeZone", "UTC")
-        # pinned tz: NTZ<->epoch conversions (watermarks, durations)
-        # must agree across driver, executors, and oracles
-        .config("spark.sql.ansi.enabled", "false")  # throughput knob
-        .getOrCreate()                              # engine is ANSI-safe
-    )
-
     from typical_spark.functions.text_analysis import bigram_logprob_score
     from typical_spark.operators.dedup import (
         minhash_near_duplicates,
@@ -117,8 +104,10 @@ def main(argv=None) -> int:
     )
     from typical_spark.operators.packing import pack_sequences
     from typical_spark.operators.sampling import hash_split, stratified_sample
+    from typical_spark.session import job_session
     from typical_spark.sources.tables import read_target, sub_target, write_output
 
+    spark = job_session("typical-spark-curate")
     docs = read_target(spark, args.input)
     counts = {"input": docs.count()}
 

@@ -16,8 +16,11 @@ from __future__ import annotations
 
 import argparse
 import sys
+from dataclasses import replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+
+NARROW_INTS = {"tinyint", "byte", "smallint", "short", "int", "integer"}
 
 
 def main(argv=None) -> int:
@@ -33,28 +36,28 @@ def main(argv=None) -> int:
                          "the built-in transcript spec")
     args = ap.parse_args(argv)
 
-    # only configure a session we create — getOrCreate() would apply
-    # runtime confs to an already-running shared session
-    spark = SparkSession.getActiveSession() or (
-        SparkSession.builder.appName("typical-spark-stream")
-        .config("spark.sql.session.timeZone", "UTC")
-        # pinned tz: NTZ<->epoch conversions (watermarks, durations)
-        # must agree across driver, executors, and oracles
-        .config("spark.sql.ansi.enabled", "false")  # throughput knob only;
-        .getOrCreate()            # engine is ANSI-safe (test_ansi_modes)
-    )
-
     from typical_spark.compiler import compile_table_spec
     from typical_spark.schema import spec_to_structtype
+    from typical_spark.session import job_session
     from typical_spark.spec_io import spec_from_json_file
     from typical_spark.specs import transcript_spec
     from typical_spark.streaming import streaming_validation, windowed_check_stats
     from typical_spark.streaming.stateful import stateful_ordering_violations
 
+    spark = job_session("typical-spark-stream")
     spec = spec_from_json_file(args.spec) if args.spec else transcript_spec()
+    # A stream, unlike a batch read, fails on a file that stores an
+    # integer field wider than the read type: read integers as bigint and
+    # coerce (try_cast) them, so a value out of range is a `coerce` row.
+    narrow = {fs.name for fs in spec.fields if fs.coerce_from is None
+              and "." not in fs.name and fs.dtype.strip().lower() in NARROW_INTS}
+    spec = replace(spec, fields=tuple(
+        replace(fs, coerce_from="bigint") if fs.name in narrow else fs for fs in spec.fields))
     plan = compile_table_spec(spec)
     ckpt = args.checkpoint or f"{args.out.rstrip('/')}/_checkpoints"
-    stream = spark.readStream.schema(spec_to_structtype(spec)).parquet(args.input)
+    stream = spark.readStream.schema(T.StructType([
+        T.StructField(f.name, T.LongType()) if f.name in narrow else f
+        for f in spec_to_structtype(spec).fields])).parquet(args.input)
 
     def sink(df, name):
         w = (
@@ -77,7 +80,7 @@ def main(argv=None) -> int:
                  "window_stats"))
     if {"conv_id", "turn_idx", "ts"} <= names:
         queries.append(
-            sink(stateful_ordering_violations(stream, watermark=args.watermark),
+            sink(stateful_ordering_violations(plan.coerce(stream), watermark=args.watermark),
                  "ordering_violations"))
     for q in queries:
         q.awaitTermination() if not args.once else q.processAllAvailable()

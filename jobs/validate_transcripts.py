@@ -26,8 +26,6 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
-
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
@@ -52,25 +50,16 @@ def main(argv=None) -> int:
         ap.error("--checkpointed/--incremental need a directory --out, "
                  f"not {args.out}")
 
-    # only configure a session we create — getOrCreate() would apply
-    # runtime confs to an already-running shared session
-    spark = SparkSession.getActiveSession() or (
-        SparkSession.builder.appName("typical-spark-validate")
-        .config("spark.sql.session.timeZone", "UTC")
-        # pinned tz: NTZ<->epoch conversions (watermarks, durations)
-        # must agree across driver, executors, and oracles
-        .config("spark.sql.ansi.enabled", "false")  # throughput knob only;
-        .getOrCreate()            # engine is ANSI-safe (test_ansi_modes)
-    )
-
     from typical_spark.checkpoint import CheckpointedRun
     from typical_spark.compiler import compile_table_spec
     from typical_spark.pipeline import check_ids, full_validation
     from typical_spark.plans.validation import count_by_check
+    from typical_spark.session import job_session
     from typical_spark.sources.tables import read_target, sub_target, write_output
     from typical_spark.spec_io import spec_from_json_file
     from typical_spark.specs import transcript_spec
 
+    spark = job_session("typical-spark-validate")
     spec = spec_from_json_file(args.spec) if args.spec else transcript_spec()
     plan = compile_table_spec(spec, mode=args.mode)
     tdf = read_target(spark, args.input)

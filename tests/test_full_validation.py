@@ -210,7 +210,7 @@ def test_bucketed_table_gives_the_same_rows(spark, frames, fused):
     """The same edge rows written bucketed by conv_id (every NULL-conv
     turn in one bucket, the windows' Exchange and Sort elided) give the
     same full_validation rows as the plain frame."""
-    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.tables import write_bucketed
 
     _, _, tdf, cdf = frames
     plan, rows = fused
@@ -219,7 +219,7 @@ def test_bucketed_table_gives_the_same_rows(spark, frames, fused):
             tdf.repartition(4, "conv_id"), "bk_edge", ["conv_id"], n_buckets=4,
             sort_cols=["conv_id", "turn_idx", "ts", "role"],
         )
-        bucketed = read_bucketed(spark, "bk_edge")
+        bucketed = spark.table("bk_edge")
         got = full_validation(plan, bucketed, cdf).select(*COLS).collect()
         assert Counter(tuple(r) for r in got) == Counter(tuple(r) for r in rows)
     finally:

@@ -10,7 +10,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from typical_spark import compile_table_spec
+from typical_spark import compile_table_spec, report
 from typical_spark.operators.referential import referential_violations
 from typical_spark.specs import (
     EnumCheck,
@@ -20,12 +20,6 @@ from typical_spark.specs import (
     TableSpec,
     transcript_spec,
 )
-
-
-def _plan_str(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 @pytest.fixture(scope="module")
@@ -43,7 +37,7 @@ def test_column_pruning_reaches_scan(spark, events):
         ),
     )
     plan = compile_table_spec(spec)
-    p = _plan_str(plan.violations(events, with_message=False))
+    p = report.explain(plan.violations(events, with_message=False))
     # ReadSchema names exactly the referenced columns
     read_schema = [l for l in p.splitlines() if "ReadSchema" in l][0]
     assert "event_type" in read_schema and "value" in read_schema
@@ -59,7 +53,7 @@ def test_filter_pushdown(spark, events):
                           checks=(NotNullCheck(),)),),
     )
     plan = compile_table_spec(spec)
-    p = _plan_str(events.where(plan.valid_predicate()).select("event_id", "value"))
+    p = report.explain(events.where(plan.valid_predicate()).select("event_id", "value"))
     pushed = [l for l in p.splitlines() if "PushedFilters" in l][0]
     assert "IsNotNull(value)" in pushed
 
@@ -72,7 +66,7 @@ def test_fused_pass_has_no_shuffle(spark, events):
                               checks=(EnumCheck(values=("click", "view")),)),),
         )
     )
-    p = _plan_str(plan.violations(events, with_message=False))
+    p = report.explain(plan.violations(events, with_message=False))
     assert "Exchange" not in p  # scan -> project -> filter -> explode only
     assert "codegen id" in p  # the pass has whole-stage codegen spans
 
@@ -89,7 +83,7 @@ def test_violation_arrays_are_evaluated_once(spark, transcripts_df):
         plan.violations(transcripts_df, with_message=False),
         ordering_violations(transcripts_df, ["conv_id"], "turn_idx", ts_col="ts"),
     ):
-        optimized = out._jdf.queryExecution().optimizedPlan().toString()
+        optimized = report.plan(out, "logical").toString()
         assert "size(" not in optimized, optimized
 
 
@@ -110,14 +104,14 @@ def test_fused_check_arrays_have_no_higher_order_function(spark, transcripts_df)
         plan.violations(transcripts_df, with_message=False),
         full_validation(plan, transcripts_df, conv),
     ):
-        physical = out._jdf.queryExecution().executedPlan().toString()
+        physical = report.plan(out).toString()
         assert "lambdafunction" not in physical, physical
 
 
 def test_referential_uses_broadcast_anti_join(spark, events):
     dim = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     out = referential_violations(events, dim, ["user_id"], ["c_custkey"])
-    p = _plan_str(out)
+    p = report.explain(out)
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
     # the fact side must NOT be exchanged (only the broadcast side moves)
     first_exchange = p.find("Exchange")
@@ -126,7 +120,7 @@ def test_referential_uses_broadcast_anti_join(spark, events):
 
 def test_transcript_violations_plan_shape(spark, transcripts_df):
     plan = compile_table_spec(transcript_spec())
-    p = _plan_str(plan.violations(transcripts_df, with_message=False))
+    p = report.explain(plan.violations(transcripts_df, with_message=False))
     # one fused projection: no joins, no aggregates, no shuffles
     for op in ("Exchange", "SortMergeJoin", "HashAggregate"):
         assert op not in p, f"unexpected {op} in fused pass:\n{p[:2000]}"
@@ -141,14 +135,14 @@ def test_lsh_banding_shuffle_is_narrow(spark):
     from typical_spark.operators.similarity import embedding_near_duplicates
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = _plan_str(minhash_near_duplicates(docs, "doc_id", "text"))
+    p = report.explain(minhash_near_duplicates(docs, "doc_id", "text"))
     # exchanges that partition by the banding key must be signature-only
     for line in p.splitlines():
         if "Exchange hashpartitioning" in line and "bhash" in line:
             assert "_sh" not in line, f"wide shingle payload in banding shuffle: {line}"
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    pe = _plan_str(
+    pe = report.explain(
         embedding_near_duplicates(emb, n_planes=4, n_tables=2)
     )
     for line in pe.splitlines():
@@ -162,7 +156,7 @@ def test_minhash_signature_agg_is_codegen(spark):
     from typical_spark.operators.dedup import minhash_near_duplicates
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = _plan_str(minhash_near_duplicates(docs, "doc_id", "text"))
+    p = report.explain(minhash_near_duplicates(docs, "doc_id", "text"))
     # partial + final HashAggregate around the signature exchange (the
     # AQE-wrapped formatted plan carries no `codegen id` markers, so we
     # pin the map-side combine via the aggregate pair instead)
@@ -179,7 +173,7 @@ def test_exact_collapse_uses_partial_min_agg(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     reps = _exact_group_reps(docs, "doc_id", F.sha2(F.col("text"), 256))
-    p = _plan_str(reps)
+    p = report.explain(reps)
     assert "Window" not in p, "collapse regressed to a per-key window sort"
     assert p.count("HashAggregate") >= 2, "no partial+final min agg pair"
     assert "min(_id" in p, f"expected min(_id) aggregate in plan:\n{p}"
@@ -189,7 +183,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Two tables bucketed by the join key must SortMergeJoin without any
     Exchange — the co-located-join storage contract (Iceberg bucket(N)
     analog) that makes per-conv operators shuffle-free at scale."""
-    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.tables import write_bucketed
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -197,8 +191,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         b = spark.range(0, 10000).selectExpr("id AS k", "id * 3 AS vb")
         write_bucketed(a, "bk_a", ["k"], n_buckets=8, sort_cols=["k"])
         write_bucketed(b, "bk_b", ["k"], n_buckets=8, sort_cols=["k"])
-        j = read_bucketed(spark, "bk_a").join(read_bucketed(spark, "bk_b"), "k")
-        p = _plan_str(j)
+        j = spark.table("bk_a").join(spark.table("bk_b"), "k")
+        p = report.explain(j)
         assert "SortMergeJoin" in p
         assert "Exchange" not in p, "bucketed join must not shuffle"
         assert j.count() == 10000
@@ -214,42 +208,23 @@ def test_bucketed_window_has_no_exchange(spark, transcripts_df):
     difference between a local sort and re-shuffling the corpus for
     every per-conv check."""
     from typical_spark.operators.ordering import ordering_violations
-    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.tables import write_bucketed
 
     try:
         write_bucketed(
             transcripts_df, "bk_transcripts", ["conv_id"],
             n_buckets=8, sort_cols=["conv_id", "turn_idx"],
         )
-        t = read_bucketed(spark, "bk_transcripts")
+        t = spark.table("bk_transcripts")
         out = ordering_violations(
             t.where("conv_id is not null"), ["conv_id"], "turn_idx", ts_col="ts"
         )
-        p = _plan_str(out)
+        p = report.explain(out)
         assert "Exchange" not in p, "bucketed window must not shuffle"
         assert "Bucketed: true" in p
         out.count()  # executes
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_transcripts")
-
-
-def _children(node):
-    kids = node.children()
-    return [kids.apply(i) for i in range(kids.size())]
-
-
-def _bucketed_scan_paths(node, path=()):
-    """Node-class paths from `node` down to each bucketed file scan."""
-    path = (*path, node)
-    if node.getClass().getSimpleName() == "FileSourceScanExec":
-        return [path] if node.bucketedScan() else []
-    return [p for c in _children(node) for p in _bucketed_scan_paths(c, path)]
-
-
-def _walk(node):
-    yield node
-    for c in _children(node):
-        yield from _walk(c)
 
 
 def test_full_validation_bucketed_window_has_no_exchange_or_sort(
@@ -260,7 +235,7 @@ def test_full_validation_bucketed_window_has_no_exchange_or_sort(
     directly: no Exchange and no Sort between them. Losing either costs a
     full-table shuffle or sort at scale."""
     from typical_spark.pipeline import full_validation
-    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.tables import write_bucketed
     from typical_spark.sources.transcripts import generate_conversations_pdf
 
     try:
@@ -270,41 +245,28 @@ def test_full_validation_bucketed_window_has_no_exchange_or_sort(
             transcripts_df.repartition(8, "conv_id"), "bk_flagship", ["conv_id"],
             n_buckets=8, sort_cols=["conv_id", "turn_idx", "ts", "role"],
         )
-        t = read_bucketed(spark, "bk_flagship")
+        t = spark.table("bk_flagship")
         conv = spark.createDataFrame(
             generate_conversations_pdf(transcripts_df.toPandas())[["conv_id"]]
         )
         plan = compile_table_spec(transcript_spec())
         out = full_validation(plan, t, conv)
-        root = out._jdf.queryExecution().executedPlan()
-        if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            root = root.executedPlan()
         windows = [
-            n for n in _walk(root)
-            if n.getClass().getSimpleName() == "WindowExec"
+            n for n in report.walk(report.plan(out))
+            if n.nodeName() == "Window"
             and n.partitionSpec().size() == 1
             and n.partitionSpec().apply(0).toString().split("#")[0] == "conv_id"
         ]
         assert windows, "no Window partitioned by conv_id in the plan"
         for w in windows:
-            paths = _bucketed_scan_paths(w)
-            assert paths, "conv_id window does not read the bucketed scan"
-            for p in paths:
-                names = [n.getClass().getSimpleName() for n in p]
-                assert "ShuffleExchangeExec" not in names, names
-                assert "SortExec" not in names, names
+            below = report.walk(w)
+            assert [n for n in below if n.nodeName().startswith("Scan parquet")
+                    and n.bucketedScan()], "conv_id window does not read the bucketed scan"
+            names = [n.nodeName() for n in below]
+            assert "Exchange" not in names and "Sort" not in names, names
         out.count()  # executes
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_flagship")
-
-
-def _initial_plan(df):
-    """The physical plan before AQE re-plans it: the executed (final)
-    plans flap from run to run, the initial one does not."""
-    root = df._jdf.queryExecution().executedPlan()
-    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        root = root.initialPlan()
-    return root
 
 
 def test_full_validation_dim_check_is_merge_exists(
@@ -325,19 +287,19 @@ def test_full_validation_dim_check_is_merge_exists(
     ).write.parquet(dim_path)
     plan = compile_table_spec(transcript_spec())
     out = full_validation(plan, transcripts_df, spark.read.parquet(dim_path))
-    nodes = list(_walk(_initial_plan(out)))
-    names = [n.getClass().getSimpleName() for n in nodes]
+    nodes = report.walk(report.plan(out))
+    names = [n.nodeName() for n in nodes]
 
-    joins = [n for n, name in zip(nodes, names) if name == "SortMergeJoinExec"]
+    joins = [n for n, name in zip(nodes, names) if name == "SortMergeJoin"]
     assert len(joins) == 1, names
     join_type = joins[0].joinType().toString()
     assert join_type.startswith("ExistenceJoin"), join_type
-    dim_side = [m.getClass().getSimpleName() for m in _walk(joins[0].right())]
+    dim_side = report.names(joins[0].right())
     assert not [m for m in dim_side if "Aggregate" in m], dim_side
-    assert "ShuffleExchangeExec" in dim_side, dim_side
-    assert "BroadcastExchangeExec" not in names, names
-    assert names.count("ShuffleExchangeExec") == 2, names
-    assert names.count("FileSourceScanExec") == 1, names  # the dim, once
+    assert "Exchange" in dim_side, dim_side
+    assert "BroadcastExchange" not in names, names
+    assert names.count("Exchange") == 2, names
+    assert len([m for m in names if m.startswith("Scan parquet")]) == 1, names  # the dim, once
     out.count()  # executes
 
 
@@ -369,11 +331,11 @@ def test_full_validation_on_co_bucketed_tables_is_one_spark_job(spark, tmp_path)
             spark, n, factor, seed=seed, cache_dir=str(tmp_path), buckets=buckets)
         plan = compile_table_spec(transcript_spec())
         out = full_validation(plan, tdf, cdf)
-        nodes = list(_walk(_initial_plan(out)))
-        names = [m.getClass().getSimpleName() for m in nodes]
-        for name in ("ShuffleExchangeExec", "SortExec", "BroadcastExchangeExec"):
+        nodes = report.walk(report.plan(out))
+        names = [m.nodeName() for m in nodes]
+        for name in ("Exchange", "Sort", "BroadcastExchange"):
             assert name not in names, names
-        (join,) = [m for m, name in zip(nodes, names) if name == "SortMergeJoinExec"]
+        (join,) = [m for m, name in zip(nodes, names) if name == "SortMergeJoin"]
         assert join.joinType().toString().startswith("ExistenceJoin")
         assert _spark_jobs(spark, lambda: validation_summary(plan, tdf, cdf)) == 1
 
@@ -396,7 +358,7 @@ def test_dim_bucket_count_decides_which_side_moves(spark, transcripts_df, tmp_pa
     does not move; a dim with more buckets (8) makes Spark shuffle and
     sort the fact instead. Every layout gives the same rows."""
     from typical_spark.pipeline import full_validation
-    from typical_spark.sources.tables import read_bucketed, write_bucketed
+    from typical_spark.sources.tables import write_bucketed
     from typical_spark.sources.transcripts import generate_conversations_pdf
 
     conv = spark.createDataFrame(
@@ -408,17 +370,16 @@ def test_dim_bucket_count_decides_which_side_moves(spark, transcripts_df, tmp_pa
                        sort_cols=["conv_id", "turn_idx", "ts", "role"])
         for b, moves in ((2, "dim"), (4, None), (8, "fact")):
             write_bucketed(conv, f"bk_dim{b}", ["conv_id"], n_buckets=b, sort_cols=["conv_id"])
-            layouts[b] = (read_bucketed(spark, f"bk_dim{b}"), moves)
+            layouts[b] = (spark.table(f"bk_dim{b}"), moves)
         plan = compile_table_spec(transcript_spec())
         rows = {}
         for b, (dim, moves) in layouts.items():
-            out = full_validation(plan, read_bucketed(spark, "bk_fact"), dim)
-            (join,) = [m for m in _walk(_initial_plan(out))
-                       if m.getClass().getSimpleName() == "SortMergeJoinExec"]
+            out = full_validation(plan, spark.table("bk_fact"), dim)
+            (join,) = [m for m in report.walk(report.plan(out))
+                       if m.nodeName() == "SortMergeJoin"]
             moved = {
                 side for side, child in (("fact", join.left()), ("dim", join.right()))
-                if any(m.getClass().getSimpleName() == "ShuffleExchangeExec"
-                       for m in _walk(child))
+                if "Exchange" in report.names(child)
             }
             assert moved == ({moves} if moves else set()), (b, moved)
             rows[b] = Counter(map(tuple, out.collect()))
@@ -432,26 +393,24 @@ def test_skew_safe_ordering_windows_turns_by_group_and_chunk(spark, transcripts_
     """ordering_violations_skew_safe runs in Catalyst: no Python-eval
     node, and the Window over the turn rows is partitioned by (conv_id,
     chunk), so no task holds more than a chunk of one conversation. The
-    other Window, on conv_id alone, lags one aggregated row per chunk."""
+    chunk window also reads each chunk's last (order, ts), so there is
+    no min/max-struct SortAggregate; the one Window on conv_id alone lags
+    the chunks' head rows. The chunk window runs under each branch of the
+    union (Spark reuses no exchange across them), hence 3 Windows and 3
+    Sorts."""
     from typical_spark.operators.ordering import ordering_violations_skew_safe
 
     out = ordering_violations_skew_safe(transcripts_df, ["conv_id"], "turn_idx", ts_col="ts")
-    nodes = list(_walk(_initial_plan(out)))
-    names = [n.getClass().getSimpleName() for n in nodes]
-    assert not [n for n in names if "Python" in n or "Pandas" in n], names
+    nodes = report.walk(report.plan(out))
+    counts = report.counts(nodes[0])
+    assert [counts[k] for k in ("Python", "SortAggregate", "Window", "Sort")] == [0, 0, 3, 3], counts
 
     def spec(w):
         return [w.partitionSpec().apply(i).toString().split("#")[0]
                 for i in range(w.partitionSpec().size())]
 
-    windows = [n for n in nodes if n.getClass().getSimpleName() == "WindowExec"]
-    over_aggregate = [
-        w for w in windows
-        if any("Aggregate" in m.getClass().getSimpleName() for m in _walk(w))
-    ]
-    over_turns = [w for w in windows if w not in over_aggregate]
-    assert [spec(w) for w in over_turns] == [["conv_id", "_chunk"]], names
-    assert [spec(w) for w in over_aggregate] == [["conv_id"]], names
+    windows = sorted(spec(n) for n in nodes if n.nodeName() == "Window")
+    assert windows == [["conv_id"], ["conv_id", "_chunk"], ["conv_id", "_chunk"]], windows
 
 
 def test_parsed_url_computed_once_per_row(spark):
@@ -471,7 +430,7 @@ def test_parsed_url_computed_once_per_row(spark):
         *[F.col("_p")[f].alias(f)
           for f in ("scheme", "auth", "host", "port", "path", "qs", "fragment")]
     )
-    p = _plan_str(out)
+    p = report.explain(out)
     assert "Generate" in p, "barrier lost: projection collapsed"
     # the scheme group '://' appears once in the rlike + once in the
     # regexp_replace rewrite; per-component duplication would show 7+
@@ -498,7 +457,7 @@ def test_interval_join_is_hash_join_not_nlj(spark):
         pts, ivs, by=["k"], point_ts="ts", start_ts="start",
         end_ts="end", bucket_seconds=100,
     )
-    p = _plan_str(out)
+    p = report.explain(out)
     assert "NestedLoop" not in p and "CartesianProduct" not in p
     assert ("HashJoin" in p) or ("SortMergeJoin" in p)
     assert out.count() > 0
@@ -513,7 +472,7 @@ def test_span_dedup_single_corpus_pass(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     out = span_duplicates(docs, "doc_id", "text")
-    p = _plan_str(out)
+    p = report.explain(out)
     assert p.count("InMemoryTableScan") >= 2
     release_cache(out)
 
@@ -539,7 +498,7 @@ def test_ivf_query_batch_is_equi_join(spark):
         "query_vec": [v.tolist() for v in base[:50]],
     }))
     out = idx.query_batch(qdf, k=3, nprobe=2)
-    p = _plan_str(out)
+    p = report.explain(out)
     assert "NestedLoop" not in p and "CartesianProduct" not in p
     assert ("HashJoin" in p) or ("SortMergeJoin" in p)
 
@@ -551,7 +510,7 @@ def test_quality_expr_scorer_has_no_shuffle(spark):
     from typical_spark.operators.quality_model import score_documents_expr
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = _plan_str(score_documents_expr(docs, "doc_id", "text", dim=8192))
+    p = report.explain(score_documents_expr(docs, "doc_id", "text", dim=8192))
     assert "Exchange" not in p
     assert "codegen id" in p
 
@@ -574,7 +533,7 @@ def test_semantic_duplicates_cell_kernel_plan(spark):
     }))
     out = semantic_duplicates(df, "vec_id", "embedding", n_cells=2,
                               sample_size=100)
-    p = _plan_str(out)
+    p = report.explain(out)
     assert "FlatMapGroupsInPandas" in p
     assert "hashpartitioning(cell_id" in p
     assert "NestedLoop" not in p and "CartesianProduct" not in p
@@ -588,7 +547,7 @@ def test_ks_by_group_single_source_shuffle(spark):
     from typical_spark.operators.drift import ks_by_group
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    p = _plan_str(ks_by_group(ev, "value", "event_type"))
+    p = report.explain(ks_by_group(ev, "value", "event_type"))
     # downstream reads come from the persisted cell table (formatted
     # explain reprints the scan inside each InMemoryRelation block, so
     # a textual scan count can't pin this — the cache reuse can)
@@ -603,7 +562,7 @@ def test_psi_by_group_shuffles_only_cells(spark):
     from typical_spark.operators.drift import psi_by_group
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    p = _plan_str(psi_by_group(ev, "value", "event_type"))
+    p = report.explain(psi_by_group(ev, "value", "event_type"))
     assert "SortMergeJoin" not in p and "ShuffledHashJoin" not in p
     assert p.count("InMemoryTableScan") >= 3  # cells reused, not rebuilt
 
@@ -616,7 +575,7 @@ def test_global_shuffle_never_global_sorts(spark):
     from typical_spark.operators.sampling import global_shuffle
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    p = _plan_str(global_shuffle(docs, "doc_id", n_shards=64))
+    p = report.explain(global_shuffle(docs, "doc_id", n_shards=64))
     assert "hashpartitioning(shard" in p
     assert "rangepartitioning" not in p
     assert "SinglePartition" not in p
@@ -631,15 +590,13 @@ def test_partition_digests_shuffles_sketches_not_values(spark):
     df = spark.range(2000).select(
         (F.col("id") % 4).alias("g"), (F.col("id") * 0.5).alias("v")
     )
-    root = partition_digests(df, "v", "g")._jdf.queryExecution().executedPlan()
-    if root.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        root = root.executedPlan()
-    names = [n.getClass().getSimpleName() for n in _walk(root)]
-    assert not [n for n in names if "Python" in n or "Pandas" in n], names
-    exchanges = [n for n in _walk(root) if "Exchange" in n.getClass().getSimpleName()]
+    nodes = report.walk(report.plan(partition_digests(df, "v", "g")))
+    names = [n.nodeName() for n in nodes]
+    assert report.counts(nodes[0])["Python"] == 0, names
+    exchanges = [n for n, name in zip(nodes, names) if "Exchange" in name]
     assert len(exchanges) == 1, names
     partial = exchanges[0].child()
-    assert partial.getClass().getSimpleName().endswith("AggregateExec"), names
+    assert partial.nodeName().endswith("Aggregate"), names
     modes = {
         partial.aggregateExpressions().apply(i).mode().toString()
         for i in range(partial.aggregateExpressions().size())
@@ -655,5 +612,5 @@ def test_partition_digests_evaluate_the_value_once(spark):
     df = spark.range(2000).select(
         (F.col("id") % 4).alias("g"), (F.col("id") * 0.5).alias("v")
     )
-    optimized = partition_digests(df, "v", "g")._jdf.queryExecution().optimizedPlan()
-    assert optimized.toString().count("nanvl(") == 1, optimized.toString()
+    optimized = report.plan(partition_digests(df, "v", "g"), "logical").toString()
+    assert optimized.count("nanvl(") == 1, optimized

@@ -9,6 +9,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from typical_spark import report
 from typical_spark.operators.drift import psi_drift
 from typical_spark.operators.interval import interval_join
 from typical_spark.operators.packing import pack_sequences
@@ -692,8 +693,7 @@ def test_tokenizer_seam_chunking_and_plan(spark):
 
     bpe = chunk_spans(df, "doc_id", "text", chunk_size=8, overlap=2,
                       tokenizer=stub_bpe_token_count)
-    plan = bpe._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
+    assert report.counts(report.plan(bpe))["ArrowEvalPython"] == 1
     got_bpe = {r["doc_id"]: r for r in bpe.where(F.col("doc_id") == 2).collect()}
     # "tiny" = 1 whitespace token but ceil(4/4)=1 stub-BPE token too;
     # doc1: 30 words x 1 token == whitespace here, so counts agree —

@@ -9,7 +9,7 @@ import shutil
 import pytest
 from pyspark.errors import AnalysisException
 
-from typical_spark.sources.tables import read_bucketed, sub_target, write_bucketed
+from typical_spark.sources.tables import sub_target, write_bucketed
 from typical_spark.sources.transcripts import scaled_dataset
 
 
@@ -54,7 +54,7 @@ def test_write_bucketed_writes_one_file_per_bucket(spark):
             spark.range(0, 20000, numPartitions=4), "bk_files", ["id"],
             n_buckets=8, sort_cols=["id"],
         )
-        files = read_bucketed(spark, "bk_files").inputFiles()
+        files = spark.table("bk_files").inputFiles()
         # bucket files are named part-<task>-<uuid>_<bucket id>.c000...
         per_bucket = collections.Counter(
             re.search(r"_(\d{5})\.c\d{3}", os.path.basename(f)).group(1)

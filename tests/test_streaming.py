@@ -662,3 +662,41 @@ def test_compact_state_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch
     assert str(got[2]) == before[2]
     assert not os.path.exists(state + ".swap_old")
     assert not os.path.exists(state + ".swap_tmp")
+
+
+def test_stream_job_reads_integer_fields_of_any_width(spark, transcripts_pdf, tmp_path):
+    """One file of the input stores turn_idx as INT64 and another as
+    INT32: the stream job reads both and writes the row violations the
+    batch plan finds on a batch read. A turn_idx out of int range, in a
+    third (INT64) file, is a `coerce` row (and, once coerced to NULL, a
+    `not_null` one), not a failed query."""
+    import glob
+    from collections import Counter
+
+    from jobs.stream_validate import main
+
+    inp, out = tmp_path / "in", str(tmp_path / "out")
+    inp.mkdir()
+    pdf = transcripts_pdf.head(1000)
+    schema = spark.createDataFrame(pdf).schema
+    a, b = (spark.createDataFrame(p, schema) for p in (pdf.iloc[:500], pdf.iloc[500:]))
+    parts = {
+        "a.parquet": a.withColumn("turn_idx", F.col("turn_idx").cast("bigint")),
+        "b.parquet": b.withColumn("turn_idx", F.col("turn_idx").cast("int")),
+        "c.parquet": a.limit(1).withColumns(
+            {"conv_id": F.lit("c99999999"), "turn_idx": F.lit(1 << 40)}),
+    }
+    for name, df in parts.items():
+        df.coalesce(1).write.parquet(str(tmp_path / name))
+        os.rename(glob.glob(str(tmp_path / name / "part-*.parquet"))[0], str(inp / name))
+
+    assert main(["--input", str(inp), "--out", out, "--once"]) == 0
+
+    cols = ["conv_id", "turn_idx", "column", "check_id", "observed", "expected"]
+    got = Counter(map(tuple, spark.read.parquet(f"{out}/violations").select(*cols).collect()))
+    batch = spark.read.parquet(str(inp / "a.parquet"), str(inp / "b.parquet"))
+    plan = compile_table_spec(transcript_spec())
+    want = Counter(map(tuple, plan.violations(batch, with_message=False).select(*cols).collect()))
+    assert Counter({r: n for r, n in got.items() if r[1] != 1 << 40}) == want and want
+    assert sorted(r[3:5] for r in got if r[1] == 1 << 40) == [
+        ("coerce", str(1 << 40)), ("not_null", None)]

@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from typical_spark import report
 from typical_spark.functions.text_analysis import (
     doc_fingerprint,
     lang_id,
@@ -381,9 +382,7 @@ def test_ivf_uniform_fit_on_sharded_corpus(spark, tmp_path):
     assert scanned_biased > 2.0 * scanned_uniform
 
     # persist_path materialization: the probe is a PARTITION-PRUNED scan
-    plan = idx.query(q, k=10, nprobe=nprobe)._sc._jvm.PythonSQLUtils.explainString(
-        idx.query(q, k=10, nprobe=nprobe)._jdf.queryExecution(), "formatted"
-    )
+    plan = report.explain(idx.query(q, k=10, nprobe=nprobe))
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "cell_id" in pf[0]
 
@@ -1321,9 +1320,7 @@ def test_bloom_contamination_plan_keeps_corpus_unshuffled(spark, docs_df):
         docs_df, bench, "doc_id", "text", "bench_id", "bench_text",
         n_probes=3,
     )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = report.explain(out)
     semis = plan.count("LeftSemi")
     assert semis >= 3, plan
     assert plan.count("BroadcastHashJoin") >= 3, plan
@@ -1378,9 +1375,7 @@ def test_quantile_buckets_monotone_and_no_sort(spark):
     out = quantile_buckets(
         df, "score", group_col="lang", n_buckets=4, relative_error=0.0001
     )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = report.explain(out)
     assert "Window" not in plan and "Sort" not in plan, plan
     got = out.collect()
     assert next(r["bucket"] for r in got if r["doc_id"] == 601) is None

@@ -25,9 +25,9 @@ right default — conversations are bounded (≲10^4 turns), so per-group
 state is tiny. A group cannot be salted without breaking its order, but
 it can be chunked by order value: the skew-safe twin windows each
 CHUNK_TURNS-wide chunk of a group on its own, and only one boundary row
-per chunk (its min and max (order, ts)) meets the group again, so no
-window partition holds more than a chunk of a pathological 10^9-turn
-group.
+per chunk (its head row, carrying the chunk's last (order, ts)) meets
+the group again, so no window partition holds more than a chunk of a
+pathological 10^9-turn group.
 """
 
 from __future__ import annotations
@@ -151,21 +151,25 @@ def ordering_violations_skew_safe(
     ts_col: str | None = None,
 ) -> DataFrame:
     """Hot-group-proof twin of ordering_violations: the same rows, but
-    no window holds a whole group. Rows lag within their chunk (group,
-    order DIV CHUNK_TURNS); each chunk's first row, whose lag there is
-    NULL, takes the previous non-empty chunk's last (order, ts) from a
-    lag over one row per chunk. A NULL order value is its own chunk and
-    sorts first, as in the window. Of the rows tied on a chunk's minimum
-    (order, ts), the window lags one to the previous chunk and the rest
-    to their tie; the chunk lag does the same for all but one, whose NULL
-    lag emits nothing, and the chunk's head row stands in for that one."""
+    no window holds a whole group. One window over each chunk (group,
+    order DIV CHUNK_TURNS) lags every row, numbers the rows and reads
+    the chunk's last (order, ts); each chunk's head row (`row_number` 1,
+    whose lag is NULL) then takes the previous non-empty chunk's last
+    (order, ts) from a lag over the head rows. A NULL order value is its
+    own chunk and sorts first, as in the window. Rows tied on a chunk's
+    first (order, ts) pair as in the window: one of them (the head row)
+    with the previous chunk's last row, the rest with their tie."""
     gc = list(group_cols)
     keys = [order_col] + ([ts_col] if ts_col else [])
-    rows = df.select(*gc, *keys, F.expr(f"{path(order_col)} DIV {CHUNK_TURNS}").alias("_chunk"))
-    inner = rows.select(
-        *gc, *keys, *_lags(keys, Window.partitionBy(*gc, "_chunk").orderBy(*keys)))
-    ends = rows.groupBy(*gc, "_chunk").agg(
-        F.min(F.struct(*keys)).alias("_first"), F.max(F.struct(*keys)).alias("_last"))
+    ends = ["_last_o", "_last_ts"][:len(keys)]
+    in_chunk = Window.partitionBy(*gc, "_chunk").orderBy(*keys)
+    whole_chunk = in_chunk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rows = df.select(
+        *gc, *keys, F.expr(f"{path(order_col)} DIV {CHUNK_TURNS}").alias("_chunk"),
+    ).select(
+        "*", *_lags(keys, in_chunk), F.row_number().over(in_chunk).alias("_rn"),
+        *[F.last(c).over(whole_chunk).alias(e) for c, e in zip(keys, ends)])
     by_chunk = Window.partitionBy(*gc).orderBy("_chunk")
-    heads = ends.select(*gc, "_first.*", *_lags([f"_last.{c}" for c in keys], by_chunk))
+    heads = rows.where("_rn = 1").select(*gc, *keys, *_lags(ends, by_chunk))
+    inner = rows.select(*gc, *keys, *[PREV_ORDER, PREV_TS][:len(keys)])
     return pair_violations(inner.unionByName(heads), [*gc, order_col], order_col, ts_col)

@@ -101,6 +101,20 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def job_session(app_name: str) -> SparkSession:
+    """A job's session: the active one as it is (getOrCreate() would set
+    runtime confs on a running shared session for good), else a new one
+    in UTC (NTZ <-> epoch conversions must agree across driver, executors
+    and oracles) with ANSI off (a throughput knob; the engine is
+    ANSI-safe, tests/test_ansi_modes.py)."""
+    return SparkSession.getActiveSession() or (
+        SparkSession.builder.appName(app_name)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.ansi.enabled", "false")
+        .getOrCreate()
+    )
+
+
 @contextlib.contextmanager
 def count_jvm_calls(spark: SparkSession):
     """Count the py4j commands the driver sends while the block runs:

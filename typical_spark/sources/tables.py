@@ -162,7 +162,8 @@ def write_bucketed(
     operator from a shuffle into a local sort.
 
     Uses saveAsTable (bucket metadata lives in the session catalog/
-    warehouse — plain .parquet(path) cannot record bucketing), with the
+    warehouse — plain .parquet(path) cannot record bucketing, so read it
+    back with `spark.table`, not from its files), with the
     files at `location` when given, else in the warehouse. The input
     is first hash-partitioned by the bucket columns into n_buckets
     partitions, so each bucket is written by one task as one file: a
@@ -175,13 +176,6 @@ def write_bucketed(
     if location:
         w = w.option("path", location)
     w.format("parquet").saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a write_bucketed table WITH its bucket metadata (only the
-    catalog path preserves it; reading the files directly would lose the
-    co-location guarantee and reintroduce the shuffle)."""
-    return spark.table(table)
 
 
 def bucketed_table(
